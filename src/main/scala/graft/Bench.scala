@@ -142,7 +142,7 @@ object Bench {
     * quadratic, a shuffle that stopped coalescing) shows up as a superlinear
     * wall-clock jump rather than jitter.
     */
-  private val Sf1Queries = Seq("q_corpus_scrub", "q_simhash_neardup",
+  private[graft] val Sf1Queries = Seq("q_corpus_scrub", "q_simhash_neardup",
     "q_dup_clusters", "q_keep_best", "q_star_join", "q_minhash_incremental",
     "q_ngram_jaccard", "q_winnowing_pairs", "q_semantic_dedup",
     "q_substring_dedup", "q_substring_scrub", "q_lm_score",
@@ -250,11 +250,6 @@ object Bench {
     * a timeout or contention burst there costs one row, not the chunk.
     */
   private[graft] val Sf1HeavyIsolated = Seq("q_bootstrap_ci_b20", "q_graph_ppr")
-
-  /** Test-visible view of the sf1 tripwire set (BenchSpec pins that the
-    * isolated heavy rows are actual members).
-    */
-  private[graft] def Sf1QueriesForTest: Seq[String] = Sf1Queries
 
   /** Bench-only sf1 variants. The sf1 bootstrap row exists to catch
     * superlinearity in the ×B explode, not to tighten the CI — at B=40

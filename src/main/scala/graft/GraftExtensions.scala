@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{BooleanType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.{CosineSimilarity, PerformanceScoreExpr}
 
 /** SparkSessionExtensions entry point — the deployment-grade way to ship
@@ -20,18 +19,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction((
       FunctionIdentifier("performance_score"),
       new ExpressionInfo(classOf[PerformanceScoreExpr].getName, "performance_score"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 7, "performance_score takes 7 arguments")
-        val d = exprs.take(6).map(x => Cast(x, DoubleType): Expression)
-        PerformanceScoreExpr(d(0), d(1), d(2), d(3), d(4), d(5), Cast(exprs(6), BooleanType))
-      }))
+      PerformanceScoreExpr.sqlBuilder))
     e.injectFunction((
       FunctionIdentifier("cosine_similarity"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "cosine_similarity takes 2 arguments")
-        CosineSimilarity(exprs.head, exprs(1))
-      }))
+      CosineSimilarity.sqlBuilder))
     // whole-operator tier: the native as-of join's planner strategy
     // (AsOfJoinPlan → AsOfJoinExec); the AsOfJoinNative.backward wrapper
     // also self-registers via experimental.extraStrategies for sessions

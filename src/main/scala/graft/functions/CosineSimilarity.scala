@@ -92,10 +92,13 @@ object CosineSimilarity {
   def cosine(a: Column, b: Column): Column =
     Bridge.column(CosineSimilarity(Bridge.expression(a), Bridge.expression(b)))
 
+  /** SQL `cosine_similarity(a, b)`, for [[register]] and `GraftExtensions`. */
+  private[graft] val sqlBuilder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 2, "cosine_similarity takes 2 arguments")
+    CosineSimilarity(exprs.head, exprs(1))
+  }
+
   /** Make the expression SQL-callable as `cosine_similarity(a, b)`. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Bridge.registerTempFunction(spark, "cosine_similarity", { exprs =>
-      require(exprs.length == 2, "cosine_similarity takes 2 arguments")
-      CosineSimilarity(exprs.head, exprs(1))
-    })
+    Bridge.registerTempFunction(spark, "cosine_similarity", sqlBuilder)
 }

@@ -2,11 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType}
 
 /** Native Catalyst expression for the reference's 6-term performance score
   * with win bonus (`transformer/ranking/feature_factory.py:121-137`) —
@@ -79,23 +79,21 @@ object PerformanceScoreExpr {
     * cast to the expected types so callers can pass ints/decimals.
     */
   def score(kda: Column, dpm: Column, kp: Column, gpm: Column,
-      deathShare: Column, goldEff: Column, win: Column): Column = {
-    def d(c: Column) = Bridge.expression(c.cast("double"))
-    Bridge.column(PerformanceScoreExpr(
-      d(kda), d(dpm), d(kp), d(gpm), d(deathShare), d(goldEff),
-      Bridge.expression(win.cast("boolean"))))
-  }
+      deathShare: Column, goldEff: Column, win: Column): Column =
+    Bridge.column(sqlBuilder(
+      Seq(kda, dpm, kp, gpm, deathShare, goldEff, win).map(Bridge.expression)))
 
-  /** Make the expression SQL-callable as `performance_score(...)`. SQL
-    * numeric literals arrive as Decimal, so inputs are cast explicitly
+  /** The one builder behind [[score]], [[register]] and `GraftExtensions`.
+    * SQL numeric literals arrive as Decimal, so inputs are cast explicitly
     * (the expression itself is strict about its types).
     */
+  private[graft] val sqlBuilder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 7, "performance_score takes 7 arguments")
+    val d = exprs.take(6).map(e => Cast(e, DoubleType): Expression)
+    PerformanceScoreExpr(d(0), d(1), d(2), d(3), d(4), d(5), Cast(exprs(6), BooleanType))
+  }
+
+  /** Make the expression SQL-callable as `performance_score(...)`. */
   def register(spark: SparkSession): Unit =
-    Bridge.registerTempFunction(spark, "performance_score", { exprs =>
-      require(exprs.length == 7, "performance_score takes 7 arguments")
-      import org.apache.spark.sql.catalyst.expressions.Cast
-      import org.apache.spark.sql.types.BooleanType
-      val d = exprs.take(6).map(e => Cast(e, DoubleType): Expression)
-      PerformanceScoreExpr(d(0), d(1), d(2), d(3), d(4), d(5), Cast(exprs(6), BooleanType))
-    })
+    Bridge.registerTempFunction(spark, "performance_score", sqlBuilder)
 }

@@ -36,11 +36,6 @@ object MinHashDedup {
         .otherwise(array().cast("array<string>"))
     }
 
-  /** H-element MinHash signature over xxhash64 (production path). */
-  def signatureXx(shingleArr: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      h => array_min(transform(shingleArr, s => xxhash64(h, s))))
-
   /** Mersenne-prime modulus for the affine hash family. */
   val Mod: Long = 2147483647L
 

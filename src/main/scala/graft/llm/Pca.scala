@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   *    same representative of the ±v pair.
   *
   * Scale shape: the covariance pass is a ×d narrow explode (marginals)
-  * plus a Σxᵢxⱼ product pass with TWO interchangeable physical forms
-  * (see [[CovStrategy]]): the declarative ×d² explode (oracle-
+  * plus a Σxᵢxⱼ product pass with TWO interchangeable physical forms,
+  * chosen by the vector width: the declarative ×d² explode (oracle-
   * replayable; right at d ≤ 32 where d² per row ≈ a shingle explode)
   * and the per-partition Gram fold (a `mapPartitions` upper-triangle
   * long accumulator — ONE d·(d+1)/2 array per partition, emitted once
@@ -42,24 +42,19 @@ import org.apache.spark.sql.functions._
   */
 object Pca {
 
-  /** Physical strategy for the Σxᵢxⱼ covariance product pass. */
-  sealed trait CovStrategy
-  /** Declarative ×d² posexplode — Catalyst-visible, oracle-replayable. */
-  case object CovExplode extends CovStrategy
-  /** Per-partition Gram fold — `mapPartitions` accumulator; per-row cost
-    * is the same d²/2 multiplies but NOTHING data-sized is generated:
-    * the shuffle input is one cell array per partition.
-    */
-  case object CovGramFold extends CovStrategy
-  /** Dispatch by width: explode at d ≤ 32, Gram fold above. */
-  case object CovAuto extends CovStrategy
-
   /** Exact covariance cells (i, j, c) of the first `dims` entries of
     * `vecCol`, plus the row count — see object doc for the grid/widening
-    * contract. Rows with null or short vectors are excluded.
+    * contract. Rows with null or short vectors are excluded. The product
+    * pass is the explode at d ≤ 32 and the Gram fold above.
     */
-  def covCells(df: DataFrame, vecCol: String, dims: Int,
-               strategy: CovStrategy = CovAuto): DataFrame = {
+  def covCells(df: DataFrame, vecCol: String, dims: Int): DataFrame =
+    covCells(df, vecCol, dims, gramFold = dims > 32)
+
+  /** [[covCells]] with the product pass picked by the caller — each
+    * path is the other's test reference.
+    */
+  private[llm] def covCells(df: DataFrame, vecCol: String, dims: Int,
+                            gramFold: Boolean): DataFrame = {
     require(dims >= 2)
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val qv = slice(transform(col(vecCol),
@@ -72,13 +67,8 @@ object Pca {
       .select(posexplode(col("qv")).as(Seq("i", "xi")))
       .groupBy("i")
       .agg(sum(col("xi").cast(dec)).as("sx"), count(lit(1)).as("n"))
-    val useFold = strategy match {
-      case CovGramFold => true
-      case CovExplode  => false
-      case CovAuto     => dims > 32
-    }
     val prod =
-      if (useFold) gramFoldCells(base, dims)
+      if (gramFold) gramFoldCells(base, dims)
       else base
         .select(posexplode(col("qv")).as(Seq("i", "xi")), col("qv"))
         .select(col("i"), col("xi"), posexplode(col("qv")).as(Seq("j", "xj")))
@@ -157,18 +147,11 @@ object Pca {
     * the caller's tuning, equality is the contract).
     */
   def topComponent(df: DataFrame, vecCol: String, dims: Int,
-                   iters: Int, strategy: CovStrategy = CovAuto): DataFrame = {
-    require(iters >= 1)
-    val cov = covCells(df, vecCol, dims, strategy)
-      .select("i", "j", "c")
-      .localCheckpoint(false) // every sweep re-reads the d² cells
-    val (v, nrm) = power(cov, dims, iters)
-    signFixed(v, nrm)
-  }
+                   iters: Int): DataFrame =
+    topComponents(df, vecCol, dims, 1, iters).drop("comp")
 
   /** `iters` power sweeps on a (i, j, c) cell table from the uniform
-    * start — the raw (v, ‖w‖) pair BEFORE sign normalization, shared by
-    * [[topComponent]] and the deflation loop in [[topComponents]].
+    * start — the raw (v, ‖w‖) pair BEFORE sign normalization, per round of [[topComponents]].
     */
   private def power(cov: DataFrame, dims: Int,
       iters: Int): (DataFrame, DataFrame) = {
@@ -221,12 +204,13 @@ object Pca {
     * metadata. Returns (comp 1-based, dim, component, eigval).
     */
   def topComponents(df: DataFrame, vecCol: String, dims: Int, nComp: Int,
-      iters: Int, strategy: CovStrategy = CovAuto): DataFrame = {
+      iters: Int): DataFrame = {
     require(nComp >= 1 && nComp <= dims, s"nComp in [1, $dims], got $nComp")
+    require(iters >= 1)
     val grid = 1.0e12
-    var cells = covCells(df, vecCol, dims, strategy)
+    var cells = covCells(df, vecCol, dims)
       .select("i", "j", "c")
-      .localCheckpoint(false)
+      .localCheckpoint(false) // every sweep re-reads the d² cells
     var out: DataFrame = null
     for (comp <- 1 to nComp) {
       val (v, nrm) = power(cells, dims, iters)

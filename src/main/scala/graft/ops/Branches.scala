@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Overlap the independent branches of a composed query (guide §2.6
   * "Overlap independent jobs").
@@ -29,30 +30,33 @@ import org.apache.spark.sql.DataFrame
   * candidate-sized by construction, so the eager checkpoint materializes
   * rows the cross-join was about to materialize anyway.
   *
-  * Thread-safety: SparkSession supports concurrent actions; job
-  * descriptions/groups are thread-local so per-branch failures propagate
-  * through `Await.result` exactly like the sequential form (first failure
-  * rethrows; the session is untouched).
+  * Thread-safety: SparkSession supports concurrent actions; job groups
+  * are thread-local, so each branch runs in its own. The first failure
+  * cancels every branch's group (running tasks interrupted, later jobs
+  * refused) and interrupts the branch threads before it is rethrown.
   */
 object Branches {
 
   def materialize(branches: Seq[() => DataFrame]): Seq[DataFrame] = {
     if (branches.sizeIs <= 1) return branches.map(f => f().localCheckpoint(true))
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(branches.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val fs = branches.map(f => Future(f().localCheckpoint(true)))
-      Await.result(Future.sequence(fs), Duration.Inf)
-    } finally {
-      pool.shutdown(); ()
+    val sc = SparkSession.active.sparkContext
+    val groups = branches.indices.map(i => s"graft-branch-${java.util.UUID.randomUUID()}-$i")
+    val pool = Executors.newFixedThreadPool(branches.size)
+    val done = new ExecutorCompletionService[DataFrame](pool)
+    val results = branches.zip(groups).map { case (f, group) =>
+      done.submit { () =>
+        sc.setJobGroup(group, group, interruptOnCancel = true)
+        f().localCheckpoint(true)
+      }
     }
-  }
-
-  /** [[materialize]] for exactly two branches, preserving static types. */
-  def materialize2(a: () => DataFrame, b: () => DataFrame): (DataFrame, DataFrame) = {
-    val Seq(ra, rb) = materialize(Seq(a, b))
-    (ra, rb)
+    try {
+      branches.foreach(_ => done.take().get()) // completion order: fail fast
+      results.map(_.get())
+    } catch {
+      case e: Throwable =>
+        groups.foreach(sc.cancelJobGroupAndFutureJobs)
+        pool.shutdownNow()
+        throw (e match { case x: ExecutionException => x.getCause; case _ => e })
+    } finally pool.shutdown()
   }
 }

@@ -77,20 +77,27 @@ object GraphRank {
     val init = scaleTotal / n
     val teleport = (15L * init) / 100L
 
-    var ranks = nodes.withColumn("pr", lit(init))
+    val ranks0 = nodes.withColumn("pr", lit(init))
     val tele = nodes.withColumn("tele", lit(teleport))
+    iterateFixed(eDeg, ranks0, iterations)(step(eDeg, tele, _))
+  }
+
+  /** The fixed-iteration PageRank loop: lineage cut every other round,
+    * the result eagerly materialized, then the cached `edgeTable` released
+    * (else every call leaks it for the session lifetime; the checkpoint
+    * blocks are reclaimed by ContextCleaner once out of scope).
+    */
+  private def iterateFixed(edgeTable: DataFrame, ranks0: DataFrame,
+      iterations: Int)(step: DataFrame => DataFrame): DataFrame = {
+    var ranks = ranks0
     var i = 0
     while (i < iterations) {
-      ranks = step(eDeg, tele, ranks)
+      ranks = step(ranks)
       i += 1
       if (i % 2 == 0 && i < iterations) ranks = ranks.localCheckpoint(true)
     }
-    // eagerly materialize the result, then release the cached edge table —
-    // otherwise every invocation leaks eDeg for the session lifetime. The
-    // intermediate checkpoint blocks (nodes, even-round ranks) are reclaimed
-    // by ContextCleaner once their only references go out of scope here.
     val out = ranks.localCheckpoint(true)
-    eDeg.unpersist(false)
+    edgeTable.unpersist(false)
     out
   }
 
@@ -130,17 +137,9 @@ object GraphRank {
 
     val tele = nodes.select(col("node"),
       when(col("__seed"), lit(teleport)).otherwise(lit(0L)).as("tele"))
-    var ranks = nodes.select(col("node"),
+    val ranks0 = nodes.select(col("node"),
       when(col("__seed"), lit(init)).otherwise(lit(0L)).as("pr"))
-    var i = 0
-    while (i < iterations) {
-      ranks = step(eDeg, tele, ranks)
-      i += 1
-      if (i % 2 == 0 && i < iterations) ranks = ranks.localCheckpoint(true)
-    }
-    val out = ranks.localCheckpoint(true)
-    eDeg.unpersist(false)
-    out
+    iterateFixed(eDeg, ranks0, iterations)(step(eDeg, tele, _))
   }
 
   /** [[pageRankFixedPoint]] over WEIGHTED edges — (src, dst, weight) with
@@ -183,22 +182,15 @@ object GraphRank {
     val init = scaleTotal / n
     val teleport = (15L * init) / 100L
     val tele = nodes.withColumn("tele", lit(teleport))
-    var ranks = nodes.withColumn("pr", lit(init))
-    var i = 0
-    while (i < iterations) {
+    iterateFixed(eW, nodes.withColumn("pr", lit(init)), iterations) { ranks =>
       val contrib = eW.join(ranks.hint("SHUFFLE_HASH"), eW("src") === ranks("node"))
         .select(col("dst").as("node"), lit(0L).as("t"),
           expr("(pr * w) div wsum").as("c"))
-      ranks = contrib
+      contrib
         .union(tele.select(col("node"), col("tele").as("t"), lit(0L).as("c")))
         .groupBy("node")
         .agg((sum(col("t")) + expr("(85 * sum(c)) div 100")).as("pr"))
-      i += 1
-      if (i % 2 == 0 && i < iterations) ranks = ranks.localCheckpoint(true)
     }
-    val out = ranks.localCheckpoint(true)
-    eW.unpersist(false)
-    out
   }
 
   /** [[pageRankFixedPoint]] with delta-threshold early exit — the library

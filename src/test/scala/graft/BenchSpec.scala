@@ -107,6 +107,6 @@ class BenchSpec extends AnyFunSuite {
 
   test("Sf1HeavyIsolated rows are members of the sf1 tripwire set") {
     Bench.Sf1HeavyIsolated.foreach(n =>
-      assert(Bench.Sf1QueriesForTest.contains(n), n))
+      assert(Bench.Sf1Queries.contains(n), n))
   }
 }

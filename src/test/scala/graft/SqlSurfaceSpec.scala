@@ -1,55 +1,47 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.{CosineSimilarity, PerformanceScoreExpr}
 
 class SqlSurfaceSpec extends SparkSpec {
 
   test("SQL front-end: views + custom functions drive the same plans") {
-    Sql.registerViews(spark, "/root/testdata/sf0.001")
+    val rows = spark.range(0, 1000).select((col("id") % 3).as("k"), col("id").as("v"))
+    rows.createOrReplaceTempView("sql_surface_rows")
+    PerformanceScoreExpr.register(spark)
     // plain SQL over a view
-    val viaSql = spark.sql(
-      "SELECT l_returnflag, sum(l_quantity) AS s FROM lineitem GROUP BY 1")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val viaDf = Tables.lineitem(spark, "/root/testdata/sf0.001")
-      .groupBy("l_returnflag").agg(sum("l_quantity").as("s"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val viaSql = spark.sql("SELECT k, sum(v) AS s FROM sql_surface_rows GROUP BY 1")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaDf = rows.groupBy("k").agg(sum("v").as("s"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaSql === viaDf)
 
-    // native expression and udf both callable from SQL, and they agree
-    val r = spark.sql(
-      """SELECT
-        |  performance_score(2.0, 500.0, 0.5, 300.0, 0.2, 1.5, true) AS native,
-        |  performance_score_udf(2.0, 500.0, 0.5, 300.0, 0.2, 1.5, true) AS viaUdf
-        |""".stripMargin).head()
-    assert(r.getDouble(0) === r.getDouble(1))
-  }
-
-  test("udf tier: equals the native expression over real rows") {
-    val features = aram.PlayerFeatures.extract(aram.MatchFixtures.matches(spark, 20))
-    val cmp = features.select(
-      functions.UdfShowcase.score(col("kda"), col("damage_per_min"),
-        col("kill_participation"), col("gold_per_min"), col("death_share"),
-        col("gold_efficiency"), col("win")).as("u"),
-      functions.PerformanceScoreExpr.score(col("kda"), col("damage_per_min"),
-        col("kill_participation"), col("gold_per_min"), col("death_share"),
-        col("gold_efficiency"), col("win")).as("n"))
-    assert(cmp.filter(col("u") =!= col("n")).count() === 0)
+    // the native expression is callable from SQL with decimal literals,
+    // and agrees with its Column form
+    val native = spark.sql(
+      "SELECT performance_score(2.0, 500.0, 0.5, 300.0, 0.2, 1.5, true) AS s")
+      .head().getDouble(0)
+    val viaCol = spark.range(1).select(PerformanceScoreExpr.score(lit(2.0),
+      lit(500.0), lit(0.5), lit(300.0), lit(0.2), lit(1.5), lit(true)))
+      .head().getDouble(0)
+    assert(native === viaCol)
   }
 
   test("cosine_similarity is SQL-callable and equals the Column form bit-for-bit") {
-    Sql.registerViews(spark, "/root/testdata/sf0.001")
-    val viaSql = spark.sql(
-      """SELECT a.vec_id AS ia, b.vec_id AS ib,
-        |  cosine_similarity(a.embedding, b.embedding) AS c
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE a.vec_id < 5 AND b.vec_id < 5""".stripMargin)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001").filter(col("vec_id") < 5)
     val a = emb.select(col("vec_id").as("ia"), col("embedding").as("ea"))
     val viaCol = a.crossJoin(emb.select(col("vec_id").as("ib"), col("embedding").as("eb")))
       .filter(col("ia") < col("ib"))
       .select(col("ia"), col("ib"),
-        graft.functions.CosineSimilarity.cosine(col("ea"), col("eb")).as("c"))
+        CosineSimilarity.cosine(col("ea"), col("eb")).as("c"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    emb.createOrReplaceTempView("embeddings")
+    CosineSimilarity.register(spark)
+    val viaSql = spark.sql(
+      """SELECT a.vec_id AS ia, b.vec_id AS ib,
+        |  cosine_similarity(a.embedding, b.embedding) AS c
+        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        |WHERE a.vec_id < 5 AND b.vec_id < 5""".stripMargin)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(viaSql.nonEmpty && viaSql === viaCol)
   }

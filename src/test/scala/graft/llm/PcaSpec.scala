@@ -47,18 +47,18 @@ class PcaSpec extends SparkSpec {
     val rows = (1 to 300).map(_ =>
       Tuple1(Seq.fill(8)(rng.nextDouble() * 2 - 1)))
     val df = rows.toDF("v").repartition(7)
-    def cells(s: Pca.CovStrategy) = Pca.covCells(df, "v", dims = 8, s)
+    def cells(gramFold: Boolean) = Pca.covCells(df, "v", dims = 8, gramFold)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         java.lang.Double.doubleToLongBits(r.getDouble(3))))
       .sortBy(t => (t._1, t._2)).toSeq
-    val explode = cells(Pca.CovExplode)
-    val fold = cells(Pca.CovGramFold)
+    val explode = cells(gramFold = false)
+    val fold = cells(gramFold = true)
     assert(explode.size === 64 && explode === fold)
   }
 
   test("topComponent at d=64 dispatches to the fold and stays well-formed") {
-    // CovAuto must route d=64 through the Gram fold (no ×d² row explode);
+    // d=64 must route through the Gram fold (no ×d² row explode);
     // variance is planted on dim 3 so the component is checkable
     val rng = new scala.util.Random(59)
     val rows = (1 to 400).map { _ =>
@@ -73,14 +73,18 @@ class PcaSpec extends SparkSpec {
     assert(comp(3L) > 0.99, s"dim3 component ${comp(3L)}")
     val norm = math.sqrt(comp.values.map(v => v * v).sum)
     assert(math.abs(norm - 1.0) < 1e-6)
-    // and the fold result equals the explode result at this width too
-    val viaExplode = Pca.topComponent(df, "v", 64, 3, Pca.CovExplode)
-      .collect().map(r => r.getLong(0) ->
-        java.lang.Double.doubleToLongBits(r.getDouble(1))).toMap
-    val viaFold = comp.map { case (k, v) =>
-      k -> java.lang.Double.doubleToLongBits(v)
-    }
-    assert(viaExplode === viaFold)
+    // the width-chosen path skips the ×d² product explode, and its cells
+    // equal the explode path's bit for bit at this width too (the power
+    // sweeps are a fixed function of them)
+    val auto = Pca.covCells(df, "v", 64)
+    val explode = Pca.covCells(df, "v", 64, gramFold = false)
+    def generates(c: org.apache.spark.sql.DataFrame) =
+      "Generate".r.findAllIn(c.queryExecution.executedPlan.toString).size
+    assert(generates(auto) < generates(explode))
+    def bits(c: org.apache.spark.sql.DataFrame) = c.collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
+    assert(bits(auto) === bits(explode))
   }
 
   test("topComponents: deflation recovers the second planted axis") {

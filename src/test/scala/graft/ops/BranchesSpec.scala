@@ -1,13 +1,19 @@
 package graft.ops
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import graft.SparkSpec
 
 /** Branches.materialize — the §2.6 branch-overlap helper the composed
   * ledger queries (graph/classifier pipelines) thread their independent
   * sub-analyses through. The contract under test: results are EXACTLY the
   * per-branch plans' results (the helper only adds concurrency + an eager
-  * lineage cut), order is preserved, and a failing branch propagates.
+  * lineage cut), order is preserved, and a failing branch propagates
+  * and cancels its siblings.
   */
 class BranchesSpec extends SparkSpec {
 
@@ -52,6 +58,49 @@ class BranchesSpec extends SparkSpec {
         () => df.select(expr("assert_true(id < 5)")).localCheckpoint(true)))
     }
     assert(ex != null)
+  }
+
+  test("a failing branch cancels a sleeping sibling's job and rethrows promptly") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val sleeperJobs = ConcurrentHashMap.newKeySet[Int]()
+    val sleeperStarted = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("branches.spec.role") == "sleeper") {
+          sleeperJobs.add(e.jobId)
+          sleeperStarted.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val sleepMs = 120000L
+      val t0 = System.nanoTime()
+      val ex = intercept[Exception] {
+        Branches.materialize(Seq(
+          () => {
+            sc.setLocalProperty("branches.spec.role", "sleeper")
+            spark.range(0, 1, 1, 1).map { x => Thread.sleep(sleepMs); x }.toDF("v")
+          },
+          () => {
+            // fail only once the sleeper's job is running
+            assert(sleeperStarted.await(60, TimeUnit.SECONDS))
+            spark.range(0, 10).select(expr("assert_true(id < 5)"))
+          }))
+      }
+      val elapsedMs = (System.nanoTime() - t0) / 1000000L
+      assert(ex.getMessage.contains("is not true"), ex.getMessage)
+      assert(elapsedMs < sleepMs / 2, s"rethrown after $elapsedMs ms")
+      assert(!sleeperJobs.isEmpty)
+      eventually(timeout(Span(30, Seconds))) {
+        val active = sc.statusTracker.getActiveJobIds().toSet
+        assert(sleeperJobs.asScala.forall(id => !active.contains(id)),
+          s"sleeping branch still has active jobs: ${sleeperJobs.asScala}")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("empty and single-branch inputs") {
