@@ -13,6 +13,24 @@ import org.apache.spark.sql.SparkSession
   * instead of the 200 default.
   */
 object GraftSession {
+
+  /** Size of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The engine reruns
+    * the same plans pass after pass, and a pass needs more classes than the
+    * default holds. The cache is an LRU, so a repeated working set larger
+    * than it misses on every lookup, and every pass compiled its classes
+    * again with Janino (about 20 ms each, on the driver and on the executor
+    * threads). Measured on a 4-core box:
+    *  - a timed pass of the benchmark compiled 115 classes (`graph_iterative`)
+    *    and 118 (`aram_etl`) at the default size, and 2 and 0 at this one;
+    *  - `runMain graft.Profile` at sf0.01 recompiled up to 202 classes in one
+    *    query's timed run (`q_retrieval_pipeline`) and 2,494 over all 362;
+    *    at this size 594, none above 76;
+    *  - `peak_rss_mb` rose 2.5% on `graph_iterative` (900 to 923 MB) and 1.1%
+    *    on `aram_etl` (943 to 954 MB).
+    */
+  val CodegenCacheEntries = 1000
+
   def builder(appName: String = "graft", master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder =
     SparkSession
       .builder()
@@ -45,6 +63,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Static conf: it sizes the JVM-wide cache when the first session
+      // generates code.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   def get(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()

@@ -1,12 +1,15 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Stage-level profiling main (dev tool, round 15): runs the named queries
   * once (warm) + once timed against a SF dir and prints, per stage, the
   * wall-clock, task time, shuffle read/write bytes and record counts — the
   * guide §1 "where is the time actually going" loop without the Spark UI
-  * (disabled in this sandbox). Usage:
+  * (disabled in this sandbox). The header line also counts the classes
+  * Janino compiled during the timed run (`compiled=`), which reads 0 when
+  * the warm run's generated code was reused. Usage:
   *   runMain graft.Profile <sfDir> <query> [query ...]
   */
 object Profile {
@@ -43,11 +46,13 @@ object Profile {
         Thread.sleep(200)
         stages.synchronized(stages.clear())
         spark.sparkContext.setJobDescription(name)
+        val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val n = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
         val sec = (System.nanoTime() - t0) / 1e9
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
         Thread.sleep(300) // let stage-completed events drain
-        println(f"\n===== $name%s  total=$sec%.2fs rows=$n%d =====")
+        println(f"\n===== $name%s  total=$sec%.2fs compiled=$compiled%d rows=$n%d =====")
         println("stageId  wall_ms  task_ms  shufR_MB  shufW_MB  shufR_rec  tasks  name")
         stages.synchronized {
           stages.sortBy(-_._3).take(25).foreach {

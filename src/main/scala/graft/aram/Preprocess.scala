@@ -231,7 +231,13 @@ object Preprocess {
     // table are scale-proportional (billions of match ids at 100 TB), and a
     // forced hint would driver-collect them. AQE still picks broadcast-hash
     // when the key side is genuinely small.
-    val keys = df.select(col(groupCol)).distinct().cache()
+    // The keys are pinned by a lazy local checkpoint, not `cache()`, so no
+    // CacheManager entry outlives the call. The explicit partition count
+    // stops AQE coalescing the key table, which would change the memberships
+    // of the seeded split: it samples each partition on its own.
+    val partitions = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val keys = df.select(col(groupCol)).repartition(partitions, col(groupCol)).distinct()
+      .localCheckpoint(eager = false)
     val Array(trainKeys, testKeys) =
       keys.randomSplit(Array(1.0 - testFraction, testFraction), seed)
     (df.join(trainKeys, Seq(groupCol), "left_semi"),

@@ -115,6 +115,24 @@ class PreprocessSpec extends SparkSpec {
     assert(train.count() + test.count() === features.count())
   }
 
+  test("J2 group split leaves no cache entry; memberships match a cached key table") {
+    val input = PlayerFeatures.extract(MatchFixtures.matches(spark, 80))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("match_id").distinct().collect().map(_.getString(0)).toSet
+    val (train, test) = Preprocess.splitByGroup(input, "match_id", 0.2, seed = 42L)
+    val (trainIds, testIds) = (ids(train), ids(test))
+    val keyTable = input.select("match_id").distinct()
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    assert(spark.sharedState.cacheManager.lookupCachedData(keyTable).isEmpty)
+    // the split over a cached key table draws the same memberships
+    val cached = keyTable.cache()
+    try {
+      val Array(refTrain, refTest) = cached.randomSplit(Array(0.8, 0.2), 42L)
+      assert(trainIds === ids(refTrain))
+      assert(testIds === ids(refTest))
+    } finally cached.unpersist(blocking = true)
+  }
+
   test("hash folds: deterministic, complete, k classes") {
     val folded = Preprocess.hashFold(features, "match_id", 5)
     val folds = folded.select("fold").distinct().collect().map(_.getLong(0)).sorted
