@@ -137,120 +137,6 @@ object Bench {
     }.find(_.nonEmpty).getOrElse(Map.empty)
   }
 
-  /** Queries timed again at 10× the bench SF (the "sf1" section): the
-    * most expensive pipelines, where a scale regression (a plan that went
-    * quadratic, a shuffle that stopped coalescing) shows up as a superlinear
-    * wall-clock jump rather than jitter.
-    */
-  private[graft] val Sf1Queries = Seq("q_corpus_scrub", "q_simhash_neardup",
-    "q_dup_clusters", "q_keep_best", "q_star_join", "q_minhash_incremental",
-    "q_ngram_jaccard", "q_winnowing_pairs", "q_semantic_dedup",
-    "q_substring_dedup", "q_substring_scrub", "q_lm_score",
-    "q_graph_triangles", "q_graph_pagerank", "q_quantile_bins",
-    "q_similarity_join", "q_bm25_scores", "q_group_quantiles",
-    "q_rrf_fusion", "q_basket_affinity", "q_kmeans_step",
-    "q_group_spearman", "q_cusum_changepoint", "q_cohort_retention",
-    "q_funnel_conversion", "q_attribution_channels", "q_graph_ppr",
-    "q_containment_pairs", "q_editdist_verify", "q_bpe_merges",
-    "q_s6_model_roundtrip", "q_minhash_neardup",
-    // round 7: rolling reach (×w explode must stay linear), pointer-jump
-    // hierarchy (log-depth rounds), the native as-of merge, and the
-    // JSONL parse gate (per-line map throughput; its 10× fixture builds
-    // once on first run)
-    "q_rolling_distinct", "q_hierarchy_resolve", "q_asof_join_native",
-    "q_jsonl_ingest", "q_hierarchy_rollup", "q_stream_jsonl_ingest",
-    // round 8: sorted-neighborhood pair generation (Θ(n·w) contract —
-    // superlinear growth here means the block join broke) and the
-    // Poisson bootstrap (×B explode must stay linear in rows)
-    "q_snm_pairs", "q_bootstrap_ci_b20",
-    // round 10: the composed corpus pipeline (every stage's scale
-    // contract at once — contains the full scrub, so expect ~scrub+ε),
-    // cluster-keyed split (components + narrow assignment), and the PQ /
-    // IVF-PQ tiers (encode must stay a narrow linear pass; ADC per-
-    // candidate cost is m lookups, so superlinearity here means the
-    // broadcast distance table or the probe pruning broke)
-    "q_corpus_pipeline", "q_cluster_split", "q_embed_pq_topk",
-    "q_embed_ivfpq_topk",
-    // round 10 (cont.): pinned BFS (per-round edge join must stay linear
-    // in |edges|) and the compaction planner (PrefixScan two-pass scan —
-    // superlinearity here means the range exchange or the offset
-    // broadcast broke)
-    "q_bfs_hops", "q_compaction_plan",
-    // round 11: HITS (2 joins + 2 aggs per sweep over the 10× bipartite
-    // graph), ACF (the Θ(n·maxLag) banded self-join must not go n²),
-    // TextRank (adjacent-pair gen + the PageRank loop over the 10× word
-    // graph), and the silhouette scan (narrow O(n·k) fold — any shuffle
-    // appearing here is a regression)
-    "q_graph_hits", "q_acf", "q_textrank", "q_silhouette",
-    // round 11 wave 3: isotonic (corpus collapse must stay the only
-    // data-sized stage — the Θ(m²) block algebra is constant in SF) and
-    // the Jaro-Winkler verify (SNM Θ(n·w) pair volume; superlinearity
-    // means the blocking broke)
-    "q_isotonic_fit", "q_jaro_winkler",
-    // round 11 wave 4: robust means (distinct-value collapse — the
-    // window partition is distinct cents, not rows) and the temperature
-    // scan (ONE fact collapse; the ×|grid| libm stage must stay
-    // metadata-sized)
-    "q_robust_mean", "q_temp_scaling",
-    // round 11 wave 6: negative sampling (Θ(k·edges) probes through the
-    // bucketized interval join — superlinearity means the bucket
-    // replication or the probe side broke) and Heaps (per-doc windows +
-    // one vocab collapse; must track the token count linearly)
-    "q_negative_samples", "q_heaps_law",
-    // round 12: the composed experimentation ledger (one per-user
-    // collapse + the |tests|-cell sweep must stay the only data-sized
-    // stages), PCA (the ×d² covariance explode must stay linear in rows
-    // — superlinearity means the cell aggregate broke), and KMV (one
-    // distinct shuffle + WindowGroupLimit bottom-k)
-    "q_experiment_pipeline", "q_pca_power", "q_kmv_distinct",
-    // round 12 wave 2: Damerau verify (per-pair Θ(200²) DP — superlinear
-    // growth means the MinHash candidate volume broke, not the DP), the
-    // median bootstrap (×B explode + per-replica distinct-value windows
-    // must track rows linearly), and Naive Bayes apply (tf × |labels|
-    // join against the vocab-sized model — superlinearity means the
-    // broadcast or the term join shuffled wrong)
-    "q_damerau_verify", "q_bootstrap_median_ci", "q_nb_classify",
-    // round 12 wave 3: journey surprise (per-user lead window + the
-    // |types|²-broadcast score join — superlinearity means the model
-    // join shuffled) and the RLE dividend (stacked lag window over
-    // bucket-sized partitions)
-    "q_journey_surprise", "q_rle_dividend",
-    // round 12 wave 4: k-sample AD (the k×distinct-values grid + per-
-    // sample windows must track distinct cents, not rows) and term
-    // burstiness (the (doc, term) tf shuffle — the tf-idf scale class)
-    "q_anderson_darling", "q_term_burstiness",
-    // round 12 wave 5: label noise re-runs the NB fit+apply over the
-    // whole corpus (the heaviest composed text pipeline of the wave —
-    // superlinearity means the model join or the argmax window broke)
-    "q_label_noise",
-    // round 12 wave 7: the composed classifier ledger (three corpus
-    // fits + ranking stages — the heaviest text composition; tracks the
-    // whole eval family's scale at once)
-    "q_classifier_pipeline",
-    // round 13: the composed drift-monitoring ledger (profile gate +
-    // KS/PSI sweeps + BY-FDR gate + EB rates over ONE shared collapse —
-    // superlinearity means a sweep stage started shuffling corpus mass)
-    "q_drift_pipeline",
-    // round 13 wave 2: Markov removal-effect attribution (ONE per-user
-    // lead window + |states|² counts; the 24 sweeps are metadata — any
-    // superlinearity means the journey window or count stage broke) and
-    // BLEU pairs (per-(pair, n, gram) exact counts over adjacent docs —
-    // the tf-idf shuffle class ×2 sides)
-    "q_markov_attribution", "q_bleu_pairs",
-    // round 14: the composed retrieval ledger (one corpus tokenization +
-    // candidate-bounded fusion/metrics/F1 — superlinearity means a
-    // candidate stage started moving corpus mass), Jonckheere–Terpstra
-    // (donor/target value-grid windows — the ksDrift scale class ×k),
-    // Wasserstein drift (the ksDrift grid + lead), and the per-term χ²
-    // screen (document-presence collapse — the tf-idf shuffle class)
-    "q_retrieval_pipeline", "q_jonckheere", "q_wasserstein_drift",
-    "q_term_chi2")
-
-  /** sf1 rows heavy enough to own a single-row child JVM (round 14):
-    * a timeout or contention burst there costs one row, not the chunk.
-    */
-  private[graft] val Sf1HeavyIsolated = Seq("q_bootstrap_ci_b20", "q_graph_ppr")
-
   /** Bench-only sf1 variants. The sf1 bootstrap row exists to catch
     * superlinearity in the ×B explode, not to tighten the CI — at B=40
     * it was ~25% of the whole sf1 section (88-96 s of md5 derivations),
@@ -259,7 +145,7 @@ object Bench {
     * the oracle-verified B=40 form remains `q_bootstrap_ci` at sf0.01
     * and in the sf0.1 section.
     */
-  private val Sf1Overrides: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] val Sf1Overrides: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_bootstrap_ci_b20" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .filter(col("event_id").isNotNull && col("value").isNotNull)
@@ -268,8 +154,22 @@ object Bench {
     })
   )
 
-  private def sf1Query(name: String): Option[(SparkSession, String) => DataFrame] =
-    Sf1Overrides.get(name).orElse(SparkEntry.queries.get(name))
+  /** Queries timed again at 10× the bench SF (the "sf1" section): the
+    * most expensive pipelines, where a scale regression (a plan that went
+    * quadratic, a shuffle that stopped coalescing) shows up as a superlinear
+    * wall-clock jump rather than jitter. Each registry record carries its
+    * own `sf1` flag and, where one applies, the scale contract it guards.
+    */
+  private[graft] val Sf1Queries: Seq[String] =
+    SparkEntry.specs.filter(_.sf1).map(_.name) ++ Sf1Overrides.keys
+
+  /** sf1 rows heavy enough to own a single-row child JVM (round 14):
+    * a timeout or contention burst there costs one row, not the chunk.
+    */
+  private[graft] val Sf1HeavyIsolated = Seq("q_bootstrap_ci_b20", "q_graph_ppr")
+
+  private def sf1Query(name: String): (SparkSession, String) => DataFrame =
+    Sf1Overrides.getOrElse(name, SparkEntry.queries(name))
 
   /** Materialize a 10×-scaled copy of `sfDir` into `outDir`.
     *
@@ -696,7 +596,7 @@ object Bench {
       prepareScaled(spark, sfDir, scaledDir)
       warmTables(spark, scaledDir) // untimed: first row must not absorb first-touch
       val entries = Sf1Queries.filter(n => only.isEmpty || only(n))
-        .flatMap(n => sf1Query(n).map(n -> _))
+        .map(n => n -> sf1Query(n))
       val res = timeQueries(spark, scaledDir, entries, runs = 1,
         keyPrefix = "sf1:", prev = prev, retryFlagged = true, progress = true)
       println(s"""{"metric":"batch","queries":${jsonQueries(res)},"sf":"$sfDir","spin_max_ms":${math.round(spinMaxMs * 10) / 10.0}}""")
@@ -1012,7 +912,7 @@ object Bench {
           warmTables(spark, scaledDir)
           timeQueries(spark, scaledDir,
             Sf1Queries.filter(n => only.isEmpty || only(n))
-              .flatMap(n => sf1Query(n).map(n -> _)), runs = 1,
+              .map(n => n -> sf1Query(n)), runs = 1,
             keyPrefix = "sf1:", prev = prev, retryFlagged = true)
         } else {
           val runs = if (childArgs.contains("--runs=1")) 1 else 2

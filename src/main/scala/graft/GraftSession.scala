@@ -39,25 +39,16 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // AQE coalescing stays at stock settings. Round 16 A/B'd
-      // minPartitionSize=128k (motivated by CPU-dense byte-light
-      // pair-verify stages coalescing to 1-4 tasks, e.g.
-      // q_similarity_join's verify stage at 918 ms on 4 tasks): the
-      // 12-row regression-set sweep measured the flip +5.1 s vs stock
-      // (39.75 vs 34.67 subtotal) — the extra scheduling/launch overhead
-      // on EVERY small exchange outweighed the isolated stage wins — so
-      // the default stands (env override still honored for experiments).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION_SIZE", "1m"))
+      // Spark's own 1MB default (an A/B of 128k measured +5.1 s over a
+      // 12-query regression set). Set explicitly because perfbench records
+      // it and fails on a bytes conf that is left unset.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Round 16 (guide §3.1/§9): allow shuffled-hash where its size
-      // conditions hold — the sort-merge default re-sorts both sides of
-      // every equi-join; the engine's joins are id/gram-keyed with
-      // bounded build sides (catalog/candidate/node-sized). Full-suite
-      // oracle gate re-run under this flag (361/361). Env kill:
-      // SPARK_GRAFT_PREFER_SMJ=1 restores sort-merge preference.
-      .config("spark.sql.join.preferSortMergeJoin",
-        if (sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1")) "true" else "false")
+      // Allow shuffled-hash joins where their size conditions hold: the
+      // sort-merge default re-sorts both sides of every equi-join, and the
+      // engine's joins are id/gram-keyed with bounded build sides
+      // (catalog/candidate/node-sized). Oracle 361/361 under this setting.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.session.timeZone", "UTC")

@@ -59,7 +59,7 @@ object Partitioning {
     * tolerance-based for exactly this reason.
     */
   def spread(df: DataFrame): DataFrame = {
-    if (df.isStreaming || sys.props.get("graft.spread").contains("0")) return df
+    if (df.isStreaming) return df
     import org.apache.spark.sql.catalyst.plans.logical._
     val exchangeSuspect = df.queryExecution.analyzed.exists {
       case _: Join | _: Aggregate | _: Window | _: Sort | _: Distinct |

@@ -19,7 +19,6 @@ import graft.aram.Labeling
   * taken, extendedprice→damage/gold; win ⇔ order fully shipped ('F').
   */
 object FlagshipQuery {
-  type Q = (SparkSession, String) => DataFrame
 
   def flagship(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
@@ -47,10 +46,9 @@ object FlagshipQuery {
         qround(col("performance_score"), 4).as("performance_score"), col("rank_in_match"))
   }
 
-  val queries: Map[String, Q] = Map("q_flagship_rank" -> (flagship(_, _)))
-
-  val oracle: Map[String, String] = Map(
-    "q_flagship_rank" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_flagship_rank", flagship(_, _),
+    oracle = Some(
       """WITH feat AS (
         |  SELECT l.l_orderkey, l.l_linenumber,
         |    (l.l_quantity + l.l_tax * 100) / greatest(l.l_discount * 100, 1.0) AS kda,
@@ -71,6 +69,6 @@ object FlagshipQuery {
         |)
         |SELECT l_orderkey, l_linenumber, floor((performance_score) * 10000.0 + 0.5) / 10000.0 AS performance_score,
         |  CAST(rank() OVER (PARTITION BY l_orderkey ORDER BY performance_score DESC) AS BIGINT) AS rank_in_match
-        |FROM scored""".stripMargin
+        |FROM scored""".stripMargin))
   )
 }

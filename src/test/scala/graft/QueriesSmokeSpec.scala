@@ -10,25 +10,24 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracle keys are a subset of query keys") {
-    val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(extra.isEmpty, s"oracles without queries: $extra")
-  }
-
   test("rows-only queries are exactly the documented whitelist") {
     // every other query MUST carry a DuckDB oracle — this guards against
-    // accidentally dropping one during a refactor
-    // round 5: the HLL sketch joined the oracle set via the within-rsd
-    // flag scheme (Spark self-checks its sketch against its own exact
-    // count; the oracle pins the exact counts + a literal true).
-    // round 7: q_image_neardup left this list — its banded pairing stage
-    // is now oracled over the persisted dHash parquet; the single
-    // remaining rows-only entry decodes real PNG bytes through
-    // javax.imageio, which no SQL oracle engine can replay; its
-    // determinism is pinned by MultimodalSpec instead.
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly === Set("q_multimodal_decode"),
+    // accidentally dropping one during a refactor. The one rows-only
+    // query decodes real PNG bytes through javax.imageio, which no SQL
+    // oracle engine can replay; its determinism is pinned by
+    // MultimodalSpec instead.
+    val rowsOnly = SparkEntry.specs.filter(_.oracle.isEmpty).map(_.name)
+    assert(rowsOnly === Seq("q_multimodal_decode"),
       s"unexpected rows-only queries: $rowsOnly")
+  }
+
+  test("spec names are unique and no sf1 spec shadows a bench override") {
+    // queries/oracleSql are Maps built from the specs: a duplicate name
+    // would silently keep only one of the two records
+    val dups = SparkEntry.specs.groupBy(_.name).collect { case (n, ss) if ss.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate spec names: $dups")
+    val shadowed = SparkEntry.specs.filter(_.sf1).map(_.name).filter(Bench.Sf1Overrides.contains)
+    assert(shadowed.isEmpty, s"sf1 specs named like a Bench.Sf1Overrides key: $shadowed")
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
