@@ -1,7 +1,13 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** Benchmark main (driver contract): runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query wall-clock.
@@ -20,25 +26,35 @@ import org.apache.spark.sql.functions._
   * Resilience model (round 12): batches run sequentially, HEAVY-FIRST
   * (unrecorded queries, then heaviest-by-previous-timing; the sf1 child
   * second), so budget exhaustion drops the sub-second tail instead of
-  * the signal. Children print one JSON progress line per finished
-  * query; a timed-out or crashed child's finished rows are HARVESTED
-  * from its output file, and only the unfinished names go to one
-  * follow-up child (never a same-size retry of a timeout — under
-  * contention it just times out again; in-process fallback only after
-  * a crash). After every batch the artifact (BENCH_LOCAL.json + a
-  * compact summary line on stdout) is rewritten over results-so-far,
-  * so a run killed at ANY point still leaves a parseable snapshot.
-  * Child timeouts are weighted slices of the remaining wall budget
+  * the signal. A child prints one JSON progress line per finished query
+  * and nothing else — that is its whole output record. A timed-out or
+  * crashed child's finished rows are HARVESTED from its output file, and
+  * only the unfinished names go to one follow-up child (never a
+  * same-size retry of a timeout — under contention it just times out
+  * again; in-process fallback only after a crash). After every batch a
+  * compact summary line over results-so-far is printed, so a run killed
+  * at ANY point still leaves a parseable snapshot. Child timeouts are
+  * weighted slices of the remaining wall budget
   * (SPARK_GRAFT_BENCH_BUDGET_MIN, default 40; the sf1 child weighs 4×
   * an sf0.1 batch).
   *
   * Regression tracking: the line also carries `vs_prev` — this run's
-  * per-query time divided by the same query's time in the latest
-  * baseline (BENCH_LOCAL.json, else the newest driver BENCH_r{N}.json at
-  * the same SF) — and `regressed`, the queries that got >1.5× slower
-  * AND >0.25 s absolutely. A query that lands past that gate is re-timed
-  * on the spot (cache cleared, GC nudged, min-of-2 retry, best kept), so
-  * a flag that survives IS a reproduced regression, not run-order noise.
+  * per-query time divided by the same query's time in the committed
+  * floor (BENCH_LOCAL.json, when it was measured at the same SF) — and
+  * `regressed`, the queries that got >1.5× slower AND >0.25 s
+  * absolutely. A query that lands past that gate is re-timed on the
+  * spot (cache cleared, GC nudged, min-of-2 retry, best kept), so a flag
+  * that survives IS a reproduced regression, not run-order noise. A
+  * query that throws gets no time: it is listed under
+  * `"failed":{name: "Class: msg"}` and is not re-queued.
+  *
+  * Floor rule: BENCH_LOCAL.json is the committed floor, the full line of
+  * the last clean full-suite run. Only the FINAL emit of a full-suite
+  * run replaces it, and only when every row landed, no query failed, no
+  * child timed out, runs were not degraded and the run's SF equals the
+  * floor's ([[floorBlockers]]); the line says `"floor_written"`. Notes
+  * about a floor (adjudicated rows, provenance) are written into that
+  * file by hand and live until a clean run replaces it.
   *
   * Contention gating (round 13): every timed query also records ITS OWN
   * calibration-spin sample (the wall of a fixed single-thread loop,
@@ -87,54 +103,118 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  /** Per-query seconds from the previous run at the same SF: prefer the
-    * repo-local BENCH_LOCAL.json (written by the previous Bench run —
-    * always the complete line), falling back to the newest driver
-    * BENCH_r{N}.json. The driver file stores only the last 2000 chars of
-    * our output, so once the suite outgrew that window the embedded line
-    * lost its head — the local file exists precisely so regression
-    * tracking never depends on the driver's tail budget.
+  /** The one JSON codec for every line this harness reads or writes. */
+  private[graft] val Json: ObjectMapper =
+    new ObjectMapper().registerModule(DefaultScalaModule)
+
+  private[graft] def line(fields: Seq[(String, Any)]): String =
+    Json.writeValueAsString(ListMap(fields: _*))
+
+  private def r1(x: Double): Double = math.round(x * 10) / 10.0
+  private def r3(x: Double): Double = math.round(x * 1000) / 1000.0
+
+  /** The committed floor, relative to the working directory (the repo
+    * root under `sbt run`). */
+  private[graft] val FloorFile = new java.io.File("BENCH_LOCAL.json")
+
+  /** Where the sf1 section's 10×-scaled copy of the SF dir lives. */
+  private val ScaledDir = "/tmp/graft_bench_sf1"
+
+  /** The committed floor as a run reads it. `queries` holds per-query
+    * seconds only when the floor was measured at this run's SF (it is
+    * empty for a missing or unreadable file and for another SF);
+    * `spinStartMs` is the floor's own quiet start spin, a machine
+    * reference kept whatever the SF; `fields` are the line's top-level
+    * keys.
     */
-  /** The committed floor's OWN quiet start-spin (cal_spin_start_ms from
-    * the same line [[prevBench]] reads) — the contended-vs-regressed
-    * gate's fallback reference for runs that begin already contended.
+  private[graft] final case class Floor(sf: Option[String],
+      queries: Map[String, Double], spinStartMs: Option[Double],
+      fields: Set[String])
+
+  private[graft] def readFloor(file: java.io.File, sfDir: String): Floor =
+    try {
+      val node = Json.readTree(file)
+      def field(k: String) = Option(node.get(k))
+      val sf = field("sf").map(_.asText)
+      val queries =
+        if (!sf.contains(sfDir)) Map.empty[String, Double]
+        else field("queries").toSeq.flatMap(_.properties.asScala)
+          .map(e => e.getKey -> e.getValue.asDouble).toMap
+      Floor(sf, queries, field("cal_spin_start_ms").map(_.asDouble),
+        node.properties.asScala.map(_.getKey).toSet)
+    } catch { case _: java.io.IOException => Floor(None, Map.empty, None, Set.empty) }
+
+  /** Why a finished full-suite run may NOT replace the committed floor;
+    * empty means it may. `measured` are the keys that got a time, and
+    * the floor must hold every registered row, sf1 section included.
     */
-  private[graft] def prevSpinStart(repoDir: String): Option[Double] = {
-    val local = new java.io.File(repoDir, "BENCH_LOCAL.json")
-    if (!local.isFile) None
-    else {
-      val src = scala.io.Source.fromFile(local, "UTF-8")
-      val txt = try src.mkString finally src.close()
-      "\"cal_spin_start_ms\":([0-9.]+)".r.findFirstMatchIn(txt)
-        .map(_.group(1).toDouble)
-    }
+  private[graft] def floorBlockers(sf: String, floorSf: Option[String],
+      measured: Set[String], failed: Int, runsDegraded: Boolean,
+      childrenTimedOut: Int): Seq[String] = {
+    val missing = FloorKeys.count(k => !measured(k))
+    Seq(
+      Option.when(missing > 0)(s"$missing rows missing"),
+      Option.when(failed > 0)(s"$failed queries failed"),
+      Option.when(runsDegraded)("runs degraded"),
+      Option.when(childrenTimedOut > 0)(s"$childrenTimedOut children timed out"),
+      floorSf.filter(_ != sf).map(f => s"floor is at $f")
+    ).flatten
   }
 
-  private[graft] def prevBench(repoDir: String, sfDir: String): Map[String, Double] = {
-    val re = "BENCH_r(\\d+)\\.json".r
-    val newest = Option(new java.io.File(repoDir).listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName match {
-        case re(n) => Some(n.toInt -> f)
-        case _ => None
-      }).sortBy(_._1).lastOption.map(_._2)
-    val local = new java.io.File(repoDir, "BENCH_LOCAL.json")
-    (Seq(local).filter(_.isFile) ++ newest.toSeq).iterator.map { f =>
-      val txt = {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        // the driver embeds our JSON line escaped inside its "tail" field;
-        // unescaping makes both the raw and the wrapped format parseable
-        try src.mkString.replace("\\\"", "\"") finally src.close()
+  /** One query's result in a batch: the min-of-runs seconds with the
+    * calibration spin sampled right after it, or the error that stopped
+    * it (a failed query gets no time row).
+    */
+  private[graft] sealed trait Outcome { def key: String }
+  private[graft] final case class Timed(key: String, sec: Double, spinMs: Double)
+    extends Outcome
+  private[graft] final case class Failed(key: String, error: String) extends Outcome
+
+  /** The progress line a child prints, and flushes, per finished query. */
+  private[graft] def progressLine(o: Outcome): String = o match {
+    case Timed(k, sec, spin) => line(Seq("q" -> k, "sec" -> sec, "spin_ms" -> r1(spin)))
+    case Failed(k, error) => line(Seq("q" -> k, "failed" -> error))
+  }
+
+  /** A child's outcomes, one per progress line in its stdout. A line
+    * that is not a progress record (the torn last line of a killed
+    * child, stray output) is skipped.
+    */
+  private[graft] def parseProgress(out: String): Seq[Outcome] =
+    out.linesIterator.flatMap { l =>
+      Try(Json.readTree(l)).toOption.filter(_.hasNonNull("q")).flatMap { n =>
+        val key = n.get("q").asText
+        if (n.hasNonNull("sec"))
+          Some(Timed(key, n.get("sec").asDouble, n.path("spin_ms").asDouble))
+        else if (n.hasNonNull("failed")) Some(Failed(key, n.get("failed").asText))
+        else None
       }
-      val sameSf = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
-        .exists(_.group(1) == sfDir)
-      val qIdx = txt.indexOf("\"queries\":{")
-      if (!sameSf || qIdx < 0) Map.empty[String, Double]
-      else {
-        val body = txt.substring(qIdx + "\"queries\":{".length, txt.indexOf('}', qIdx))
-        "\"([^\"]+)\":([-+0-9.eE]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }.find(_.nonEmpty).getOrElse(Map.empty)
+    }.toSeq
+
+  /** One child's work: the names to time (sf1 rows against the 10× copy)
+    * and the timed runs per query. [[args]] and [[Batch.parse]] are the
+    * child's command line, in one place.
+    */
+  private[graft] final case class Batch(sf1: Boolean, names: Seq[String], runs: Int) {
+    def keyOf(name: String): String = if (sf1) "sf1:" + name else name
+    /** The names whose result key `done` does not hold (timed or failed). */
+    def unfinished(done: String => Boolean): Seq[String] =
+      names.filterNot(n => done(keyOf(n)))
+    def args: Seq[String] =
+      (if (sf1) "--sf1-batch" else "--batch") +: s"--runs=$runs" +: names
+  }
+
+  private[graft] object Batch {
+    /** `--batch|--sf1-batch [--runs=N] name...`; an sf1 batch without
+      * names is the whole sf1 section. */
+    def parse(args: Seq[String]): Option[Batch] = args.headOption.collect {
+      case mode @ ("--batch" | "--sf1-batch") =>
+        val sf1 = mode == "--sf1-batch"
+        val names = args.tail.filterNot(_.startsWith("--"))
+        val runs = args.collectFirst { case s"--runs=$n" => n.toInt }
+          .getOrElse(if (sf1) 1 else 2)
+        Batch(sf1, if (sf1 && names.isEmpty) Sf1Queries else names, runs)
+    }
   }
 
   /** Bench-only sf1 variants. The sf1 bootstrap row exists to catch
@@ -162,6 +242,11 @@ object Bench {
     */
   private[graft] val Sf1Queries: Seq[String] =
     SparkEntry.specs.filter(_.sf1).map(_.name) ++ Sf1Overrides.keys
+
+  /** The rows a committed floor holds: every registered query at the
+    * bench SF, and the sf1 section under its `sf1:` prefix. */
+  private[graft] val FloorKeys: Set[String] =
+    SparkEntry.queries.keySet ++ Sf1Queries.map("sf1:" + _)
 
   /** sf1 rows heavy enough to own a single-row child JVM (round 14):
     * a timeout or contention burst there costs one row, not the chunk.
@@ -319,7 +404,7 @@ object Bench {
     * inflates under co-tenant CPU pressure. Sampled after EVERY timed
     * query (closing the round-11 between-children blind spot: transient
     * load inside a 10-min child window was invisible) and merged across
-    * child JVMs via the `spin_max_ms` field each child prints.
+    * child JVMs via the `spin_ms` field of each progress line.
     */
   private[graft] def calSpinMs(): Double = {
     var x = 0L; var i = 0
@@ -328,16 +413,6 @@ object Bench {
     if (x == Long.MinValue) println("") // defeat dead-code elimination
     (System.nanoTime() - t) / 1e6
   }
-  @volatile private[graft] var spinMaxMs: Double = 0.0
-
-  /** Per-query contention sample: the calibration-spin wall observed
-    * right after each timed query, keyed exactly like the results map
-    * ("sf1:" prefix included). In-process timing fills it directly;
-    * fork-parent runs harvest it from the children's per-query progress
-    * lines (which carry the query's OWN sample, not the cumulative max).
-    */
-  private val spinByQuery = scala.collection.mutable.Map.empty[String, Double]
-
   /** The regression-flag rule, shared by the retry gate, the emit-time
     * flag list, and the re-time phase: ratio > 1.5× AND > 0.25 s
     * absolute excess, AND — for floor rows under 3 s — at least +1.5 s
@@ -409,76 +484,105 @@ object Bench {
     (regressed.sorted, contendedSpin.sorted, contendedChild.sorted)
   }
 
+  /** `Class: message`, first line only, short enough for a summary line. */
+  private def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
+      .linesIterator.nextOption().getOrElse("").take(160)
+
   /** Time `entries` (min of `runs` each) with the flag-retry protocol.
-    * With `progress = true` (the fork-child modes), one compact JSON
-    * line per FINISHED query is printed and flushed as it completes —
-    * the parent harvests these from a timed-out/crashed child's output
-    * file, so a killed child still contributes every row it measured
-    * (round 11 burned ~12 min on a twice-killed batch that had timed
-    * 40+ of its 50 queries each attempt and contributed nothing).
+    * With `progress = true` (the fork-child modes), one JSON line per
+    * FINISHED query is printed and flushed as it completes — the parent
+    * harvests these from a timed-out/crashed child's output file, so a
+    * killed child still contributes every row it measured (round 11
+    * burned ~12 min on a twice-killed batch that had timed 40+ of its 50
+    * queries each attempt and contributed nothing).
     */
-  private def timeQueries(spark: SparkSession, dir: String,
+  private[graft] def timeQueries(spark: SparkSession, dir: String,
       entries: Seq[(String, (SparkSession, String) => DataFrame)],
       runs: Int, keyPrefix: String, prev: Map[String, Double],
-      retryFlagged: Boolean, progress: Boolean = false): Seq[(String, Double)] = {
+      retryFlagged: Boolean, progress: Boolean = false): Seq[Outcome] = {
     def flagged(k: String, v: Double): Boolean =
       prev.get(k).exists(p => isFlagged(p, v))
     entries.map { case (name, fn) =>
       def timeOnce(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, dir).count() } catch { case _: Throwable => -1L }
+        fn(spark, dir).count()
         (System.nanoTime() - t0) / 1e9
       }
       val key = keyPrefix + name
-      val first = (1 to runs).map(_ => timeOnce()).min
-      val best =
-        if (!retryFlagged || !flagged(key, first)) first
-        else {
-          spark.catalog.clearCache(); System.gc()
-          math.min(first, (1 to 2).map(_ => timeOnce()).min)
+      val outcome =
+        try {
+          val first = (1 to runs).map(_ => timeOnce()).min
+          val best =
+            if (!retryFlagged || !flagged(key, first)) first
+            else {
+              spark.catalog.clearCache(); System.gc()
+              math.min(first, (1 to 2).map(_ => timeOnce()).min)
+            }
+          Timed(key, best, calSpinMs())
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $key failed: ${describe(e)}")
+          Failed(key, describe(e))
         }
-      val spin = calSpinMs()
-      spinMaxMs = math.max(spinMaxMs, spin)
-      spinByQuery(key) = spin
       if (progress) {
-        println(s"""{"q":"$key","sec":$best,"spin_ms":${math.round(spin * 10) / 10.0}}""")
+        println(progressLine(outcome))
         System.out.flush()
       }
-      key -> best
+      outcome
     }
   }
 
-  private def jsonQueries(all: Seq[(String, Double)]): String =
-    all.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+  /** Time one batch in `spark`: sf0.1 rows in name order against `sfDir`,
+    * sf1 rows in section order against the 10× copy (built or reused,
+    * then warmed untimed so the first row does not absorb first-touch).
+    * The child modes of [[main]] and the in-process crash fallback both
+    * run batches here.
+    */
+  private def runBatch(spark: SparkSession, sfDir: String, batch: Batch,
+      prev: Map[String, Double], progress: Boolean): Seq[Outcome] = {
+    val names = batch.names.toSet
+    if (batch.sf1) {
+      prepareScaled(spark, sfDir, ScaledDir)
+      warmTables(spark, ScaledDir)
+      timeQueries(spark, ScaledDir, Sf1Queries.filter(names).map(n => n -> sf1Query(n)),
+        batch.runs, "sf1:", prev, retryFlagged = true, progress)
+    } else
+      timeQueries(spark, sfDir,
+        SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) => names(n) },
+        batch.runs, "", prev, retryFlagged = true, progress)
+  }
 
-  /** Outcome of one fork-child attempt. `rows` is ALWAYS everything the
-    * child measured — for a completed child, its final queries map; for
-    * a timed-out or crashed child, the per-query progress lines
-    * harvested from its output file. Timeouts and crashes are distinct
+  /** `vs_prev`: this run's seconds over the floor's, per key the floor has. */
+  private def vsPrev(rows: Seq[(String, Double)],
+      prev: Map[String, Double]): ListMap[String, Double] =
+    ListMap(rows.flatMap { case (k, v) =>
+      prev.get(k).filter(_ > 0).map(p => k -> r3(v / p))
+    }: _*)
+
+  /** How one fork-child attempt ended. Timeouts and crashes are distinct
     * because their retry policies differ: a crash (OOM, classload races
     * with a concurrent compile) is transient and worth one same-shape
     * retry of the unfinished names; a TIMEOUT under contention will
     * time out again at the same size (round 11: 2 × 6 min burned on the
     * same batch for zero retained rows) — the only sane follow-up is a
-    * smaller child over just the unfinished names.
+    * smaller child over just the unfinished names. A child that exits 0
+    * without a line for every name counts as crashed.
     */
-  private sealed trait ChildOutcome { def rows: Seq[(String, Double)] }
-  private case class ChildDone(rows: Seq[(String, Double)]) extends ChildOutcome
-  private case class ChildTimedOut(rows: Seq[(String, Double)]) extends ChildOutcome
-  private case class ChildCrashed(rows: Seq[(String, Double)]) extends ChildOutcome
+  private sealed trait ChildEnd
+  private case object Finished extends ChildEnd
+  private case object TimedOut extends ChildEnd
+  private case object Crashed extends ChildEnd
 
-  /** Per-query progress lines from a (possibly killed) child's output. */
-  private def parseProgress(out: String): Seq[(String, Double)] =
-    "\\{\"q\":\"([^\"]+)\",\"sec\":([-+0-9.eE]+)".r.findAllMatchIn(out)
-      .map(m => m.group(1) -> m.group(2).toDouble).toSeq
+  /** One fork-child attempt: how it ended and ALWAYS everything it
+    * measured (its progress lines, whether or not it finished). */
+  private final case class ChildRun(end: ChildEnd, outcomes: Seq[Outcome])
 
-  /** Fork `graft.Bench <childArgs>` in a fresh JVM (same module opens,
+  /** Fork `graft.Bench <batch.args>` in a fresh JVM (same module opens,
     * heap, and classpath as this one — `run / fork := true` means
     * java.class.path is the real application classpath) and parse its
-    * output. Completed children yield their final queries map; killed
-    * ones yield whatever progress lines they flushed (round 12: a
-    * timed-out child salvages its completed rows instead of discarding
-    * them — the caller then re-runs only the unfinished names).
+    * progress lines, each once (round 12: a timed-out child salvages its
+    * completed rows instead of discarding them — the caller then re-runs
+    * only the unfinished names).
     *
     * Child stdout/stderr are redirected to files (`/tmp/graft_bench_child_
     * <tag>.{out,err}`), not inherited: reading the out-FILE after waitFor
@@ -489,18 +593,15 @@ object Bench {
     * our latest summary JSON line instead of 2,000 chars of WARNs (the
     * exact failure shape of the empty round-8/9 artifacts).
     */
-  private def forkChild(childArgs: Seq[String],
-      timeoutMin: Long): ChildOutcome = {
+  private def forkChild(batch: Batch, timeoutMin: Long): ChildRun =
     try {
-      import scala.jdk.CollectionConverters._
       val javaBin = new java.io.File(
         new java.io.File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
       val jvmArgs = java.lang.management.ManagementFactory
         .getRuntimeMXBean.getInputArguments.asScala.toSeq
       val cp = System.getProperty("java.class.path")
-      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench") ++ childArgs
-      val tag = childArgs.headOption.getOrElse("x").replaceAll("[^a-zA-Z0-9]", "") +
-        "_" + math.abs(childArgs.hashCode())
+      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench") ++ batch.args
+      val tag = (if (batch.sf1) "sf1batch" else "batch") + "_" + math.abs(batch.args.hashCode())
       val outFile = new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_bench_child_$tag.out")
       val errFile = new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_bench_child_$tag.err")
       val pb = new java.lang.ProcessBuilder(cmd.asJava)
@@ -512,96 +613,58 @@ object Bench {
         p.destroyForcibly()
         p.waitFor(10, java.util.concurrent.TimeUnit.SECONDS)
       }
-      val out =
+      val outcomes = parseProgress(
         try java.nio.file.Files.readString(outFile.toPath)
-        catch { case _: Throwable => "" }
-      // merge the child's in-window contention probes into the parent's
-      // (final-line spin_max_ms AND per-query spin_ms progress samples)
-      ("\"spin_max_ms\":([0-9.]+)".r.findAllMatchIn(out) ++
-        "\"spin_ms\":([0-9.]+)".r.findAllMatchIn(out))
-        .foreach(m => spinMaxMs = math.max(spinMaxMs, m.group(1).toDouble))
-      // per-query spin samples feed the contended-vs-regressed gate
-      "\\{\"q\":\"([^\"]+)\",\"sec\":[-+0-9.eE]+,\"spin_ms\":([0-9.]+)".r
-        .findAllMatchIn(out)
-        .foreach(m => spinByQuery(m.group(1)) = m.group(2).toDouble)
-      if (timedOut) {
-        val partial = parseProgress(out)
-        System.err.println(s"[bench] child timed out after ${timeoutMin}m — " +
-          s"salvaged ${partial.size} finished rows (log: $errFile)")
-        return ChildTimedOut(partial)
-      }
-      if (p.exitValue() != 0) {
-        val partial = parseProgress(out)
-        System.err.println(s"[bench] child exit ${p.exitValue()} — " +
-          s"salvaged ${partial.size} finished rows (log: $errFile)")
-        return ChildCrashed(partial)
-      }
-      val qIdx = out.indexOf("\"queries\":{")
-      if (qIdx < 0) {
-        System.err.println("[bench] child emitted no queries map")
-        ChildCrashed(parseProgress(out))
-      } else {
-        val body = out.substring(qIdx + "\"queries\":{".length, out.indexOf('}', qIdx))
-        ChildDone("\"([^\"]+)\":([-+0-9.eE]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toSeq)
-      }
+        catch { case _: Throwable => "" })
+      val end =
+        if (timedOut) TimedOut
+        else if (p.exitValue() == 0 && batch.unfinished(outcomes.map(_.key).toSet).isEmpty)
+          Finished
+        else Crashed
+      if (end != Finished)
+        System.err.println(s"[bench] child " +
+          (if (timedOut) s"timed out after ${timeoutMin}m" else s"exit ${p.exitValue()}") +
+          s" — salvaged ${outcomes.size} finished rows (log: $errFile)")
+      ChildRun(end, outcomes)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] fork failed: ${e.getMessage}")
-      ChildCrashed(Seq.empty)
+      ChildRun(Crashed, Seq.empty)
     }
-  }
+
+  /** The widest compact line, over detail caps 20, 10, 5, 2, 1 and 0,
+    * that fits the driver's 2,000-char log tail. */
+  private[graft] def fitCompact(compact: Int => String): String =
+    Iterator(20, 10, 5, 2, 1).map(compact).find(_.length <= 2000)
+      .getOrElse(compact(0))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val prev = prevBench("/root/repo", sfDir)
+    val floor = readFloor(FloorFile, sfDir)
+    val prev = floor.queries
 
     // ---- child / utility modes -------------------------------------
     if (args.headOption.contains("--prepare-sf1")) {
-      // materializes the 10×-scaled copy of sfDir into /tmp/graft_bench_sf1
-      // and exits: adjudication runs then point SPARK_GRAFT_SF_DIR at it
+      // materializes the 10×-scaled copy of sfDir into ScaledDir and
+      // exits: adjudication runs then point SPARK_GRAFT_SF_DIR at it
       // for isolated min-of-4 timing without rebuilding the data per run.
       val spark = newSession(sfDir, warm = false)
-      prepareScaled(spark, sfDir, "/tmp/graft_bench_sf1")
-      println(s"""{"prepared":"/tmp/graft_bench_sf1","from":"$sfDir"}""")
+      prepareScaled(spark, sfDir, ScaledDir)
+      println(line(Seq("prepared" -> ScaledDir, "from" -> sfDir)))
       spark.stop()
       return
     }
-    if (args.headOption.contains("--batch")) {
-      // fresh-JVM batch child: time the named queries at sfDir, print a
-      // progress line per finished query (the parent's salvage source if
-      // this JVM is killed) and the full line at the end (parent parses
-      // the queries map), write nothing. `--runs=1` (round 14) is the
-      // parent's coverage-first degradation: one timed run per query.
-      val runs = if (args.contains("--runs=1")) 1 else 2
-      val names = args.drop(1).filterNot(_.startsWith("--")).toSet
-      val spark = newSession(sfDir, warm = true)
-      val entries = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => names(n) }
-      val res = timeQueries(spark, sfDir, entries, runs = runs, keyPrefix = "",
-        prev = prev, retryFlagged = true, progress = true)
-      println(s"""{"metric":"batch","queries":${jsonQueries(res)},"sf":"$sfDir","spin_max_ms":${math.round(spinMaxMs * 10) / 10.0}}""")
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("--sf1-batch")) {
-      // fresh-JVM sf1 child: build (or reuse — prepareScaled marker) the
-      // 10× copy, time the sf1 tripwire rows (one run each —
-      // multi-second queries, jitter is proportionally small), print
-      // progress lines + the full line. Extra args filter the tripwire
-      // set: the parent's follow-up child after a timeout re-times ONLY
-      // the unfinished rows.
-      val only = args.drop(1).filterNot(_.startsWith("--")).toSet
-      val spark = newSession(sfDir, warm = false)
-      val scaledDir = "/tmp/graft_bench_sf1"
-      prepareScaled(spark, sfDir, scaledDir)
-      warmTables(spark, scaledDir) // untimed: first row must not absorb first-touch
-      val entries = Sf1Queries.filter(n => only.isEmpty || only(n))
-        .map(n => n -> sf1Query(n))
-      val res = timeQueries(spark, scaledDir, entries, runs = 1,
-        keyPrefix = "sf1:", prev = prev, retryFlagged = true, progress = true)
-      println(s"""{"metric":"batch","queries":${jsonQueries(res)},"sf":"$sfDir","spin_max_ms":${math.round(spinMaxMs * 10) / 10.0}}""")
-      spark.stop()
-      return
+    Batch.parse(args.toSeq) match {
+      case Some(batch) =>
+        // fresh-JVM batch child: time the batch, print a progress line
+        // per finished query (the parent's only record of this child,
+        // and its salvage source if this JVM is killed), write nothing.
+        // `--runs=1` (round 14) is the parent's coverage-first
+        // degradation: one timed run per query.
+        val spark = newSession(sfDir, warm = !batch.sf1)
+        runBatch(spark, sfDir, batch, prev, progress = true)
+        spark.stop()
+        return
+      case None => ()
     }
 
     // ---- filtered adjudication mode ---------------------------------
@@ -616,15 +679,14 @@ object Bench {
         .filter { case (n, _) => filter(n) }
       val res = timeQueries(spark, sfDir, entries, runs = 4, keyPrefix = "",
         prev = prev, retryFlagged = false)
-      val total = res.map(_._2).sum
+      val times = res.collect { case Timed(k, sec, _) => k -> sec }
       // real vs_prev for the selected keys (`regressed` stays empty by
       // design: adjudication runs EXIST to re-examine flags, not raise
       // them — the human reads the ratios directly)
-      val vs = res.flatMap { case (k, v) =>
-        prev.get(k).filter(_ > 0).map(p =>
-          "\"" + k + "\":" + (math.round(v / p * 1000) / 1000.0))
-      }.mkString("{", ",", "}")
-      println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonQueries(res)},"sf":"$sfDir","vs_prev":$vs,"regressed":[]}""")
+      println(line(Seq("metric" -> "total", "value" -> times.map(_._2).sum,
+        "unit" -> "sec", "queries" -> ListMap(times: _*), "sf" -> sfDir,
+        "vs_prev" -> vsPrev(times, prev), "regressed" -> Seq.empty[String],
+        "failed" -> ListMap(res.collect { case Failed(k, e) => k -> e }: _*))))
       spark.stop()
       return
     }
@@ -640,11 +702,11 @@ object Bench {
     //     if that fails too, ONLY that batch runs in-process (shared
     //     lazily-created fallback session). Completed work is never
     //     discarded or repeated.
-    //   - after EVERY batch, BENCH_LOCAL.json is rewritten with the full
-    //     line over results-so-far and ONE complete compact summary line
-    //     (≤2,000 chars) is printed, so a kill -9 at ANY point leaves the
-    //     driver's log tail ending in a parseable snapshot of every
-    //     completed batch.
+    //   - after EVERY batch ONE complete compact summary line (≤2,000
+    //     chars) over results-so-far is printed, so a kill -9 at ANY
+    //     point leaves the driver's log tail ending in a parseable
+    //     snapshot of every completed batch. BENCH_LOCAL.json is written
+    //     only by the final emit, under the floor rule.
     //   - per-child timeouts are budget-bound: remaining wall budget
     //     (SPARK_GRAFT_BENCH_BUDGET_MIN, default 40) split across the
     //     remaining children, floored at 6 min — not a flat 40 min that a
@@ -662,7 +724,6 @@ object Bench {
     val allNames = SparkEntry.queries.keys.toSeq
       .sortBy(n => (prev.contains(n), -prev.getOrElse(n, 0.0), n))
     val sf1Enabled = !sys.env.get("SPARK_GRAFT_SF1").contains("0")
-    val forkEnabled = !sys.env.get("SPARK_GRAFT_FORK").contains("0")
     val budgetMin = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_MIN", "40").toLong
     // hard wall for the COVERAGE phases only (see [[graceMin]]): the
     // main plan loop defers at budgetMin; catch-up and re-time may run
@@ -685,12 +746,11 @@ object Bench {
     // previous child's own decaying load.)
     calSpinMs() // JIT warm-up; discard
     val spinStart = calSpinMs()
-    spinMaxMs = math.max(spinMaxMs, spinStart)
+    var spinMaxMs = spinStart
     // gate reference: the quiet of {this run's start, the committed
     // floor's start} — a run that BEGINS contended must not normalize
     // its own inflation away (see partitionFlags)
-    val spinRef = prevSpinStart("/root/repo")
-      .map(math.min(_, spinStart)).getOrElse(spinStart)
+    val spinRef = floor.spinStartMs.map(math.min(_, spinStart)).getOrElse(spinStart)
 
     var sf1Error: Option[String] = None
     var skipped = 0
@@ -701,8 +761,7 @@ object Bench {
       val s = newSession(sfDir, warm = true); fallback = Some(s); s
     }
 
-    // (tag, sf0.1 query names | names-filter for the sf1 children). The
-    // sf1 children slot in SECOND (see heavy-first note above).
+    // The sf1 children slot in SECOND (see heavy-first note above).
     // Round 13: the sf1 section is CHUNKED into fresh JVMs of ≤24 rows
     // like the sf0.1 batches — a single 70-row sf1 child accumulated the
     // same heap/JIT pressure the sf0.1 batching exists to bound (this
@@ -726,18 +785,18 @@ object Bench {
     if (runsDegraded)
       System.err.println(s"[bench] coverage-first: budget ${budgetMin}m < projected runs=2 cost ${math.round(projRuns2All / 60)}m x1.25 - runs=1, 100-row children from the start")
     val sf0Batches = allNames.grouped(if (runsDegraded) 100 else 50)
-      .toSeq.map(b => "--batch" +: b)
+      .toSeq.map(b => Batch(sf1 = false, b, runs = 2))
     // Round 14: the two heaviest sf1 rows get single-row children — they
     // dominated (and under contention, blew) any chunk they shared
     // (r13 driver: bootstrap 239 s, ppr 166 s in timed-out children); a
     // timeout now costs one row, not a 24-row chunk.
-    val sf1Batches: Seq[Seq[String]] =
+    val sf1Batches: Seq[Batch] =
       if (sf1Enabled)
-        Sf1HeavyIsolated.filter(Sf1Queries.contains).map(n => Seq("--sf1-batch", n)) ++
-          Sf1Queries.filterNot(Sf1HeavyIsolated.contains)
-            .grouped(24).toSeq.map(c => "--sf1-batch" +: c)
+        (Sf1HeavyIsolated.filter(Sf1Queries.contains).map(Seq(_)) ++
+          Sf1Queries.filterNot(Sf1HeavyIsolated.contains).grouped(24))
+          .map(Batch(sf1 = true, _, runs = 1))
       else Seq.empty
-    val plan: Seq[Seq[String]] =
+    val plan: Seq[Batch] =
       if (sf0Batches.nonEmpty)
         (sf0Batches.head +: sf1Batches) ++ sf0Batches.tail
       else sf1Batches
@@ -748,6 +807,16 @@ object Bench {
     // across JVMs).
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]    // sf0.1
     val sf1Results = scala.collection.mutable.LinkedHashMap.empty[String, Double] // sf1:
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // Per-query contention sample: the calibration-spin wall observed
+    // right after each timed query, keyed exactly like the results map
+    // ("sf1:" prefix included) — the query's OWN sample, not the
+    // cumulative max.
+    val spinByQuery = scala.collection.mutable.Map.empty[String, Double]
+    // A row is done once it is timed or has failed: catch-up re-queues
+    // neither.
+    def isDone(k: String): Boolean =
+      results.contains(k) || sf1Results.contains(k) || failed.contains(k)
     // (declared before mergeRows, which records into it)
     val retimedKeys = scala.collection.mutable.Set.empty[String]
     // A row merged when it ALREADY has a recorded time was by definition
@@ -757,10 +826,14 @@ object Bench {
     // just the dedicated re-time phase (round-15 ADVICE fix: a flag
     // reproduced by a quiet catch-up child no longer waits for an extra
     // JVM to prove what was already measured twice).
-    def mergeRows(rows: Seq[(String, Double)]): Unit = rows.foreach { case (k, v) =>
-      val into = if (k.startsWith("sf1:")) sf1Results else results
-      if (into.contains(k)) retimedKeys += k
-      into(k) = into.get(k).map(math.min(_, v)).getOrElse(v)
+    def mergeRows(outcomes: Seq[Outcome]): Unit = outcomes.foreach {
+      case Timed(k, v, spin) =>
+        val into = if (k.startsWith("sf1:")) sf1Results else results
+        if (into.contains(k)) retimedKeys += k
+        into(k) = into.get(k).map(math.min(_, v)).getOrElse(v)
+        spinByQuery(k) = spin
+        spinMaxMs = math.max(spinMaxMs, spin)
+      case Failed(k, error) => failed(k) = error
     }
     // Spin-gate v2 state: per-query child-contention ratio (the whole
     // child ran >2x its committed floor) and the re-timed set (rows
@@ -775,7 +848,8 @@ object Bench {
       * the child ratio — bursty contention the per-query spin probe
       * slept through still self-identifies.
       */
-    def recordChildRatio(rows: Seq[(String, Double)]): Unit = {
+    def recordChildRatio(outcomes: Seq[Outcome]): Unit = {
+      val rows = outcomes.collect { case Timed(k, v, _) => k -> v }
       val known = rows.filter { case (k, _) => prev.getOrElse(k, 0.0) > 0 }
       val prevSum = known.map { case (k, _) => prev(k) }.sum
       if (prevSum >= 5.0) {
@@ -787,19 +861,14 @@ object Bench {
       }
     }
 
-    /** Rewrite BENCH_LOCAL.json + print the compact summary over
-      * everything completed so far. Called after every batch AND at the
-      * end (where it emits the final, complete line).
+    /** Print the compact summary over everything completed so far.
+      * Called after every batch AND at the end, where it prints the
+      * full line instead and, under the floor rule, writes it to
+      * BENCH_LOCAL.json.
       */
     def emit(batchesDone: Int, full: Boolean = false): Unit = {
       val all = (results ++ sf1Results).toSeq
-      val total = math.round(results.valuesIterator.sum * 1000) / 1000.0
-      val vsPrev = all.flatMap { case (k, v) =>
-        prev.get(k).filter(_ > 0).map(p => k -> v / p)
-      }
-      val vsStr = vsPrev.map { case (k, r) =>
-        "\"" + k + "\":" + (math.round(r * 1000) / 1000.0)
-      }.mkString("{", ",", "}")
+      val total = r3(results.valuesIterator.sum)
       // flag rule (shared isFlagged): ratio AND absolute excess, with
       // the round-14 deadband for sub-3 s floor rows
       val flaggedKeys = all.collect {
@@ -810,78 +879,39 @@ object Bench {
       val (regressedKeys, contSpinKeys, contChildKeys) =
         partitionFlags(flaggedKeys, spinByQuery.get, spinRef,
           childRatioByQuery.get, retimedKeys)
-      val regressed = regressedKeys.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val contended = contSpinKeys
-        .map(k => "\"" + k + "\":" +
-          (math.round(spinByQuery(k) * 10) / 10.0))
-        .mkString("{", ",", "}")
-      val contendedChild = contChildKeys
-        .map(k => "\"" + k + "\":" + childRatioByQuery(k))
-        .mkString("{", ",", "}")
-      val retimedStr = retimedKeys.toSeq.sorted
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
-      val sf1Err = sf1Error.map(m => s""","sf1_error":"$m"""").getOrElse("")
+      def contended(n: Int) = ListMap(contSpinKeys.take(n).map(k => k -> r1(spinByQuery(k))): _*)
+      def contendedChild(n: Int) = ListMap(contChildKeys.take(n).map(k => k -> childRatioByQuery(k)): _*)
       // precise partiality: rows actually missing vs the full plan (a
       // salvaged timed-out child may still have contributed everything
       // via its follow-up / the catch-up phase — then NOT partial)
-      val expectedRows = allNames.size +
-        (if (sf1Enabled) Sf1Queries.size else 0)
-      val missingRows = expectedRows - all.size
-      val timeoutSeg =
-        if (timedOutChildren > 0) s""","children_timed_out":$timedOutChildren""" else ""
-      val degradedSeg = (if (runsDegraded) s""","runs_degraded":true""" else "") +
-        (if (elapsedMin > budgetMin)
-          s""","grace_used_min":${math.round((elapsedMin - budgetMin) * 10) / 10.0}"""
-        else "")
-      val partial =
-        if (missingRows > 0)
-          s""","partial":true,"batches_done":$batchesDone,"batches_total":${plan.size},"batches_skipped":$skipped,"rows_missing":$missingRows""" + timeoutSeg + degradedSeg
-        else timeoutSeg + degradedSeg
-      val spin = s""","cal_spin_start_ms":${math.round(spinStart * 10) / 10.0},"cal_spin_ref_ms":${math.round(spinRef * 10) / 10.0},"cal_spin_max_ms":${math.round(spinMaxMs * 10) / 10.0}"""
-      // Adjudication sidecar (round-15 ADVICE fix): floor bookkeeping
-      // like floor_appended / floor_adjudicated used to be hand-merged
-      // into BENCH_LOCAL.json and silently lost on the next emit. Keep
-      // such annotations in BENCH_ADJUDICATION.json ({"key":value,...});
-      // emit() splices its top-level keys into every line it writes, so
-      // the committed artifact's self-description survives re-runs.
-      val sidecar = try {
-        val p = java.nio.file.Paths.get("/root/repo/BENCH_ADJUDICATION.json")
-        if (java.nio.file.Files.exists(p)) {
-          val t = java.nio.file.Files.readString(p).trim
-          if (t.length > 2 && t.startsWith("{") && t.endsWith("}"))
-            "," + t.substring(1, t.length - 1).trim
-          else ""
-        } else ""
-      } catch { case _: Throwable => "" }
-      val line =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonQueries(all)},"sf":"$sfDir","vs_prev":$vsStr,"regressed":$regressed,"contended":$contended,"contended_child":$contendedChild,"retimed":$retimedStr$sf1Err$partial$spin$sidecar}"""
-      // The full line (200+ query times + vs_prev ratios) outgrew the
-      // driver's 2000-char log-tail window long ago: printing it means
-      // the tail snapshot truncates mid-map. Full-suite runs persist it
-      // to BENCH_LOCAL.json ONLY (the committed per-query baseline) and
-      // print just the compact summary — ONE complete JSON line well
-      // under the window, so the driver's `tail` always parses.
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/root/repo/BENCH_LOCAL.json"), line + "\n")
-      catch { case _: Throwable => () }
-      val slowest = results.toSeq.sortBy(-_._2).take(8)
-        .map { case (k, v) => "\"" + k + "\":" + (math.round(v * 1000) / 1000.0) }
-        .mkString("{", ",", "}")
-      val sf1Slowest = sf1Results.toSeq.sortBy(-_._2).take(6)
-        .map { case (k, v) => "\"" + k + "\":" + (math.round(v * 1000) / 1000.0) }
-        .mkString("{", ",", "}")
-      val sf1Total = math.round(sf1Results.valuesIterator.sum * 1000) / 1000.0
-      val regressedCapped = regressedKeys.take(20)
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
-      val contendedCapped = contSpinKeys.take(12)
-        .map(k => "\"" + k + "\":" +
-          (math.round(spinByQuery(k) * 10) / 10.0))
-        .mkString("{", ",", "}") +
-        (if (contSpinKeys.size > 12) s""","n_contended":${contSpinKeys.size}""" else "")
-      val contChildCapped = contChildKeys.take(12)
-        .map(k => "\"" + k + "\":" + childRatioByQuery(k))
-        .mkString("{", ",", "}")
-      val compact = s"""{"metric":"total","value":${math.round(total * 1000) / 1000.0},"unit":"sec","n_queries":${results.size},"sf":"$sfDir","sf1_total_sec":$sf1Total$sf1Err$partial$spin,"slowest":$slowest,"sf1_slowest":$sf1Slowest,"regressed":$regressedCapped,"contended":$contendedCapped,"contended_child":$contChildCapped,"n_retimed":${retimedKeys.size},"full_line":"BENCH_LOCAL.json"}"""
+      val missingRows = (allNames ++ (if (sf1Enabled) Sf1Queries.map("sf1:" + _) else Nil))
+        .count(k => !isDone(k))
+      val status: Seq[(String, Any)] =
+        sf1Error.map("sf1_error" -> _).toSeq ++
+          (if (missingRows > 0)
+            Seq("partial" -> true, "batches_done" -> batchesDone,
+              "batches_total" -> plan.size, "batches_skipped" -> skipped,
+              "rows_missing" -> missingRows)
+          else Nil) ++
+          Option.when(timedOutChildren > 0)("children_timed_out" -> timedOutChildren) ++
+          Option.when(runsDegraded)("runs_degraded" -> true) ++
+          Option.when(elapsedMin > budgetMin)("grace_used_min" -> r1(elapsedMin - budgetMin)) ++
+          Seq("cal_spin_start_ms" -> r1(spinStart),
+            "cal_spin_ref_ms" -> r1(spinRef), "cal_spin_max_ms" -> r1(spinMaxMs))
+      def slowest(rows: Iterable[(String, Double)], n: Int) =
+        ListMap(rows.toSeq.sortBy(-_._2).take(n).map { case (k, v) => k -> r3(v) }: _*)
+      def compact(cap: Int): String = line(
+        Seq("metric" -> "total", "value" -> total, "unit" -> "sec",
+          "n_queries" -> results.size, "sf" -> sfDir,
+          "sf1_total_sec" -> r3(sf1Results.valuesIterator.sum)) ++
+          status ++
+          Seq("slowest" -> slowest(results, cap min 8),
+            "sf1_slowest" -> slowest(sf1Results, cap min 6),
+            "regressed" -> regressedKeys.take(cap),
+            "contended" -> contended(cap min 12)) ++
+          Option.when(contSpinKeys.size > (cap min 12))("n_contended" -> contSpinKeys.size) ++
+          Seq("contended_child" -> contendedChild(cap min 12),
+            "n_retimed" -> retimedKeys.size, "n_failed" -> failed.size))
       // Driver contract (round 16): the bench must print ONE JSON line
       // whose `queries` map carries EVERY per-query second — the
       // optimization driver diffs per-query times and measures per-query
@@ -893,42 +923,36 @@ object Bench {
       // emit prints the full line as the last stdout line instead. The
       // compact twin goes to stderr for humans either way.
       if (full) {
-        println(line)
-        System.err.println(compact)
-      } else println(compact)
+        def fullLine(written: Boolean): String = line(
+          Seq("metric" -> "total", "value" -> total, "unit" -> "sec",
+            "queries" -> ListMap(all: _*), "sf" -> sfDir,
+            "vs_prev" -> vsPrev(all, prev), "regressed" -> regressedKeys,
+            "contended" -> contended(contSpinKeys.size),
+            "contended_child" -> contendedChild(contChildKeys.size),
+            "retimed" -> retimedKeys.toSeq.sorted) ++
+            status ++
+            Seq("failed" -> ListMap.from(failed), "floor_written" -> written))
+        val blockers = floorBlockers(sfDir, floor.sf, all.map(_._1).toSet,
+          failed.size, runsDegraded, timedOutChildren)
+        val written = blockers.isEmpty && Try(java.nio.file.Files.writeString(
+          FloorFile.toPath, fullLine(written = true) + "\n")).isSuccess
+        if (!written)
+          System.err.println(s"[bench] floor kept: ${if (blockers.isEmpty) "write failed" else blockers.mkString(", ")}")
+        println(fullLine(written))
+        System.err.println(fitCompact(compact))
+      } else println(fitCompact(compact))
       System.out.flush()
     }
 
     /** Run one batch in THIS JVM — only ever for the batch whose child
       * failed twice; completed fork results are untouched.
       */
-    def inProcess(childArgs: Seq[String]): Seq[(String, Double)] =
-      try {
-        val spark = fallbackSession()
-        if (childArgs.headOption.contains("--sf1-batch")) {
-          val only = childArgs.drop(1).filterNot(_.startsWith("--")).toSet
-          val scaledDir = "/tmp/graft_bench_sf1"
-          prepareScaled(spark, sfDir, scaledDir)
-          warmTables(spark, scaledDir)
-          timeQueries(spark, scaledDir,
-            Sf1Queries.filter(n => only.isEmpty || only(n))
-              .map(n => n -> sf1Query(n)), runs = 1,
-            keyPrefix = "sf1:", prev = prev, retryFlagged = true)
-        } else {
-          val runs = if (childArgs.contains("--runs=1")) 1 else 2
-          val names = childArgs.drop(1).filterNot(_.startsWith("--")).toSet
-          val entries = SparkEntry.queries.toSeq.sortBy(_._1)
-            .filter { case (n, _) => names(n) }
-          timeQueries(spark, sfDir, entries, runs = runs, keyPrefix = "",
-            prev = prev, retryFlagged = true)
-        }
-      } catch {
+    def inProcess(batch: Batch): Seq[Outcome] =
+      try runBatch(fallbackSession(), sfDir, batch, prev, progress = false)
+      catch {
         case e: Throwable =>
-          val msg = (e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse(""))
-            .replaceAll("[\"\\\\\\r\\n]", " ").take(160)
-          if (childArgs.headOption.contains("--sf1-batch")) sf1Error = Some(msg)
-          System.err.println(s"[bench] in-process batch failed: $msg")
+          if (batch.sf1) sf1Error = Some(describe(e))
+          System.err.println(s"[bench] in-process batch failed: ${describe(e)}")
           Seq.empty
       }
 
@@ -941,23 +965,18 @@ object Bench {
     // follow-up child for nothing. Unknown queries count 1 s (sf0.1) /
     // 5 s (sf1). The floor stays a lower bound only — an oversized
     // timeout on a cheap batch costs nothing.
-    def expectedSec(childArgs: Seq[String], runs: Int): Double =
-      if (childArgs.headOption.contains("--sf1-batch")) {
-        val names = {
-          val explicit = childArgs.drop(1).filterNot(_.startsWith("--"))
-          if (explicit.nonEmpty) explicit else Sf1Queries
-        }
-        names.map(n => prev.getOrElse("sf1:" + n, 5.0)).sum +
+    def expectedSec(batch: Batch, runs: Int): Double =
+      if (batch.sf1)
+        batch.names.map(n => prev.getOrElse("sf1:" + n, 5.0)).sum +
           (if (sf1Prepared) 40.0 else 150.0)
-      } else childArgs.drop(1).filterNot(_.startsWith("--"))
-        .map(n => prev.getOrElse(n, 1.0)).sum * runs + 60.0
+      else batch.names.map(n => prev.getOrElse(n, 1.0)).sum * runs + 60.0
     def weightOf(j: Int): Double =
       expectedSec(plan(j), if (runsDegraded) 1 else 2)
 
     val childFloorMin =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_CHILD_MIN", "6").toLong
 
-    plan.zipWithIndex.foreach { case (baseArgs, i) =>
+    plan.zipWithIndex.foreach { case (planned, i) =>
       spinMaxMs = math.max(spinMaxMs, calSpinMs())
       val remainingMin = budgetMin - elapsedMin
       if (remainingMin < 2) {
@@ -966,28 +985,20 @@ object Bench {
         skipped += 1
         System.err.println(s"[bench] budget exhausted — deferring batch ${i + 1}/${plan.size} to catch-up")
       } else {
-        val isSf1 = baseArgs.headOption.contains("--sf1-batch")
         // Coverage-first (round 14): before this child launches, does
         // the REMAINING budget cover the REMAINING projected cost at
         // runs=2 with margin? If not, this and all later sf0.1 children
         // run at runs=1 — the dominant term halves before any row risks
         // being dropped. One-way: precision never re-escalates mid-run.
-        if (!isSf1 && !runsDegraded) {
+        if (!planned.sf1 && !runsDegraded) {
           val projRuns2 = (i until plan.size).map(j => expectedSec(plan(j), 2)).sum
           if (decideRuns(remainingMin * 60.0, projRuns2) == 1) {
             runsDegraded = true
             System.err.println(s"[bench] coverage-first: remaining budget ${math.round(remainingMin)}m < projected runs=2 cost ${math.round(projRuns2 / 60)}m x1.25 — degrading to runs=1")
           }
         }
-        val childArgs =
-          if (!isSf1 && runsDegraded) baseArgs.head +: "--runs=1" +: baseArgs.tail
-          else baseArgs
-        if (isSf1) sf1Prepared = true
-        val batchNames: Seq[String] = {
-          val explicit = childArgs.drop(1).filterNot(_.startsWith("--"))
-          if (isSf1 && explicit.isEmpty) Sf1Queries else explicit
-        }
-        def keyOf(n: String): String = if (isSf1) "sf1:" + n else n
+        val batch = if (!planned.sf1 && runsDegraded) planned.copy(runs = 1) else planned
+        if (batch.sf1) sf1Prepared = true
         val remWeight = (i until plan.size).map(weightOf).sum
         def slice(): Long =
           math.max(childFloorMin,
@@ -998,51 +1009,45 @@ object Bench {
         // burned 12 min proving it); a CRASHED child gets one retry of
         // its unfinished names (crashes are transient), then the
         // in-process fallback for whatever is still missing. Nothing
-        // measured is ever discarded. Follow-up --batch children always
-        // run at runs=1 (coverage first — the batch already proved it
-        // cannot afford 2 runs in its slice).
-        def unfinishedOf(done: Seq[(String, Double)]): Seq[String] = {
-          val doneKeys = done.map(_._1).toSet
-          batchNames.filterNot(n => doneKeys(keyOf(n)))
-        }
-        def followArgs(unfinished: Seq[String]): Seq[String] =
-          if (isSf1) childArgs.head +: unfinished
-          else Seq(childArgs.head, "--runs=1") ++ unfinished
-        val res: Seq[(String, Double)] =
-          if (!forkEnabled) inProcess(childArgs)
-          else forkChild(childArgs, slice()) match {
-            case ChildDone(rows) => rows
-            case first =>
-              if (first.isInstanceOf[ChildTimedOut]) timedOutChildren += 1
-              val unfinished = unfinishedOf(first.rows)
-              val more: Seq[(String, Double)] =
-                if (unfinished.isEmpty || budgetMin - elapsedMin < 2) Seq.empty
+        // measured is ever discarded. Follow-up children always run at
+        // runs=1 (coverage first — the batch already proved it cannot
+        // afford 2 runs in its slice).
+        def unfinishedOf(done: Seq[Outcome]): Seq[String] =
+          batch.unfinished(done.map(_.key).toSet)
+        val first = forkChild(batch, slice())
+        val res: Seq[Outcome] =
+          if (first.end == Finished) first.outcomes
+          else {
+            if (first.end == TimedOut) timedOutChildren += 1
+            val unfinished = unfinishedOf(first.outcomes)
+            val more: Seq[Outcome] =
+              if (unfinished.isEmpty || budgetMin - elapsedMin < 2) Seq.empty
+              else {
+                System.err.println(s"[bench] batch ${i + 1}/${plan.size}: " +
+                  s"follow-up child for ${unfinished.size} unfinished queries")
+                val second = forkChild(batch.copy(names = unfinished, runs = 1), slice())
+                if (second.end == Finished) second.outcomes
                 else {
-                  System.err.println(s"[bench] batch ${i + 1}/${plan.size}: " +
-                    s"follow-up child for ${unfinished.size} unfinished queries")
-                  forkChild(followArgs(unfinished), slice()) match {
-                    case ChildDone(rows) => rows
-                    case second =>
-                      if (second.isInstanceOf[ChildTimedOut]) timedOutChildren += 1
-                      val still = unfinishedOf(first.rows ++ second.rows)
-                      // in-process only after a CRASH (its cost is
-                      // bounded by the queries themselves); after two
-                      // timeouts the box is contended — spending the
-                      // remaining budget un-killable helps nothing
-                      val rest =
-                        if (second.isInstanceOf[ChildCrashed] && still.nonEmpty &&
-                            budgetMin - elapsedMin >= 2) {
-                          System.err.println(s"[bench] batch ${i + 1}/${plan.size}: " +
-                            s"in-process fallback for ${still.size} queries")
-                          fellBack += 1
-                          inProcess(followArgs(still))
-                        } else Seq.empty
-                      second.rows ++ rest
-                  }
+                  if (second.end == TimedOut) timedOutChildren += 1
+                  val still = unfinishedOf(first.outcomes ++ second.outcomes)
+                  // in-process only after a CRASH (its cost is
+                  // bounded by the queries themselves); after two
+                  // timeouts the box is contended — spending the
+                  // remaining budget un-killable helps nothing
+                  val rest =
+                    if (second.end == Crashed && still.nonEmpty &&
+                        budgetMin - elapsedMin >= 2) {
+                      System.err.println(s"[bench] batch ${i + 1}/${plan.size}: " +
+                        s"in-process fallback for ${still.size} queries")
+                      fellBack += 1
+                      inProcess(batch.copy(names = still, runs = 1))
+                    } else Seq.empty
+                  second.outcomes ++ rest
                 }
-              first.rows ++ more
+              }
+            first.outcomes ++ more
           }
-        if (isSf1 && res.isEmpty && sf1Error.isEmpty)
+        if (batch.sf1 && res.isEmpty && sf1Error.isEmpty)
           sf1Error = Some("sf1 child JVM failed (see stderr)")
         recordChildRatio(res)
         mergeRows(res)
@@ -1053,36 +1058,31 @@ object Bench {
     // ---- coverage catch-up (round 14): every missing row re-queued at
     // runs=1 against whatever budget remains. A batch skipped on budget
     // (or a twice-killed child's residue) loses its second run, never
-    // its rows. Bounded at 3 rounds so a query that reliably kills its
-    // JVM cannot loop forever.
+    // its rows; a failed query is done, not missing. Bounded at 3
+    // rounds so a query that reliably kills its JVM cannot loop forever.
+    def missingBatches: Seq[Batch] =
+      Batch(sf1 = false, allNames, runs = 1).unfinished(isDone).grouped(100).toSeq
+        .map(Batch(sf1 = false, _, runs = 1)) ++
+        (if (sf1Enabled)
+          Batch(sf1 = true, Sf1Queries, runs = 1).unfinished(isDone).grouped(24).toSeq
+            .map(Batch(sf1 = true, _, runs = 1))
+        else Seq.empty)
     var catchupRound = 0
-    while (catchupRound < 3 && budgetHardMin - elapsedMin >= 1 && {
-        val m0 = allNames.filterNot(results.contains)
-        val m1 = if (sf1Enabled)
-          Sf1Queries.filterNot(n => sf1Results.contains("sf1:" + n))
-          else Seq.empty
-        m0.nonEmpty || m1.nonEmpty
-      }) {
+    while (catchupRound < 3 && budgetHardMin - elapsedMin >= 1 && missingBatches.nonEmpty) {
       catchupRound += 1
-      val m0 = allNames.filterNot(results.contains)
-      val m1 = if (sf1Enabled)
-        Sf1Queries.filterNot(n => sf1Results.contains("sf1:" + n))
-        else Seq.empty
-      val chunks: Seq[Seq[String]] =
-        m0.grouped(100).toSeq.map(c => Seq("--batch", "--runs=1") ++ c) ++
-          m1.grouped(24).toSeq.map(c => "--sf1-batch" +: c)
+      val chunks = missingBatches
+      val (n1, n0) = chunks.partition(_.sf1)
       System.err.println(s"[bench] catch-up round $catchupRound: " +
-        s"${m0.size} sf0.1 + ${m1.size} sf1 rows missing, ${chunks.size} children")
-      chunks.zipWithIndex.foreach { case (ca, j) =>
+        s"${n0.map(_.names.size).sum} sf0.1 + ${n1.map(_.names.size).sum} sf1 rows missing, ${chunks.size} children")
+      chunks.zipWithIndex.foreach { case (batch, j) =>
         if (budgetHardMin - elapsedMin >= 1) {
           val sliceMin = math.max(childFloorMin,
             ((budgetHardMin - elapsedMin) / (chunks.size - j)).toLong)
-          val out = forkChild(ca, sliceMin)
-          if (out.isInstanceOf[ChildTimedOut]) timedOutChildren += 1
-          recordChildRatio(out.rows)
-          mergeRows(out.rows)
-          if (sf1Prepared || ca.headOption.contains("--sf1-batch"))
-            sf1Prepared = true
+          val out = forkChild(batch, sliceMin)
+          if (out.end == TimedOut) timedOutChildren += 1
+          recordChildRatio(out.outcomes)
+          mergeRows(out.outcomes)
+          if (batch.sf1) sf1Prepared = true
           emit(plan.size - skipped)
         }
       }
@@ -1097,19 +1097,19 @@ object Bench {
         !retimedKeys(k) && !spinByQuery.get(k).exists(_ > spinRef * 1.5) => k
     }.toSeq.sorted
     if (toRetime.nonEmpty && budgetHardMin - elapsedMin >= 1) {
-      val f0 = toRetime.filterNot(_.startsWith("sf1:"))
-      val f1 = toRetime.filter(_.startsWith("sf1:")).map(_.stripPrefix("sf1:"))
-      val jobs: Seq[Seq[String]] =
-        (if (f0.nonEmpty) Seq(Seq("--batch", "--runs=1") ++ f0) else Seq.empty) ++
-          (if (f1.nonEmpty) Seq("--sf1-batch" +: f1) else Seq.empty)
+      val (f1, f0) = toRetime.partition(_.startsWith("sf1:"))
+      val jobs =
+        Seq(Batch(sf1 = false, f0, runs = 1),
+          Batch(sf1 = true, f1.map(_.stripPrefix("sf1:")), runs = 1))
+          .filter(_.names.nonEmpty)
       System.err.println(s"[bench] re-time child(ren) for ${toRetime.size} flagged rows")
-      jobs.foreach { ca =>
+      jobs.foreach { batch =>
         if (budgetHardMin - elapsedMin >= 1) {
-          val out = forkChild(ca, math.max(childFloorMin,
+          val out = forkChild(batch, math.max(childFloorMin,
             (budgetHardMin - elapsedMin).toLong))
-          if (out.isInstanceOf[ChildTimedOut]) timedOutChildren += 1
-          retimedKeys ++= out.rows.map(_._1)
-          mergeRows(out.rows)
+          if (out.end == TimedOut) timedOutChildren += 1
+          retimedKeys ++= out.outcomes.collect { case t: Timed => t.key }
+          mergeRows(out.outcomes)
           emit(plan.size - skipped)
         }
       }

@@ -109,4 +109,100 @@ class BenchSpec extends AnyFunSuite {
     Bench.Sf1HeavyIsolated.foreach(n =>
       assert(Bench.Sf1Queries.contains(n), n))
   }
+
+  private def tempFile(content: Option[String]): java.io.File = {
+    val f = java.io.File.createTempFile("bench_floor", ".json")
+    f.deleteOnExit()
+    content match {
+      case Some(c) => java.nio.file.Files.writeString(f.toPath, c)
+      case None => f.delete()
+    }
+    f
+  }
+
+  test("a query that throws gets no time row, only a failed entry") {
+    val boom: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (_, _) => throw new IllegalStateException("boom")
+    // no session is touched: the build function throws before any action
+    val out = Bench.timeQueries(null, "unused", Seq("q_boom" -> boom), runs = 2,
+      keyPrefix = "sf1:", prev = Map("sf1:q_boom" -> 1.0), retryFlagged = true)
+    assert(out === Seq(Bench.Failed("sf1:q_boom", "IllegalStateException: boom")))
+    // a failed row is done: neither a follow-up child nor catch-up re-queues it
+    val batch = Bench.Batch(sf1 = true, Seq("q_boom", "q_other"), runs = 1)
+    assert(batch.unfinished(out.map(_.key).toSet) === Seq("q_other"))
+    // and it blocks the floor write even when every other row landed
+    assert(Bench.floorBlockers("sf", Some("sf"), Bench.FloorKeys,
+      failed = 1, runsDegraded = false, childrenTimedOut = 0).contains("1 queries failed"))
+  }
+
+  test("committed floor: a quiet, complete run over exactly today's registry") {
+    val sf = Bench.readFloor(Bench.FloorFile, "").sf
+    assert(sf.nonEmpty)
+    val floor = Bench.readFloor(Bench.FloorFile, sf.get)
+    Seq("runs_degraded", "partial", "children_timed_out").foreach(k =>
+      assert(!floor.fields(k), k))
+    assert(floor.queries.keySet ===
+      SparkEntry.queries.keySet ++ Bench.Sf1Queries.map("sf1:" + _))
+  }
+
+  test("readFloor: missing file and another sf give an empty floor") {
+    assert(Bench.readFloor(tempFile(None), "/data/sf0.1").queries.isEmpty)
+    val other = tempFile(Some(Bench.line(Seq("queries" -> Map("q_a" -> 1.5),
+      "sf" -> "/data/sf0.01", "cal_spin_start_ms" -> 40.0))))
+    val f = Bench.readFloor(other, "/data/sf0.1")
+    assert(f.queries.isEmpty && f.sf.contains("/data/sf0.01"))
+    assert(Bench.readFloor(tempFile(Some("{\"queries\":{\"q_a\":1.")), "/data/sf0.1")
+      .queries.isEmpty)
+  }
+
+  test("readFloor: a written line reads back identically, quotes and backslashes included") {
+    val sf = "/data/sf \"0.1\" \\ v2"
+    val queries = Map("q_a" -> 1.25, "q_\"quoted\"" -> 0.5, "sf1:q_back\\slash" -> 3.0)
+    val file = tempFile(Some(Bench.line(Seq("metric" -> "total", "queries" -> queries,
+      "sf" -> sf, "runs_degraded" -> true, "cal_spin_start_ms" -> 39.1)) + "\n"))
+    assert(Bench.readFloor(file, sf) === Bench.Floor(Some(sf), queries, Some(39.1),
+      Set("metric", "queries", "sf", "runs_degraded", "cal_spin_start_ms")))
+  }
+
+  test("progress lines: round trip, a torn last line and non-JSON lines are skipped") {
+    val outcomes = Seq(Bench.Timed("q_\"a\"\\b", 1.234, 41.5),
+      Bench.Failed("sf1:q_c", "SparkException: bad \"input\"\tat\\x"))
+    val lines = outcomes.map(Bench.progressLine)
+    val out = ("WARN some log line" +: lines :+ "{\"q\":\"q_torn\",\"sec\":2.").mkString("\n")
+    assert(Bench.parseProgress(out) === outcomes)
+    assert(Bench.parseProgress("") === Seq.empty)
+  }
+
+  test("floor guard: degraded, timed-out, missing, failed and other-sf runs keep the floor") {
+    def blockers(sf: String = "s", floorSf: Option[String] = Some("s"),
+        measured: Set[String] = Bench.FloorKeys, failed: Int = 0,
+        degraded: Boolean = false, timedOut: Int = 0) =
+      Bench.floorBlockers(sf, floorSf, measured, failed, degraded, timedOut)
+    assert(blockers().isEmpty) // a clean run writes
+    assert(blockers(floorSf = None).isEmpty) // and may start a floor
+    assert(blockers(degraded = true) === Seq("runs degraded"))
+    assert(blockers(timedOut = 2) === Seq("2 children timed out"))
+    assert(blockers(measured = Bench.FloorKeys.filterNot(_.startsWith("sf1:"))) ===
+      Seq(s"${Bench.Sf1Queries.size} rows missing"))
+    assert(blockers(failed = 1) === Seq("1 queries failed"))
+    assert(blockers(sf = "other") === Seq("floor is at s"))
+  }
+
+  test("Batch: the child command line round-trips") {
+    val b = Bench.Batch(sf1 = false, Seq("q_a", "q_b"), runs = 1)
+    assert(Bench.Batch.parse(b.args) === Some(b))
+    val s = Bench.Batch(sf1 = true, Seq("q_c"), runs = 1)
+    assert(Bench.Batch.parse(s.args) === Some(s))
+    // hand-typed defaults: two runs at sf0.1, the whole sf1 section
+    assert(Bench.Batch.parse(Seq("--batch", "q_a")) === Some(Bench.Batch(false, Seq("q_a"), 2)))
+    assert(Bench.Batch.parse(Seq("--sf1-batch")) ===
+      Some(Bench.Batch(true, Bench.Sf1Queries, 1)))
+    assert(Bench.Batch.parse(Seq("q_a")) === None)
+  }
+
+  test("fitCompact: detail caps shrink until the line fits 2,000 chars") {
+    val line = (cap: Int) => "x" * (300 * cap)
+    assert(Bench.fitCompact(line).length === 1500) // cap 5
+    assert(Bench.fitCompact(_ => "x" * 3000).length === 3000) // cap 0: nothing left to drop
+  }
 }
