@@ -1,6 +1,8 @@
 package graft
 
+import com.fasterxml.jackson.core.json.JsonWriteFeature
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -103,9 +105,14 @@ import scala.util.Try
   */
 object Bench {
 
-  /** The one JSON codec for every line this harness reads or writes. */
-  private[graft] val Json: ObjectMapper =
-    new ObjectMapper().registerModule(DefaultScalaModule)
+  /** The one JSON codec for every line this harness reads or writes.
+    * Non-ASCII text is written as JSON unicode escapes, so a line survives
+    * a JVM whose default (stdout) charset is ASCII.
+    */
+  private[graft] val Json: ObjectMapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .enable(JsonWriteFeature.ESCAPE_NON_ASCII)
+    .build()
 
   private[graft] def line(fields: Seq[(String, Any)]): String =
     Json.writeValueAsString(ListMap(fields: _*))

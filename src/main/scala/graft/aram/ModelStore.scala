@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** S6 — model/preprocessor persistence: the reference's joblib pickles
   * (`transformer/ranking/feature_factory.py:316-339`, `transformer/ranking/
   * modeling.py:246-277`) re-expressed as small parquet side tables — the
-  * engine-native form: a fitted model is DATA (one row of statistics, a
-  * dimension table, a weight map), so it round-trips through the same
+  * engine-native form: a fitted model is DATA (per-column statistics, a
+  * dimension table), so it round-trips through the same
   * storage layer as everything else and broadcasts to any cluster size.
   */
 object ModelStore {
@@ -37,13 +37,4 @@ object ModelStore {
   def loadEncoder(spark: SparkSession, path: String, keyCol: String,
       idCol: String = "champion_id"): Preprocess.EncoderModel =
     Preprocess.EncoderModel(spark.read.parquet(path), keyCol, idCol)
-
-  def saveWeights(spark: SparkSession, weights: Map[String, Double], path: String): Unit = {
-    import spark.implicits._
-    weights.toSeq.toDF("model", "weight").coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  def loadWeights(spark: SparkSession, path: String): Map[String, Double] =
-    spark.read.parquet(path).collect()
-      .map(r => r.getAs[String]("model") -> r.getAs[Double]("weight")).toMap
 }

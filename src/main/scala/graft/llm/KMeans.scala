@@ -1,12 +1,12 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed Lloyd's k-means over an embedding column — the trainer for
-  * the IVF coarse quantizer ([[Similarity.ivfTopK]] searches cells; this is
-  * where the cells come from) and the clustering step behind
-  * cluster-balanced corpus sampling.
+/** k-means cells over an embedding column — the coarse quantizer behind
+  * IVF search ([[Similarity.ivfTopK]] searches cells; this is where the
+  * cells come from) and the clustering step behind cluster-balanced
+  * corpus sampling, plus the cluster-quality scorecards over them.
   *
   * Determinism contract (the cross-engine / cross-run reproducibility the
   * whole suite holds to):
@@ -14,17 +14,12 @@ import org.apache.spark.sql.functions._
   *    every squared L2 distance to an integer-valued centroid is an exact
   *    integer, and to a rational centroid a fixed-order IEEE sum;
   *  - seeds are the k vectors with the LOWEST ids — no RNG;
-  *  - centroid updates are exact long sums / counts per (cell, dim), so
-  *    iteration i+1's centroids are identical under any partitioning;
   *  - distance ties break toward the lower cell id.
   *
   * Scale shape: assignment is a NARROW projection — the k·d centroid
   * literals ride the closure (k·d doubles, the classic broadcast-side
-  * size), each row folds its own distance array, zero shuffle. The update
-  * is one map-side-combined (cell, dim) aggregate whose result is k·d
-  * rows collected to the driver — the sanctioned fit-stats collect (same
-  * contract as quantile-clip / robust-scale fitting). Per iteration the
-  * corpus is scanned once; nothing corpus-mass shuffles.
+  * size), each row folds its own distance array, zero shuffle; nothing
+  * corpus-mass shuffles.
   */
 object KMeans {
 
@@ -63,44 +58,6 @@ object KMeans {
     dfq.withColumn("best", array_min(scored))
       .select(col(idCol), col("xq"),
         col("best.cell").as("cell"), col("best.d2").as("dist2"))
-  }
-
-  /** One centroid update from an assignment: per-(cell, dim) exact long
-    * sums and counts, collected (k·d rows) and divided driver-side. Cells
-    * that lost every vector keep their previous centroid.
-    */
-  def updateCentroids(assigned: DataFrame, prev: Seq[Array[Double]]): Array[Array[Double]] = {
-    val sums = assigned
-      .select(col("cell"), posexplode(col("xq")).as(Seq("dim", "v")))
-      .groupBy("cell", "dim")
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    prev.zipWithIndex.map { case (old, cell) =>
-      old.indices.map { dim =>
-        sums.get((cell, dim))
-          .map { case (s, n) => s.toDouble / n }
-          .getOrElse(old(dim))
-      }.toArray
-    }.toArray
-  }
-
-  /** Full Lloyd loop: `iters` assign→update rounds, then a final
-    * assignment against the trained centroids. Returns the assignment
-    * table (id, cell, dist2) and the centroids.
-    */
-  def lloyd(df: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int,
-            scale: Int = 1000): (DataFrame, Array[Array[Double]]) = {
-    require(k > 0 && iters >= 0)
-    val dfq = quantized(df, idCol, vecCol, scale).localCheckpoint(false)
-    var cents = seedCentroids(dfq, idCol, k)
-    var i = 0
-    while (i < iters) {
-      cents = updateCentroids(assign(dfq, idCol, cents), cents)
-      i += 1
-    }
-    (assign(dfq, idCol, cents).drop("xq"), cents)
   }
 
   /** Simplified silhouette (the centroid-based form of Rousseeuw 1987,

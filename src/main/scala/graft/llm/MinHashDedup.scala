@@ -272,71 +272,6 @@ object MinHashDedup {
     if (materialize) signedLazy.localCheckpoint(false) else signedLazy
   }
 
-  /** Persist a signature table as the BUCKETED store the nightly
-    * incremental path consumes without re-shuffling history — pay the
-    * store-side shuffle ONCE at write time (the [[graft.ops.Partitioning]]
-    * bucketing discipline). Layout:
-    *  - `<prefix>_bands` (bkey, id): one row per (band, doc), bucketed AND
-    *    bucket-sorted by `bkey` (= band_idx ':' band_key folded into one
-    *    column so it can be both the bucket key and the whole join key) —
-    *    candidate generation joins the batch's band rows against this with
-    *    the exchange + sort landing on the BATCH side only;
-    *  - `<prefix>_sigs` (id, sig, hs): bucketed by id — the verification
-    *    fetch for store-side members and the stale-row anti-join read the
-    *    store co-partitioned, never exchanging it.
-    */
-  def writeSignatureStore(sigs: DataFrame, idCol: String, prefix: String,
-      numBuckets: Int, numHashes: Int = 12, numBands: Int = 4): Unit = {
-    val b = bands(sigs, idCol, "sig", numBands, numHashes / numBands)
-      .select(concat_ws(":", col("band_idx"), col("band_key")).as("bkey"), col(idCol))
-    graft.ops.Partitioning.writeBucketed(b, s"${prefix}_bands", Seq("bkey"), numBuckets, Seq("bkey"))
-    graft.ops.Partitioning.writeBucketed(sigs.select(col(idCol), col("sig"), col("hs")),
-      s"${prefix}_sigs", Seq(idCol), numBuckets, Seq(idCol))
-  }
-
-  /** [[incrementalPairsFromSigs]] against a bucketed store
-    * ([[writeSignatureStore]]): same output relation — pairs with ≥ one
-    * side in the batch, verified Jaccard ≥ threshold, stale re-crawled
-    * store rows never pairing — but O(batch) shuffle mass. The store-side
-    * scans arrive hash-partitioned by their bucket keys, so every join
-    * against history runs exchange-free on the store side:
-    *  - batch × store candidates: equi-join on `bkey`; the batch's band
-    *    rows are shuffled/sorted to the store's bucket layout (batch-sized);
-    *  - re-crawl exclusion: filtered POST-join on the candidate set
-    *    (candidate-sized) instead of anti-joining the whole store;
-    *  - batch × batch candidates: [[candidatePairs]] over the batch's own
-    *    band rows (batch-sized groupBy, no store involvement);
-    *  - verification: store `hs` fetched through the id-bucketed sig table
-    *    (stale rows anti-joined out id-co-partitioned, exchange-free).
-    * No exact-set collapse here: the store is already exact-deduped by
-    * construction, so groups would be singletons and the collapse pure
-    * fixed cost (the `CorpusPipeline.scrub` reasoning).
-    */
-  def incrementalPairsBucketed(newSigs: DataFrame, storeBands: DataFrame,
-      storeSigs: DataFrame, idCol: String,
-      numHashes: Int = 12, numBands: Int = 4, threshold: Double = 0.5): DataFrame = {
-    val newBands = bands(newSigs, idCol, "sig", numBands, numHashes / numBands)
-      .select(concat_ws(":", col("band_idx"), col("band_key")).as("bkey"), col(idCol))
-      .localCheckpoint(false) // store join + intra-batch pairs
-    val candNS = newBands.select(col("bkey"), col(idCol).as("id_new"))
-      .join(storeBands.select(col("bkey"), col(idCol).as("id_store")), "bkey")
-      .filter(col("id_new") =!= col("id_store"))
-      .select("id_new", "id_store").distinct()
-      .join(newSigs.select(col(idCol).as("id_store")), Seq("id_store"), "left_anti")
-    val candNN = candidatePairs(
-      newBands.select(col("bkey").as("band_key"), lit(0).as("band_idx"), col(idCol)), idCol)
-    val pairsAll = candNS.select(
-        least(col("id_new"), col("id_store")).as("id_a"),
-        greatest(col("id_new"), col("id_store")).as("id_b"))
-      .unionByName(candNN).distinct()
-    // fresh batch signatures shadow stale store rows for re-crawled ids
-    val verifySource = storeSigs.select(col(idCol), col("hs"))
-      .join(newSigs.select(col(idCol)), Seq(idCol), "left_anti")
-      .unionByName(newSigs.select(col(idCol), col("hs")))
-    verifyJaccard(pairsAll, verifySource, idCol, "hs")
-      .filter(col("jaccard") >= threshold)
-  }
-
   /** Incremental near-dup detection: pairs between a NEW batch and the
     * union of an existing signature store and the batch itself — the
     * daily-crawl shape, where the historical corpus is already deduped so

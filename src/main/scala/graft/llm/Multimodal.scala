@@ -45,10 +45,6 @@ object Multimodal {
   trait Codec extends Serializable {
     def decodeDims(payload: Array[Byte]): (Int, Int)
     def extractFeatures(payload: Array[Byte], n: Int): Array[Float]
-    /** Resize: returns the transformed payload for (w, h). The fake keeps
-      * bytes deterministic; a real codec would re-encode pixels.
-      */
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte]
   }
 
   /** Deterministic stand-in: "dimensions" and "features" derived from byte
@@ -68,21 +64,8 @@ object Multimodal {
       }
       out
     }
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] =
-      (s"resized:${w}x$h:".getBytes("UTF-8") ++ payload).take(math.max(16, w * h / 1000))
   }
 
-  /** Real image codec on the JDK's own `javax.imageio` (PNG/JPEG/GIF/BMP —
-    * zero extra dependencies). Decode failures follow the HTTP source's
-    * error→null discipline in-band: undecodable payloads yield (-1, -1)
-    * dims / empty features / null payload rather than failing the task —
-    * at 100 TB a fraction of corrupt blobs is a certainty, and one bad
-    * byte string must not kill a 10-hour decode pass.
-    *
-    * Feature extraction is an n-cell mean-luminance grid (the classic
-    * thumbnail-embedding baseline): deterministic, resolution-independent,
-    * and cheap enough to run inline with the decode.
-    */
   /** The n-cell mean-luminance grid shared by every image codec (the
     * classic thumbnail-embedding baseline): deterministic, resolution-
     * independent, and the fixed arithmetic both [[dHash]] and the
@@ -116,6 +99,13 @@ object Multimodal {
     out
   }
 
+  /** Real image codec on the JDK's own `javax.imageio` (PNG/JPEG/GIF/BMP —
+    * zero extra dependencies). Decode failures follow the HTTP source's
+    * error→null discipline in-band: undecodable payloads yield (-1, -1)
+    * dims / empty features rather than failing the task — at 100 TB a
+    * fraction of corrupt blobs is a certainty, and one bad byte string
+    * must not kill a 10-hour decode pass. Features are the [[lumaGrid]].
+    */
   object ImageIoCodec extends Codec {
     private def read(payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
       try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload)))
@@ -128,22 +118,6 @@ object Multimodal {
       read(payload) match {
         case None => Array.empty[Float]
         case Some(im) => lumaGrid(im, n)
-      }
-
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] =
-      read(payload) match {
-        case None => null
-        case Some(im) =>
-          val dst = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = dst.createGraphics()
-          try {
-            g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g.drawImage(im, 0, 0, w, h, null)
-          } finally g.dispose()
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(dst, "png", bos)
-          bos.toByteArray
       }
   }
 
@@ -219,37 +193,6 @@ object Multimodal {
         case None => Array.empty[Float]
         case Some(im) => lumaGrid(im, n)
       }
-
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] =
-      parse(payload) match {
-        case None => null
-        case Some(im) =>
-          val dst = new java.awt.image.BufferedImage(w, h,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = dst.createGraphics()
-          try {
-            g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g.drawImage(im, 0, 0, w, h, null)
-          } finally g.dispose()
-          val header = s"P6\n$w $h\n255\n".getBytes("US-ASCII")
-          val out = new Array[Byte](header.length + w * h * 3)
-          System.arraycopy(header, 0, out, 0, header.length)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = dst.getRGB(x, y)
-              val o = header.length + (y * w + x) * 3
-              out(o) = ((rgb >> 16) & 0xFF).toByte
-              out(o + 1) = ((rgb >> 8) & 0xFF).toByte
-              out(o + 2) = (rgb & 0xFF).toByte
-              x += 1
-            }
-            y += 1
-          }
-          out
-      }
   }
 
   /** Magic-byte codec dispatch — the multi-format corpus entry point a
@@ -268,8 +211,6 @@ object Multimodal {
       pick(payload).decodeDims(payload)
     def extractFeatures(payload: Array[Byte], n: Int): Array[Float] =
       pick(payload).extractFeatures(payload, n)
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] =
-      pick(payload).resize(payload, w, h)
   }
 
   private val syntheticSchema = StructType(Seq(
@@ -545,29 +486,6 @@ object Multimodal {
       }
     }
     spark.createDataFrame(rdd, decodedSchema)
-  }
-
-  private val resizedSchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType)))
-
-  /** Batch resize to a target box: same iterator-batched shape; output
-    * payload replaces the input (write it back with an upsert by
-    * media_id). Partition sizing note: cap input split bytes
-    * (`spark.sql.files.maxPartitionBytes`) so a task holds ≤ one batch of
-    * decoded frames.
-    */
-  def resizeTo(media: DataFrame, codec: Codec, w: Int, h: Int,
-      batchSize: Int = 64): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("media_id"), col("payload")).rdd.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.map { r =>
-        Row(r.getLong(0), codec.resize(r.getAs[Array[Byte]](1), w, h), w, h)
-      })
-    }
-    spark.createDataFrame(rdd, resizedSchema)
   }
 
   private val hashedSchema = StructType(Seq(

@@ -797,20 +797,6 @@ object TextAnalysis {
         col("__sc.n_after").as("n_after"), col("__sc.scrubbed").as("scrubbed"))
   }
 
-  /** Convenience: attach the standard analysis columns to a corpus. */
-  def analyze(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    val en = langStopwords.head._2
-    docs
-      .withColumn("n_tokens", tokenCount(t))
-      .withColumn("n_bpe_tokens", regexTokenCount(t))
-      .withColumn("stopword_ratio", stopwordRatio(t, en))
-      .withColumn("avg_word_len", avgWordLen(t))
-      .withColumn("quality", qualityScore(t, en))
-      .withColumn("lang_pred", langId(t))
-      .withColumn("fingerprint", fingerprint(t))
-  }
-
   /** Vocabulary overlap between corpus slices: per unordered group pair,
     * the Jaccard and containment of their distinct-term sets — the
     * mix-curation audit that says whether two sources actually bring

@@ -193,99 +193,6 @@ object GraphRank {
     }
   }
 
-  /** [[pageRankFixedPoint]] with delta-threshold early exit — the library
-    * mode for production graphs, where a fixed iteration count either
-    * overshoots (wasted rounds × one edge-keyed shuffle each, the whole
-    * marginal cost of this operator at 100 TB) or undershoots silently.
-    * Runs the identical integer recurrence, but after each round reads
-    * max |pr_t − pr_{t−1}| with a 1-row aggregate (the
-    * [[Hierarchy.resolveRoots]] convergence idiom — the rank tables on
-    * both sides of the delta join come out of hash(`node`) aggregates,
-    * so the join is co-partitioned and adds no exchange) and stops once
-    * the max delta is ≤ `deltaThreshold` or `maxIterations` is hit.
-    *
-    * Returns (ranks, roundsRun). The result equals
-    * `pageRankFixedPoint(edges, roundsRun, scaleTotal)` EXACTLY (same
-    * recurrence, just a measured stopping rule), and differs from the
-    * true fixed point by at most ~deltaThreshold/(1−0.85) per node
-    * (geometric damping bound). The fixed-iteration form stays the
-    * oracle surface — an engine-independent replay needs a static
-    * unroll; this form is for callers who want the answer, not the
-    * replay.
-    */
-  def pageRankConverged(edges: DataFrame, deltaThreshold: Long,
-                        maxIterations: Int = 50,
-                        scaleTotal: Long = 1000000000000L): (DataFrame, Int) = {
-    require(deltaThreshold >= 0, "deltaThreshold must be non-negative")
-    require(maxIterations >= 1, "maxIterations must be positive")
-    val (eDeg, nodes0) = degreeJoinedEdges(edges)
-    val nodes = nodes0.localCheckpoint(true)
-    val n = nodes.count()
-    require(n > 0, "empty graph")
-    val init = scaleTotal / n
-    val tele = nodes.withColumn("tele", lit((15L * init) / 100L))
-    val out = convergedLoop(eDeg, tele, nodes.withColumn("pr", lit(init)),
-      deltaThreshold, maxIterations)
-    eDeg.unpersist(false)
-    out
-  }
-
-  /** [[personalizedPageRank]] with the same delta-threshold early exit as
-    * [[pageRankConverged]] — seed-conditional teleport, measured stopping
-    * rule, (ranks, roundsRun) result.
-    */
-  def personalizedPageRankConverged(edges: DataFrame, seeds: DataFrame,
-                                    deltaThreshold: Long,
-                                    maxIterations: Int = 50,
-                                    scaleTotal: Long = 1000000000000L): (DataFrame, Int) = {
-    require(deltaThreshold >= 0, "deltaThreshold must be non-negative")
-    require(maxIterations >= 1, "maxIterations must be positive")
-    val (eDeg, nodes0) = degreeJoinedEdges(edges)
-    val seedCol = seeds.columns.head
-    val nodes = nodes0
-      .join(seeds.select(col(seedCol).cast("long").as("node"))
-        .distinct().withColumn("__seed", lit(true)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__seed"), lit(false)).as("__seed"))
-      .localCheckpoint(true)
-    val nSeeds = nodes.filter(col("__seed")).count()
-    require(nSeeds > 0, "no seed is a graph node")
-    val init = scaleTotal / nSeeds
-    val teleport = (15L * init) / 100L
-    val tele = nodes.select(col("node"),
-      when(col("__seed"), lit(teleport)).otherwise(lit(0L)).as("tele"))
-    val ranks0 = nodes.select(col("node"),
-      when(col("__seed"), lit(init)).otherwise(lit(0L)).as("pr"))
-    val out = convergedLoop(eDeg, tele, ranks0, deltaThreshold, maxIterations)
-    eDeg.unpersist(false)
-    out
-  }
-
-  /** The shared early-exit loop: step, checkpoint (the convergence read
-    * is an action anyway, so every round is eager and lineage stays
-    * O(1)), read the 1-row max-delta, stop on threshold or iteration
-    * cap. The delta join keys both sides on `node` straight out of
-    * hash-aggregates — co-partitioned, no extra exchange; the per-round
-    * added cost over the fixed loop is one node-table-sized join + a
-    * 1-row aggregate, paid to save whole edge-shuffle rounds.
-    */
-  private def convergedLoop(eDeg: DataFrame, tele: DataFrame, ranks0: DataFrame,
-                            deltaThreshold: Long, maxIterations: Int): (DataFrame, Int) = {
-    var ranks = ranks0.localCheckpoint(true)
-    var i = 0
-    var converged = false
-    while (!converged && i < maxIterations) {
-      val next = step(eDeg, tele, ranks).localCheckpoint(true)
-      i += 1
-      val delta = next
-        .join(ranks.select(col("node"), col("pr").as("__prev")), Seq("node"))
-        .agg(coalesce(max(abs(col("pr") - col("__prev"))), lit(0L)))
-        .first().getLong(0)
-      converged = delta <= deltaThreshold
-      ranks = next
-    }
-    (ranks, i)
-  }
-
   /** One PageRank iteration. Steady-state dataflow is ONE exchange: the
     * contribution join is co-partitioned (eDeg cached hash(`src`); `ranks`
     * comes out of the previous round's aggregate hash(`node`) — the
@@ -324,36 +231,17 @@ object GraphRank {
     * in link graphs, power-user cores in interaction graphs, and the
     * pruning step before more expensive community detection.
     *
-    * [[kCorePeeled]] runs EXACTLY `rounds` peel iterations — the
-    * engine-replayable form (a DuckDB oracle unrolls the same rounds);
-    * [[kCore]] peels to the fixpoint with the 1-row convergence read
-    * ([[Hierarchy.resolveRoots]] idiom) and a round cap.
+    * Runs EXACTLY `rounds` peel iterations — the engine-replayable form (a
+    * DuckDB oracle unrolls the same rounds) — and returns the surviving
+    * (node, deg) table of the edge set after the last round, filtered to
+    * deg ≥ k. Equal to the true k-core once `rounds` reaches the peel
+    * depth (KCoreSpec proves it against a sequential peel).
     *
     * Scale shape per round: one map-side-combined degree aggregate over
     * the current edge set + two semi-joins (src side, dst side) against
     * the |survivors|-sized node table — AQE broadcasts it as it shrinks.
     * Rounds are checkpointed so lineage stays O(1); each round's edge set
     * only ever shrinks, so total work is bounded by rounds × |edges|.
-    */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
-    require(k >= 1 && maxRounds >= 1)
-    var e = canonicalUndirected(edges).localCheckpoint(true)
-    var m = e.count()
-    var round = 0
-    var stable = false
-    while (!stable && round < maxRounds && m > 0) {
-      val next = peelOnce(e, k).localCheckpoint(true)
-      val m2 = next.count()
-      stable = m2 == m
-      e = next; m = m2; round += 1
-    }
-    degreesOf(e).filter(col("deg") >= k)
-  }
-
-  /** Exactly `rounds` peel iterations (see [[kCore]]); returns the
-    * surviving (node, deg) table of the edge set after the last round,
-    * filtered to deg ≥ k. Equal to the true k-core once `rounds` reaches
-    * the peel depth (KCoreSpec proves it against [[kCore]]).
     */
   def kCorePeeled(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
@@ -375,40 +263,16 @@ object GraphRank {
     * than modularity optimization, and the standard pre-grouping before
     * expensive per-community work.
     *
-    * [[labelPropagationPinned]] runs exactly `rounds` synchronous updates
-    * (the oracle-replayable form — a DuckDB oracle unrolls the same
-    * recurrence); [[labelPropagation]] iterates to label-stability with
-    * the 1-row convergence read and a round cap (synchronous LPA can
-    * 2-cycle on bipartite structures — the cap, not convergence, is the
-    * guarantee there; pinned rounds sidestep it entirely).
+    * Runs exactly `rounds` synchronous updates — the oracle-replayable
+    * form (a DuckDB oracle unrolls the same recurrence); pinned rounds also
+    * sidestep the 2-cycles synchronous LPA can fall into on bipartite
+    * structures. Returns (node, label).
     *
     * Scale shape per round: labels join the symmetrized edge list on the
     * neighbor key (co-partitioned with the previous round's aggregate),
     * one map-side-combined (node, label) count, one argmax aggregate via
     * max(struct(cnt, −label)) — two exchanges per round, all fixed-width
     * longs, checkpointed lineage.
-    */
-  def labelPropagation(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
-    require(maxRounds >= 1)
-    val (sym, labels0) = lpaInit(edges)
-    var labels = labels0
-    var round = 0
-    var stable = false
-    while (!stable && round < maxRounds) {
-      val next = lpaStep(sym, labels).localCheckpoint(true)
-      val changed = next.join(labels.withColumnRenamed("label", "__prev"), Seq("node"))
-        .agg(coalesce(sum(when(col("label") =!= col("__prev"), 1L)
-          .otherwise(0L)), lit(0L)))
-        .first().getLong(0)
-      stable = changed == 0
-      labels = next
-      round += 1
-    }
-    labels
-  }
-
-  /** Exactly `rounds` synchronous LPA updates (see [[labelPropagation]]);
-    * returns (node, label).
     */
   def labelPropagationPinned(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1)
@@ -596,84 +460,22 @@ object GraphRank {
   }
 
   /** Per-node triangle counts over an undirected graph, by degree-ordered
-    * edge orientation — the O(m^1.5) bound from Schank & Wagner / the
-    * MapReduce formulation in Suri & Vassilvitskii (WWW'11), and the
-    * standard way to count triangles without letting a high-degree hub
-    * enumerate C(deg, 2) wedges on one task.
+    * edge orientation (Schank & Wagner; Suri & Vassilvitskii, WWW'11) and
+    * adjacency-list intersection. Input edges are canonicalized
+    * (undirected, deduped, self-loops dropped), then each edge is oriented
+    * from its lower-(degree, id) endpoint to the higher one, which caps
+    * every out-degree at O(√m) however skewed the raw degrees are. For each
+    * oriented edge (a,b), the triangles it closes are exactly N⁺(a) ∩ N⁺(b)
+    * — and because a triangle x<y<z (degree order) has edges x→y, x→z,
+    * y→z, only its (x,y) edge finds it (z ∉ N⁺(z), and y ∉ N⁺(z)), so each
+    * triangle is counted once, then attributed to all three corners (a, b,
+    * and every intersection element).
     *
-    * Input edges are canonicalized (undirected, deduped, self-loops
-    * dropped), then each edge is oriented from its lower-(degree, id)
-    * endpoint to the higher one. Every triangle then has exactly one
-    * "apex" node with two out-edges, so wedges are generated by a
-    * self-join on the apex — and because orientation caps out-degree at
-    * O(√m), wedge volume is O(m^1.5) no matter how skewed the raw degree
-    * distribution is (a hub of degree d contributes wedges only at its
-    * *low-degree* neighbors). A final join against the oriented edge list
-    * closes each wedge; each triangle is found exactly once, then
-    * attributed to all three corners.
-    *
-    * Plan: degrees = one groupBy on the canonical edges; wedges = one
-    * hash self-join on apex; closure = one hash join on (lo, hi); corner
-    * attribution = one groupBy. Everything shuffles fixed-width long
-    * pairs; nothing is collected.
-    *
-    * Returns (node BIGINT, tri_cnt BIGINT) for nodes in ≥1 triangle.
-    */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    // canonical undirected edge set: u < v, distinct, no self-loops
-    val e = edges.select(
-      least(col("src").cast("long"), col("dst").cast("long")).as("u"),
-      greatest(col("src").cast("long"), col("dst").cast("long")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-    val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-
-    // orient by (degree, id): lower endpoint -> higher endpoint
-    val oriented = e
-      .join(deg.withColumnRenamed("node", "u").withColumnRenamed("deg", "du"), "u")
-      .join(deg.withColumnRenamed("node", "v").withColumnRenamed("deg", "dv"), "v")
-      .select(
-        when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-          col("u")).otherwise(col("v")).as("a"),
-        when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-          col("v")).otherwise(col("u")).as("b"))
-      .localCheckpoint(true)
-
-    // wedges from each apex's out-neighbor pairs (b < c canonically so the
-    // closing edge lookup is a single canonical-form probe)
-    val o1 = oriented.select(col("a"), col("b").as("n1"))
-    val o2 = oriented.select(col("a"), col("b").as("n2"))
-    val wedges = o1.join(o2, "a")
-      .filter(col("n1") < col("n2"))
-      .select(col("a"), least(col("n1"), col("n2")).as("lo"),
-        greatest(col("n1"), col("n2")).as("hi"))
-
-    val closing = oriented.select(
-      least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-    val triangles = wedges.join(closing, Seq("lo", "hi"))
-
-    triangles.select(col("a").as("node"))
-      .union(triangles.select(col("lo").as("node")))
-      .union(triangles.select(col("hi").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("tri_cnt"))
-  }
-
-  /** [[triangleCounts]] without the wedge materialization: per-node triangle
-    * counts by adjacency-list intersection over the same degree-ordered
-    * orientation. For each oriented edge (a,b), the triangles it closes are
-    * exactly N⁺(a) ∩ N⁺(b) — and because a triangle x<y<z (degree order)
-    * has edges x→y, x→z, y→z, only its (x,y) edge finds it (z ∉ N⁺(z), and
-    * y ∉ N⁺(z)), so each triangle is counted once, then attributed to all
-    * three corners (a, b, and every intersection element).
-    *
-    * Why this beats the wedge form: the wedge join materializes and
-    * shuffles O(Σ C(outdeg,2)) = O(m^1.5) rows before the closing join
-    * prunes them; here the shuffled volume is the m adjacency rows (each ≤
-    * O(√m) longs wide, the orientation bound) and intersections run
-    * in-memory per edge inside one join stage. Same asymptotic bound,
-    * ~constant-factor less exchange — and no 10⁸-row wedge table on dense
-    * inputs. Returns (node BIGINT, tri_cnt BIGINT) for nodes in ≥1 triangle.
+    * No wedge table: a wedge self-join on the apex would materialize and
+    * shuffle O(Σ C(outdeg,2)) = O(m^1.5) rows before a closing join prunes
+    * them; here the shuffled volume is the m adjacency rows (each ≤ O(√m)
+    * longs wide) and intersections run in-memory per edge inside one join
+    * stage. Returns (node BIGINT, tri_cnt BIGINT) for nodes in ≥1 triangle.
     */
   def triangleCountsAdjacency(edges: DataFrame): DataFrame = {
     val e = edges.select(
@@ -725,8 +527,7 @@ object GraphRank {
     * whole run by rounds × |edges|. (A frontier-only delta — joining just
     * the nodes discovered last round — halves the join input on
     * small-diameter graphs; the full-table form keeps the recurrence
-    * identical to the oracle's and the monotone-min semantics shared with
-    * [[bfsHops]].)
+    * identical to the oracle's.)
     */
   def bfsHopsPinned(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be non-negative")
@@ -743,30 +544,6 @@ object GraphRank {
     while (i < rounds) {
       dist = bfsStep(e, dist).localCheckpoint(true)
       i += 1
-    }
-    dist
-  }
-
-  /** [[bfsHopsPinned]] iterated to the reachability fixpoint: stops when a
-    * round discovers no new node (reached distances are final in an
-    * unweighted graph, so "no growth" IS convergence — a 1-row count read
-    * per round, the [[kCore]] idiom), with `maxRounds` as the safety cap.
-    */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, maxRounds: Int = 64): DataFrame = {
-    require(maxRounds >= 1)
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .repartition(col("src")).localCheckpoint(true)
-    var dist = seeds.select(col("node").cast("long").as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    var n = dist.count()
-    var round = 0
-    var stable = false
-    while (!stable && round < maxRounds) {
-      val next = bfsStep(e, dist).localCheckpoint(true)
-      val n2 = next.count()
-      stable = n2 == n
-      dist = next; n = n2; round += 1
     }
     dist
   }

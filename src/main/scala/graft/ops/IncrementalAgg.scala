@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: each refresh costs one aggregate of the NEW batch plus a
   * keyed merge against the state — never a rescan of history. The merge is
   * a union + re-aggregate (one shuffle of state ∪ batch-partials); with the
-  * state persisted bucketed by key ([[Partitioning.writeBucketed]]) the
+  * state persisted bucketed by key (`DataFrameWriter.bucketBy`) the
   * state side ships no rows at all and the refresh cost is O(batch).
   */
 object IncrementalAgg {

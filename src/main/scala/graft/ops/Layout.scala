@@ -35,55 +35,19 @@ object Layout {
     terms.reduce(_.bitwiseOR(_)).cast("long")
   }
 
-  /** 2-D Hilbert curve index (order 2^bits) as a pure integer Column
-    * expression — the locality-superior alternative to [[zValue]]: the
+  /** The full 2^bits × 2^bits Hilbert curve as a DIMENSION table
+    * (hx, hy, hval) — the locality-superior alternative to [[zValue]]: the
     * Hilbert walk never takes the long diagonal jumps the Z curve takes
     * at quadrant boundaries, so equal-size curve ranges touch fewer
     * distinct row-group rectangles (Faloutsos & Roseman 1989 — the
-    * classic data-layout result). The standard rotate-and-accumulate
-    * xy2d loop, unrolled `bits` times; every step is shift/and/xor/
-    * conditional integer arithmetic inside whole-stage codegen — no UDF.
-    *
-    * Inputs must already sit on the [0, 2^bits) lattice (the
-    * [[quantizeN]]/pmod contract, same as [[zValue]]).
-    *
-    * CAVEAT — expression form only for SMALL orders: each unrolled round
-    * references the previous round's x AND y expressions 2-3×, so the
-    * tree is Θ(3^bits) and falls out of codegen past ~5 bits (measured:
-    * bits = 8 ran 200× slower than [[zValue]]). For real lattices use
-    * [[hilbertLattice]] + a broadcast join — the correct 100 TB shape
-    * anyway (a 2^2b-row curve dimension, megabytes at b = 8).
-    */
-  def hilbertValue(xCol: Column, yCol: Column, bits: Int): Column = {
-    require(bits >= 1 && bits <= 5, s"bits in [1,5] for the expression " +
-      s"form (Θ(3^bits) tree — see hilbertLattice for larger), got $bits")
-    val n = 1L << bits
-    var x = xCol.cast("long")
-    var y = yCol.cast("long")
-    var d: Column = lit(0L)
-    var s = n >> 1
-    while (s > 0) {
-      val rx = when(x.bitwiseAND(lit(s)) > 0, 1L).otherwise(0L)
-      val ry = when(y.bitwiseAND(lit(s)) > 0, 1L).otherwise(0L)
-      d = d + lit(s * s) * (lit(3L) * rx).bitwiseXOR(ry)
-      // rotate the quadrant frame: reflect when rx = 1, then swap axes
-      // (only when ry = 0) — new coords read the OLD x/y
-      val nx = when(ry === 0L,
-        when(rx === 1L, lit(n - 1) - y).otherwise(y)).otherwise(x)
-      val ny = when(ry === 0L,
-        when(rx === 1L, lit(n - 1) - x).otherwise(x)).otherwise(y)
-      x = nx; y = ny
-      s >>= 1
-    }
-    d
-  }
-
-  /** The full 2^bits × 2^bits Hilbert curve as a DIMENSION table
-    * (hx, hy, hval) — the scale path for [[hilbertValue]]: driver-built
-    * (a pure integer function, 65 536 rows ≈ 1.5 MB at bits = 8 — the
-    * BPE-merge-table / quantile-fit contract), broadcast-joined under
-    * the fact table on the lattice key. One broadcast hash join beats a
-    * Θ(3^bits) expression in codegen AND on the wire.
+    * classic data-layout result). Driver-built with the standard
+    * rotate-and-accumulate xy2d loop (a pure integer function, 65 536
+    * rows ≈ 1.5 MB at bits = 8 — the BPE-merge-table / quantile-fit
+    * contract), broadcast-joined under the fact table on the lattice key
+    * (inputs on the [0, 2^bits) lattice, the [[zValue]] contract). An
+    * unrolled Column expression would be a Θ(3^bits) tree that falls out
+    * of codegen past ~5 bits; one broadcast hash join beats it in codegen
+    * AND on the wire.
     */
   def hilbertLattice(spark: org.apache.spark.sql.SparkSession,
       bits: Int): DataFrame = {

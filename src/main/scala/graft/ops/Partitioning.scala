@@ -134,16 +134,4 @@ object Partitioning {
       else greatest(weighted: _*).getField("s")
     df.withColumn(outCol, pick)
   }
-
-  /** Write a table bucketed (and optionally sorted) by its join key. Later
-    * equi-joins/aggregations between tables bucketed the same way run
-    * without a shuffle (`SortMergeJoin` over pre-sorted buckets).
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-      numBuckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(table)
-  }
 }

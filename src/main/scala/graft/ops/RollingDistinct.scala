@@ -115,31 +115,4 @@ object RollingDistinct {
         hll_sketch_estimate(col("__sk")).as("u_day_approx"),
         hll_sketch_estimate(col("__msk")).as("u_trail_approx")): _*)
   }
-
-  /** Incremental refresh of the daily-sketch store behind
-    * [[trailingDistinctApprox]]: fold a new batch of raw events into an
-    * existing (keys…, dayCol, sketchCol) table without ever rescanning
-    * history — the batch aggregates to its own daily sketches (the only
-    * batch-mass work), then ONE keyed union-merge against the store.
-    * HLL union is order- and duplicate-insensitive (per-bucket max), so
-    * any batch arrival order — including replays — converges to exactly
-    * the sketch a one-shot build produces; with the store written
-    * bucketed by key ([[Partitioning.writeBucketed]]) the merge shuffles
-    * only the batch partials. Late events just land in their day's
-    * sketch — no window recomputation, because windows are derived from
-    * the daily table at read time.
-    */
-  def mergeDailySketches(store: DataFrame, batch: DataFrame, keys: Seq[String],
-                         dayCol: String, idCol: String, sketchCol: String,
-                         lgConfigK: Int = 12): DataFrame = {
-    val kc = keys.map(col)
-    val batchSk = batch
-      .select(kc :+ col(dayCol) :+ col(idCol).as("__id"): _*)
-      .groupBy(kc :+ col(dayCol): _*)
-      .agg(hll_sketch_agg(col("__id"), lit(lgConfigK)).as(sketchCol))
-    store.select(kc :+ col(dayCol) :+ col(sketchCol): _*)
-      .unionByName(batchSk)
-      .groupBy(kc :+ col(dayCol): _*)
-      .agg(hll_union_agg(col(sketchCol)).as(sketchCol))
-  }
 }

@@ -99,10 +99,10 @@ object Sketches {
     * distinct counting). Keys present on one side pass through unchanged.
     *
     * Scale shape: one full-outer join on the store key. With the store
-    * written bucketed on `keyCols` ([[Partitioning.writeBucketed]]) the
+    * written bucketed on `keyCols` (`DataFrameWriter.bucketBy`) the
     * store side joins exchange-free — only the (small) delta shuffles —
-    * the same layout contract as `q_snapshot_diff` / the minhash signature
-    * store (pinned in SketchesSpec).
+    * the same layout contract as `q_snapshot_diff` (pinned in
+    * SketchesSpec).
     */
   def mergeSketchStores(store: DataFrame, delta: DataFrame,
                         keyCols: Seq[String]): DataFrame = {

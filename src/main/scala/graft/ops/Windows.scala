@@ -48,10 +48,6 @@ object Windows {
     df.withColumn(as, col(valueCol) / greatest(sum(col(valueCol)).over(w), lit(floor)))
   }
 
-  /** Generic partition aggregate attached to every row (no join, one shuffle). */
-  def partitionAgg(df: DataFrame, partitionCols: Seq[String], agg: Column, as: String): DataFrame =
-    df.withColumn(as, agg.over(Window.partitionBy(partitionCols.map(col): _*)))
-
   /** Recency-weighted (exponentially decayed) running average: at each row,
     * the average of the last `depth` values in the partition with weight
     * 2^−k on the value k steps back (half-life = one step), renormalized

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -111,9 +110,9 @@ object RelationalQueries {
     s"((((l_suppkey % 256) >> $k) & 1) << ${2 * k})")).mkString(" | ")
 
   /** q_hilbert_curve oracle: the 8 rotate-and-accumulate xy2d rounds
-    * unrolled as chained CTEs (mirrors [[graft.ops.Layout.hilbertValue]]
-    * at bits = 8, n = 256) — each round reads the PREVIOUS round's
-    * (x, y, d) columns, exactly like the Column fold.
+    * unrolled as chained CTEs (mirrors the xy2d loop of
+    * [[graft.ops.Layout.hilbertLattice]] at bits = 8, n = 256) — each round
+    * reads the PREVIOUS round's (x, y, d) columns.
     */
   private val hilbertSql: String = {
     val base = """WITH h0 AS (SELECT l_partkey % 256 AS x,

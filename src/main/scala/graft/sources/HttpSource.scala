@@ -83,18 +83,7 @@ object HttpSource {
     rows.toDF("key", "id")
   }
 
-  /** Per-id document fetch (S3): returns (id, body) with null body on fetch
-    * failure — the caller decides (filter, retry, dead-letter). Driver-side
-    * loop; for an id frontier that doesn't fit one machine's attention use
-    * [[fetchDocsDistributed]].
-    */
-  def fetchDocs(spark: SparkSession, client: Client, urlFor: String => String,
-      ids: Seq[String]): DataFrame = {
-    import spark.implicits._
-    ids.map(id => (id, client.get(urlFor(id)).orNull)).toDF("id", "body")
-  }
-
-  /** Distributed per-id document fetch: the ids arrive as a DataFrame
+  /** Per-id document fetch (S3): the ids arrive as a DataFrame
     * column and each partition fetches its slice with its own client —
     * the Spark mapping of the reference's 200-concurrent async batches
     * (`extractor/riot/tasks.py:70-90`): partition parallelism IS the
@@ -107,7 +96,8 @@ object HttpSource {
     * count or placement (no cross-executor coordination needed — the
     * quota shards like the data). `clientFactory` runs ON the executor,
     * once per partition, so real transports (connection pools, sockets)
-    * never need to serialize.
+    * never need to serialize. Returns (id, body) with null body on fetch
+    * failure — the caller decides (filter, retry, dead-letter).
     */
   def fetchDocsDistributed(ids: DataFrame, idCol: String,
       urlFor: String => String, clientFactory: () => Client,

@@ -2,9 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructType}
 
-/** Line-format ingest (JSONL / CSV) with explicit schemas and per-record
+/** Line-format ingest (JSONL) with explicit schemas and per-record
   * corrupt capture — the layer in front of any 100 TB lake: raw drops
   * arrive as text lines, and the ingest read must (a) never infer schema
   * (an inference pass is a full extra scan, and drift silently retypes
@@ -13,15 +13,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * (the reference guards each record fetch in `extractor/riot/tasks.py`
   * and routes failures to a retry queue — same contract, set-at-a-time).
   *
-  * Built as a plain text scan + `from_json`/`from_csv` projection rather
-  * than `spark.read.json/csv` with `columnNameOfCorruptRecord`: the
+  * Built as a plain text scan + `from_json` projection rather
+  * than `spark.read.json` with `columnNameOfCorruptRecord`: the
   * DataSource corrupt column is load-bearing for the parser's column
   * pruning, so Spark REFUSES any query whose referenced columns reduce
   * to it alone (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN —
   * e.g. the natural `filter(corrupt IS NOT NULL).count()` quarantine
   * audit, unless the caller remembers to cache first). The projection
-  * form has the same per-record PERMISSIVE semantics (same Jackson/
-  * Univocity parsers underneath), stays a narrow map over the text scan
+  * form has the same per-record PERMISSIVE semantics (same Jackson
+  * parser underneath), stays a narrow map over the text scan
   * (no shuffle, pruning-safe), and composes with any downstream query.
   *
   * Contract: a malformed line yields nulls for the data columns and the
@@ -67,51 +67,4 @@ object TextIngest {
       spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
         .text(path),
       schema, corruptCol)
-
-  /** CSV read with the same contract (plus header/separator control).
-    * Per-line strictness: an untypeable cell OR token-count drift marks
-    * the record corrupt (`from_csv` is stricter here than the DataSource
-    * CSV reader, which null-fills short rows and drops extras — for an
-    * ingest gate the strict form is the safer default: column drift is a
-    * schema change you want counted, not silently absorbed).
-    *
-    * Two caveats of the header=true line-reader trick below:
-    *   - U+0001 is the sentinel separator, so a data line that CONTAINS
-    *     a literal U+0001 byte splits into multiple cells and surfaces as
-    *     a corrupt record (extra columns) rather than parsing. U+0001
-    *     cannot appear in valid delimited text, so this is the intended
-    *     strict outcome, but binary-contaminated files will count corrupt
-    *     rather than round-trip.
-    *   - the CSV source DROPS fully blank lines (the text-source path for
-    *     header=false keeps them as empty strings, which then parse to a
-    *     corrupt record). With header=true, blank lines are therefore
-    *     invisible to the corrupt-row accounting — byte-identical row
-    *     audits should use header=false and strip the header upstream.
-    */
-  def readCsv(spark: SparkSession, path: String, schema: StructType,
-              header: Boolean = false, sep: String = ",",
-              corruptCol: String = "_corrupt_record"): DataFrame = {
-    val full = schema.add(corruptCol, StringType)
-    val opts = Map("mode" -> "PERMISSIVE", "sep" -> sep,
-      "columnNameOfCorruptRecord" -> corruptCol)
-    // header=true: let the CSV *source* drop the header — it skips the
-    // first line of EACH file (multi-file paths included), where any
-    // value-equality filter over a text read would also drop data rows
-    // that happen to equal the header text. The source is only used as a
-    // per-file line reader here: a sentinel separator that cannot occur
-    // in CSV text keeps each physical line one string cell, and quoting
-    // is disabled so the raw line passes through untouched for the
-    // strict from_csv parse below.
-    val body =
-      if (!header) spark.read.text(path)
-      else spark.read
-        .option("header", "true")
-        .option("sep", "\u0001")
-        .option("quote", "")
-        .schema(StructType(Seq(StructField("value", StringType))))
-        .csv(path)
-    body
-      .select(from_csv(col("value"), full, opts).as("__r"))
-      .select(project(col("__r"), schema, corruptCol): _*)
-  }
 }

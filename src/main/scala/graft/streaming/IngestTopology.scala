@@ -61,7 +61,6 @@ object IngestTopology {
       .option("checkpointLocation", s"$checkpointDir/stage2")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark2 = batch.sparkSession
         // J4: full-outer merge; keep the row if either fetch succeeded.
         val merged = batch.select(col("id"), col("ts"))
           .join(details.withColumnRenamed("match_id", "id"), Seq("id"), "left")

@@ -45,33 +45,6 @@ object UpsertSink {
     (fs, base, names)
   }
 
-  /** State as of `maxBatchId` (inclusive) — time travel over the delta
-    * log: last-write-wins over the newest compacted snapshot plus the
-    * deltas with batchId ≤ maxBatchId. Compaction folds history (tag t
-    * covers every batch < t), so a read point older than the newest
-    * compaction no longer exists — refused loudly rather than answered
-    * wrong. Same scale shape as [[readCurrent]]: one keyed window over the
-    * selected files.
-    */
-  def readAt(spark: SparkSession, dir: String, keyCols: Seq[String],
-      versionCols: Seq[String], maxBatchId: Long): DataFrame = {
-    val (_, _, names) = listDeltas(spark, dir)
-    val newestCompact = names
-      .flatMap(n => "^delta_compacted_(\\d+)$".r.findFirstMatchIn(n).map(_.group(1).toLong))
-      .sorted.lastOption
-    newestCompact.foreach { t =>
-      require(t <= maxBatchId + 1,
-        s"state at batch $maxBatchId was folded into compaction $t; oldest readable point is ${t - 1}")
-    }
-    val deltaDirs = names.filter(_.matches("delta_\\d+"))
-      .map(n => n.stripPrefix("delta_").toLong).filter(_ <= maxBatchId)
-      .map(i => s"$dir/delta_$i")
-    val dirs = newestCompact.map(t => s"$dir/delta_compacted_$t").toSeq ++ deltaDirs
-    require(dirs.nonEmpty, s"no deltas at or before batch $maxBatchId under $dir")
-    Dedup.lastWriteWins(spark.read.parquet(dirs: _*),
-      keyCols, versionCols.map(col(_).desc))
-  }
-
   /** Compact deltas into a single resolved snapshot (run periodically;
     * readers between compactions pay one window over the delta tail).
     *

@@ -164,6 +164,13 @@ class BenchSpec extends AnyFunSuite {
       Set("metric", "queries", "sf", "runs_degraded", "cal_spin_start_ms")))
   }
 
+  test("JSON lines are pure ASCII and read back non-ASCII text exactly") {
+    val text = "Boom: budget \u2014 \u00e9"
+    val line = Bench.line(Seq("failed" -> text))
+    assert(line.forall(_ < 128), line)
+    assert(Bench.Json.readTree(line).get("failed").asText === text)
+  }
+
   test("progress lines: round trip, a torn last line and non-JSON lines are skipped") {
     val outcomes = Seq(Bench.Timed("q_\"a\"\\b", 1.234, 41.5),
       Bench.Failed("sf1:q_c", "SparkException: bad \"input\"\tat\\x"))

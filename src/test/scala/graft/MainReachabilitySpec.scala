@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`perfbench/src/main`), a main file is reached when a reached file
   * names one of its top-level declarations (for a package object: the
   * package or one of its members) in comment-stripped source. Every main
-  * file must end up reached. The test reads source text, so it runs from
-  * the repository root (sbt's default working directory).
+  * file must end up reached, and every public member of a top-level main
+  * object outside the root files must be named somewhere in main or
+  * benchmark source. The test reads source text, so it runs from the
+  * repository root (sbt's default working directory).
   */
 class MainReachabilitySpec extends AnyFunSuite {
 
@@ -30,6 +32,24 @@ class MainReachabilitySpec extends AnyFunSuite {
       "documented capability (README, COVERAGE): stateful sessions + batch counters",
     "graft/streaming/IncrementalDedup.scala" ->
       "documented capability (COVERAGE): the continuous dedup stream")
+
+  /** Public object members that no main code names but that stay. */
+  private val memberRoots: Map[String, String] = Map(
+    "SparkEntry.entry" -> "driver smoke entry",
+    "HttpSource.fetchIdPages" ->
+      "paper S2 (the reference's extractor/riot/match/api.py); needs a live API",
+    "HttpSource.fetchDocsDistributed" ->
+      "paper S3 (the reference's extractor/riot/match/api.py); needs a live API",
+    "CosineSimilarity.register" ->
+      "SQL function for a session built without the extensions conf",
+    "PerformanceScoreExpr.register" ->
+      "SQL function for a session built without the extensions conf",
+    "Similarity.cosineHof" -> "the reference CosineSimilaritySpec compares the native cosine with",
+    "Similarity.dequantizeInt8" ->
+      "the inverse SimilaritySpec uses to bound the error of quantizeInt8",
+    "Multimodal.mediaSchema" -> "the decoders' input contract",
+    "Multimodal.FakeCodec" -> "offline fake the specs substitute behind the Codec seam",
+    "HttpSource.StubClient" -> "offline fake the specs substitute behind the Client seam")
 
   private val mainDir = Paths.get("src/main/scala")
   private val benchDir = Paths.get("perfbench/src/main/scala")
@@ -64,12 +84,12 @@ class MainReachabilitySpec extends AnyFunSuite {
     topLevel.findAllMatchIn(text).map(_.group(1)).toSet ++ pkg ++ members
   }
 
-  test("every main file is reached from an entry point, the benchmark or the allow-list") {
-    val main = scalaFiles(mainDir)
-    val rel = main.map(f => f -> mainDir.relativize(f).toString).toMap
-    val text = (main ++ scalaFiles(benchDir))
-      .map(f => f -> stripComments(new String(Files.readAllBytes(f), "UTF-8"))).toMap
+  private lazy val main = scalaFiles(mainDir)
+  private lazy val rel = main.map(f => f -> mainDir.relativize(f).toString).toMap
+  private lazy val text = (main ++ scalaFiles(benchDir))
+    .map(f => f -> stripComments(new String(Files.readAllBytes(f), "UTF-8"))).toMap
 
+  test("every main file is reached from an entry point, the benchmark or the allow-list") {
     val missing = roots.keySet -- rel.values
     assert(missing.isEmpty, s"allow-list names files that no longer exist: $missing")
 
@@ -89,5 +109,45 @@ class MainReachabilitySpec extends AnyFunSuite {
     assert(unreached.isEmpty,
       "main files that no entry point, benchmark or allow-listed module reaches " +
         s"(delete them, or add them to the allow-list with a reason): ${unreached.mkString(", ")}")
+  }
+
+  private val topObject = "^(?:(?:final|case|private(?:\\[\\w+\\])?)\\s+)*(?:package\\s+)?object\\s+(\\w+)".r
+  private val publicMember =
+    "^  (?:(?:final|sealed|abstract|case|implicit|lazy)\\s+)*(?:def|val|class|object)\\s+(\\w+)".r
+
+  /** `Object.member` for every public, non-override def/val/class/object
+    * declared at two-space indent directly in a top-level object.
+    */
+  private def publicMembers(src: String): Seq[(String, String)] = {
+    var obj: Option[String] = None
+    src.split("\n").toSeq.flatMap { line =>
+      if (line.nonEmpty && !line.head.isWhitespace) {
+        obj = topObject.findPrefixMatchOf(line).map(_.group(1))
+        None
+      } else
+        obj.flatMap(o => publicMember.findPrefixMatchOf(line).map(m => o -> m.group(1)))
+    }
+  }
+
+  test("every public member of a main object is named by main or benchmark code, or allow-listed") {
+    val members = main.filterNot(f => roots.contains(rel(f))).flatMap(f => publicMembers(text(f)))
+    val all = text.values.mkString("\n")
+    // a name is reached when it occurs outside its declarations; a use of
+    // any same-named member counts, so the check may miss dead code but
+    // never flags live code
+    val words = "\\w+".r.findAllIn(all).toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    val declared = "\\b(?:def|val|var|class|object|trait|type)\\s+(\\w+)".r
+      .findAllMatchIn(all).toSeq.groupMapReduce(_.group(1))(_ => 1)(_ + _)
+    val unreached = members.collect {
+      case (o, n) if words(n) <= declared.getOrElse(n, 0) => s"$o.$n"
+    }.toSet
+
+    val stale = memberRoots.keySet -- unreached
+    assert(stale.isEmpty,
+      s"member allow-list entries that no longer exist or are now named by main code: $stale")
+    val dead = (unreached -- memberRoots.keySet).toSeq.sorted
+    assert(dead.isEmpty,
+      "public members that no main code, demo or benchmark names (delete them, " +
+        s"or add them to the member allow-list with a reason): ${dead.mkString(", ")}")
   }
 }

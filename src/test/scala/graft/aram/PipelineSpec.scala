@@ -46,11 +46,9 @@ class PipelineSpec extends SparkSpec {
     ModelStore.saveClip(spark, fitted.clip, s"$dir/clip")
     ModelStore.saveScaler(spark, fitted.scaler, s"$dir/scaler")
     ModelStore.saveEncoder(fitted.encoder, s"$dir/encoder")
-    ModelStore.saveWeights(spark, Map("a" -> 0.25, "b" -> 0.75), s"$dir/weights")
 
     assert(ModelStore.loadClip(spark, s"$dir/clip").bounds === fitted.clip.bounds)
     assert(ModelStore.loadScaler(spark, s"$dir/scaler").stats === fitted.scaler.stats)
-    assert(ModelStore.loadWeights(spark, s"$dir/weights") === Map("a" -> 0.25, "b" -> 0.75))
 
     // save/load determinism (the reference's "max diff = 0.0" check): the
     // reloaded pipeline transforms identically

@@ -1,7 +1,6 @@
 package graft.aram
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class RankingSpec extends SparkSpec {
   import spark.implicits._

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
 
 class DamerauLevenshteinSpec extends SparkSpec {
-  import spark.implicits._
 
   private def d(a: String, b: String): Long =
     DamerauLevenshtein.dist(UTF8String.fromString(a), UTF8String.fromString(b))

@@ -1,7 +1,6 @@
 package graft.llm
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class CorpusPipelineSpec extends SparkSpec {
   import spark.implicits._

@@ -1,38 +1,24 @@
 package graft.llm
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class KMeansSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Sequential reference Lloyd on the quantized grid — same seeds, same
-    * tie rule (lower cell), same empty-cell policy (keep previous).
+  /** Sequential reference assignment on the quantized grid to the k
+    * lowest-id seeds — same tie rule (lower cell).
     */
-  private def bruteLloyd(vs: Seq[(Long, Seq[Double])], k: Int, iters: Int,
+  private def bruteAssign(vs: Seq[(Long, Seq[Double])], k: Int,
       scale: Int = 1000): Map[Long, Int] = {
     val q = vs.sortBy(_._1).map { case (id, v) =>
       id -> v.map(x => math.floor(x * scale + 0.5).toLong).toArray
     }
-    var cents = q.take(k).map(_._2.map(_.toDouble))
+    val cents = q.take(k).map(_._2.map(_.toDouble))
     def d2(x: Array[Long], c: Array[Double]): Double =
       x.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum
-    def assignAll = q.map { case (id, x) =>
+    q.map { case (id, x) =>
       id -> cents.zipWithIndex.minBy { case (c, i) => (d2(x, c), i) }._2
-    }
-    for (_ <- 0 until iters) {
-      val byCell = assignAll.groupBy(_._2).map { case (cell, as) =>
-        cell -> as.map(a => q.find(_._1 == a._1).get._2)
-      }
-      cents = cents.zipWithIndex.map { case (old, cell) =>
-        byCell.get(cell) match {
-          case Some(members) =>
-            old.indices.map(d => members.map(_(d)).sum.toDouble / members.size).toArray
-          case None => old
-        }
-      }
-    }
-    assignAll.toMap
+    }.toMap
   }
 
   private val vecs: Seq[(Long, Seq[Double])] = {
@@ -44,24 +30,16 @@ class KMeansSpec extends SparkSpec {
     }
   }
 
-  test("distributed Lloyd ≡ the sequential reference, over several iterations") {
-    val df = vecs.map { case (id, v) => (id, v) }.toDF("vec_id", "embedding")
-    val (assigned, cents) = KMeans.lloyd(df, "vec_id", "embedding", k = 3, iters = 3)
-    val got = assigned.as[(Long, Int, Double)].collect().map(r => r._1 -> r._2).toMap
-    assert(got === bruteLloyd(vecs, 3, 3))
-    assert(cents.length === 3 && cents.forall(_.length === 4))
-    // blobs are separated: the three clusters each hold a full blob
-    val sizes = got.groupBy(_._2).view.mapValues(_.size).toMap
-    assert(sizes.values.toSeq.sorted === Seq(15, 15, 15))
-  }
-
   test("assignment is partitioning-invariant and ties break to the lower cell") {
     val df = vecs.map { case (id, v) => (id, v) }.toDF("vec_id", "embedding")
     def run(parts: Int) = {
-      val (a, _) = KMeans.lloyd(df.repartition(parts), "vec_id", "embedding", 3, 2)
-      a.as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
+      val dfq = KMeans.quantized(df.repartition(parts), "vec_id", "embedding")
+      KMeans.assign(dfq, "vec_id", KMeans.seedCentroids(dfq, "vec_id", 3))
+        .select("vec_id", "cell", "dist2").as[(Long, Int, Double)]
+        .collect().sortBy(_._1).toSeq
     }
     assert(run(1) === run(13))
+    assert(run(1).map(r => r._1 -> r._2).toMap === bruteAssign(vecs, 3))
     // duplicated point equidistant to duplicated seeds → cell 0 (lower id wins)
     val dup = Seq((0L, Seq(1.0, 1.0)), (1L, Seq(1.0, 1.0)), (2L, Seq(1.0, 1.0)))
       .toDF("vec_id", "embedding")
@@ -86,19 +64,8 @@ class KMeansSpec extends SparkSpec {
     val got = KMeans.assign(dfq, "vec_id", seeds)
       .select("vec_id", "cell").as[(Long, Int)].collect().toMap
     assert(got.size === 200)
-    val ref = bruteLloyd(big, 64, 0)
+    val ref = bruteAssign(big, 64)
     assert(got === ref)
-  }
-
-  test("a cell that loses all members keeps its previous centroid") {
-    // two seeds; every point sits on seed 0 after quantization
-    val pts = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(0.001, 0.0)), (2L, Seq(0.0, 0.001)))
-    val df = pts.toDF("vec_id", "embedding")
-    val dfq = KMeans.quantized(df, "vec_id", "embedding", scale = 1)
-    val seeds = KMeans.seedCentroids(dfq, "vec_id", 2)
-    val updated = KMeans.updateCentroids(KMeans.assign(dfq, "vec_id", seeds), seeds)
-    assert(updated(0).toSeq === Seq(0.0, 0.0)) // all three collapse here
-    assert(updated(1).toSeq === seeds(1).toSeq) // empty cell: unchanged
   }
 
   test("silhouette: well-separated clusters score near 1, hand-checked point") {
@@ -144,7 +111,6 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("daviesBouldin: hand clusters — tight far pair vs overlapping pair") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     // three centroids on a line: c0=(0,0), c1=(100,0), c2=(110,0);
     // every point sits 1 away from its centroid -> S_i = 1;

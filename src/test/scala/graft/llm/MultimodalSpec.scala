@@ -38,16 +38,6 @@ class MultimodalSpec extends SparkSpec {
     a.foreach { r => assert(r.getInt(1) > 0 && r.getInt(2) > 0) }
   }
 
-  test("resize: batched, deterministic, dims stamped") {
-    val out = Multimodal.resizeTo(media, Multimodal.FakeCodec, 320, 240, batchSize = 2)
-      .collect().map(r => r.getLong(0) -> (r.getAs[Array[Byte]](1), r.getInt(2), r.getInt(3))).toMap
-    assert(out.size === 3)
-    out.values.foreach { case (p, w, h) => assert(w === 320 && h === 240 && p.nonEmpty) }
-    val again = Multimodal.resizeTo(media.repartition(3), Multimodal.FakeCodec, 320, 240)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(again === out.map { case (k, (p, _, _)) => k -> p.toSeq })
-  }
-
   private def pngBytes(w: Int, h: Int)(color: (Int, Int) => Int): Array[Byte] = {
     val im = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until h; x <- 0 until w) im.setRGB(x, y, color(x, y))
@@ -115,21 +105,6 @@ class MultimodalSpec extends SparkSpec {
     assert((0L until 8L).forall(s => groups(s * 4) >= 2L))
   }
 
-  test("ImageIoCodec resize re-encodes real pixels at the target box") {
-    val half = 0x808080
-    val rows = Seq(Row(20L, "image", pngBytes(32, 32)((x, _) => if (x < 16) 0xFFFFFF else half),
-      Row("image/png", 32, 32, null)))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), Multimodal.mediaSchema)
-    val out = Multimodal.resizeTo(df, Multimodal.ImageIoCodec, 16, 16).collect().head
-    val resized = out.getAs[Array[Byte]](1)
-    val im = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(resized))
-    assert(im.getWidth === 16 && im.getHeight === 16)
-    // left half stays bright, right half stays mid-grey after the resample
-    assert((im.getRGB(2, 8) & 0xFF) > 0xE0)
-    val rightBlue = im.getRGB(13, 8) & 0xFF
-    assert(rightBlue > 0x60 && rightBlue < 0xA0)
-  }
-
   test("syntheticBmps: real imageio decode, dims exact, dHash ≡ the PNG twin") {
     import spark.implicits._
     val ids = (0L until 8L).toDF("id")
@@ -150,7 +125,7 @@ class MultimodalSpec extends SparkSpec {
     assert(hashes(Multimodal.syntheticBmps(ids.repartition(5), "id", 9, 9)) === hb)
   }
 
-  test("PpmCodec: P6 parse (dims, comments), error→null, resize re-encodes P6") {
+  test("PpmCodec: P6 parse (dims, comments), error→null") {
     import spark.implicits._
     val ids = (0L until 6L).toDF("id")
     val ppms = Multimodal.syntheticPpms(ids, "id", w = 9, h = 9)
@@ -167,11 +142,6 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.PpmCodec.decodeDims("P5\n9 9\n255\n".getBytes) === ((-1, -1)))
     assert(Multimodal.PpmCodec.extractFeatures(
       "P6\n2 2\n65535\n".getBytes ++ Array.fill[Byte](12)(1), 4).isEmpty)
-    // resize emits a decodable P6 at the target box
-    val one = ppms.filter(col("media_id") === 3L)
-      .select("payload").collect().head.getAs[Array[Byte]](0)
-    val rz = Multimodal.PpmCodec.resize(one, 4, 3)
-    assert(Multimodal.PpmCodec.decodeDims(rz) === ((4, 3)))
   }
 
   test("SniffCodec dispatch: mixed BMP+PPM corpus, dHash identical across codecs") {

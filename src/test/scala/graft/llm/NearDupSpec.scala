@@ -109,52 +109,6 @@ class NearDupSpec extends SparkSpec {
     assert(inc.size === 1)
   }
 
-  test("bucketed signature store: identical pairs to the plain incremental path, store side never exchanged") {
-    // store = docs 1-3; batch = re-crawl of 2 (text now equals doc 1),
-    // a near-dup of 1, and an exact intra-batch twin pair — all three
-    // incremental shapes in one fixture
-    val store = docs.filter(col("doc_id") <= 3)
-    val batch = Seq(
-      (2L, "the quick brown fox jumps over the lazy dog near the river bank today"),
-      (6L, "the quick brown fox jumps over the lazy dog near the river bank now"),
-      (8L, "identical twin sentence appearing twice in the very same batch here"),
-      (9L, "identical twin sentence appearing twice in the very same batch here")
-    ).toDF("doc_id", "text")
-    val storeSigs0 = MinHashDedup.signatures(store, "doc_id", "text")
-    // clear metastore entries AND leftover warehouse dirs from a previous
-    // test JVM (the per-JVM metastore forgets the table but the directory
-    // survives → LOCATION_ALREADY_EXISTS on the next saveAsTable)
-    Seq("neardup_store_bands", "neardup_store_sigs").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
-    }
-    MinHashDedup.writeSignatureStore(storeSigs0, "doc_id", "neardup_store",
-      numBuckets = 4, numHashes = 12, numBands = 6)
-    val newSigs = MinHashDedup.signatures(batch, "doc_id", "text")
-    val bucketed = MinHashDedup.incrementalPairsBucketed(newSigs,
-      spark.table("neardup_store_bands"), spark.table("neardup_store_sigs"),
-      "doc_id", numHashes = 12, numBands = 6, threshold = 0.4)
-    def pairMap(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val got = pairMap(bucketed)
-    val want = pairMap(MinHashDedup.incrementalPairsFromSigs(newSigs, storeSigs0,
-      "doc_id", numHashes = 12, numBands = 6, threshold = 0.4))
-    assert(got === want)
-    assert(got.keySet.contains((8L, 9L)) && got.get((1L, 2L)).contains(1.0),
-      s"fixture shapes missing: $got")
-    // the store-side scans read pre-bucketed/pre-sorted: the plan uses
-    // bucketed file scans, and the only bkey exchange is the batch side
-    val p = bucketed.queryExecution.executedPlan.toString
-    assert(p.contains("Bucketed: true"), s"store scan not bucketed:\n${p.take(1200)}")
-    assert("Exchange hashpartitioning\\(bkey".r.findAllIn(p).size <= 1,
-      s"store band table re-shuffled:\n${p.take(1500)}")
-  }
-
   test("simhash: buckets past the cap fall back to the join path with identical pairs") {
     // 12 signatures whose first band is identical → one 12-member bucket;
     // with bucketCap=4 that bucket must route through the self-join path

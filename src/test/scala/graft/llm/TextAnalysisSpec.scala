@@ -243,12 +243,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out(5L) === ((6L, 6L, "no common words here at all")))
   }
 
-  test("analyze attaches all standard columns") {
-    val cols = TextAnalysis.analyze(docs).columns.toSet
-    assert(Set("n_tokens", "n_bpe_tokens", "stopword_ratio", "avg_word_len",
-      "quality", "lang_pred", "fingerprint").subsetOf(cols))
-  }
-
   // ---- URL extraction / domain rollup ----
 
   test("extractUrls finds every URL in order; non-URL text yields none") {
@@ -509,7 +503,6 @@ class ZipfFitSpec extends graft.SparkSpec {
   }
 
   test("termBurstiness: even spread ~ Poisson, bursty content word rings") {
-    import org.apache.spark.sql.functions.col
     // "the" once per doc (VMR = 0 — perfectly even beats Poisson);
     // "zebra" 4× in one doc of 8: mean .5, E[tf²]=2 -> var 1.75, VMR 3.5
     val docs = (1L to 8L).map { i =>
@@ -525,7 +518,6 @@ class ZipfFitSpec extends graft.SparkSpec {
   }
 
   test("charNgramEntropy: deterministic alternation has zero conditional entropy") {
-    import org.apache.spark.sql.functions.col
     // "abab": bigrams {ab×2, ba×1}; next char is fully determined by the
     // current one, so H(next|char) = 0 even though H2, H1 > 0
     val docs = Seq(("g", "abab")).toDF("lang", "text")
@@ -554,7 +546,6 @@ class ZipfFitSpec extends graft.SparkSpec {
   }
 
   test("termBurstiness: top-k cut is (tf_total desc, term asc) exact") {
-    import org.apache.spark.sql.functions.col
     val docs = Seq((1L, "b b a a c"), (2L, "b a c")).toDF("doc_id", "text")
     val terms = TextAnalysis.termBurstiness(docs, "doc_id", "text", k = 2)
       .collect().map(_.getString(0)).toSeq

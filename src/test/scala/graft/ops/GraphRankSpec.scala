@@ -54,7 +54,7 @@ class GraphRankSpec extends SparkSpec {
   }
 
   private def tris(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    GraphRank.triangleCounts(edges.toDF("src", "dst"))
+    GraphRank.triangleCountsAdjacency(edges.toDF("src", "dst"))
       .as[(Long, Long)].collect().toMap
 
   /** Brute-force per-node triangle counts over the canonical edge set. */
@@ -70,7 +70,6 @@ class GraphRankSpec extends SparkSpec {
   }
 
   test("personalized pagerank with ALL nodes as seeds ≡ uniform pagerank") {
-    import org.apache.spark.sql.functions._
     val edges = sym(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L)))
     val df = edges.toDF("src", "dst")
     val allNodes = (1L to 4L).toDF("node")
@@ -82,7 +81,6 @@ class GraphRankSpec extends SparkSpec {
   }
 
   test("personalized pagerank: mass concentrates near the seed; unreachable nodes at 0") {
-    import org.apache.spark.sql.functions._
     // two disconnected symmetric pairs; seed only in the first component
     val edges = sym(Seq((1L, 2L), (3L, 4L))).toDF("src", "dst")
     val r = GraphRank.personalizedPageRank(edges, Seq(1L).toDF("node"), 6)
@@ -122,44 +120,6 @@ class GraphRankSpec extends SparkSpec {
     val r3 = GraphRank.pageRankWeighted(single, iterations = 6)
       .as[(Long, Long)].collect().toMap
     assert(r2 === r3)
-  }
-
-  test("converged pagerank ≡ fixed-point at the rounds it ran; stops before the cap") {
-    // ring + chord graph: converges well before 40 rounds at a loose
-    // threshold on the 1e12 scale
-    val edges = sym(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 1L), (1L, 3L)))
-    val (df, rounds) = GraphRank.pageRankConverged(
-      edges.toDF("src", "dst"), deltaThreshold = 1000000L, maxIterations = 40)
-    assert(rounds < 40, s"no early exit: ran $rounds rounds")
-    val got = df.as[(Long, Long)].collect().toMap
-    // the measured stopping rule replays the identical recurrence: the
-    // result must equal the fixed-iteration form at exactly `rounds`
-    assert(got === ranks(edges, iters = rounds))
-    // and one more fixed round moves every node by ≤ threshold
-    val next = ranks(edges, iters = rounds + 1)
-    assert(got.forall { case (n, pr) => math.abs(pr - next(n)) <= 1000000L })
-  }
-
-  test("converged pagerank honors the iteration cap at threshold 0-ish") {
-    val edges = sym(Seq((1L, 2L), (2L, 3L)))
-    val (_, rounds) = GraphRank.pageRankConverged(
-      edges.toDF("src", "dst"), deltaThreshold = 0L, maxIterations = 3)
-    assert(rounds <= 3)
-  }
-
-  test("converged PPR ≡ fixed-point PPR at the rounds it ran") {
-    val edges = sym(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)))
-    val seeds = Seq(1L).toDF("node")
-    // seed init is the full 1e12 scale, decaying ~0.85/round — a
-    // threshold of 1e10 is reached in ~28 rounds
-    val (df, rounds) = GraphRank.personalizedPageRankConverged(
-      edges.toDF("src", "dst"), seeds, deltaThreshold = 10000000000L,
-      maxIterations = 40)
-    assert(rounds < 40)
-    val fixed = GraphRank.personalizedPageRank(
-        edges.toDF("src", "dst"), seeds, iterations = rounds)
-      .as[(Long, Long)].collect().toMap
-    assert(df.as[(Long, Long)].collect().toMap === fixed)
   }
 
   test("pagerank prelude: ONE edge-mass exchange (repartition-first reuse)") {
@@ -242,8 +202,8 @@ class GraphRankSpec extends SparkSpec {
 
   test("triangles: hub-skewed graph matches brute force (orientation exactness)") {
     // a hub (0) connected to everyone, plus a sparse ring with chords —
-    // exercises the degree-orientation path where the hub must NOT be
-    // the wedge apex for most triangles
+    // exercises the degree-orientation path where the hub's out-neighbor
+    // list must stay short
     val hub = (1L to 20L).map(l => (0L, l))
     val ring = (1L to 20L).map(i => (i, i % 20 + 1))
     val chords = Seq((1L, 5L), (2L, 9L), (7L, 15L), (4L, 12L))
@@ -251,11 +211,7 @@ class GraphRankSpec extends SparkSpec {
     assert(tris(edges) === bruteTris(edges))
   }
 
-  private def trisAdj(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    GraphRank.triangleCountsAdjacency(edges.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-
-  test("adjacency triangles ≡ wedge triangles ≡ brute force on every shape") {
+  test("adjacency triangles ≡ brute force on every shape") {
     val k4 = for (i <- 1L to 4L; j <- 1L to 4L if i < j) yield (i, j)
     val noisy = {
       val base = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
@@ -265,23 +221,21 @@ class GraphRankSpec extends SparkSpec {
       (1L to 20L).map(i => (i, i % 20 + 1)) ++
       Seq((1L, 5L), (2L, 9L), (7L, 15L), (4L, 12L))
     val dense = for (i <- 1L to 12L; j <- 1L to 12L if i < j && (i + j) % 3 != 0) yield (i, j)
-    for (e <- Seq(k4, noisy, hubby, dense)) {
-      assert(trisAdj(e) === bruteTris(e), s"adjacency ≠ brute on ${e.take(5)}…")
-      assert(trisAdj(e) === tris(e), s"adjacency ≠ wedge on ${e.take(5)}…")
-    }
+    for (e <- Seq(k4, noisy, hubby, dense))
+      assert(tris(e) === bruteTris(e), s"adjacency ≠ brute on ${e.take(5)}…")
   }
 
   test("adjacency triangles: triangle-free graphs return empty") {
-    assert(trisAdj(Seq((1L, 2L), (2L, 3L), (3L, 4L))).isEmpty)
-    assert(trisAdj(for (i <- 1L to 3L; j <- 10L to 12L) yield (i, j)).isEmpty)
+    assert(tris(Seq((1L, 2L), (2L, 3L), (3L, 4L))).isEmpty)
+    assert(tris(for (i <- 1L to 3L; j <- 10L to 12L) yield (i, j)).isEmpty)
   }
 
   test("triangles: partitioning-independent") {
     val edges = (for (i <- 1L to 12L; j <- 1L to 12L if i < j && (i + j) % 3 != 0)
       yield (i, j))
-    val a = GraphRank.triangleCounts(edges.toDF("src", "dst").repartition(1))
+    val a = GraphRank.triangleCountsAdjacency(edges.toDF("src", "dst").repartition(1))
       .as[(Long, Long)].collect().toMap
-    val b = GraphRank.triangleCounts(edges.toDF("src", "dst").repartition(11))
+    val b = GraphRank.triangleCountsAdjacency(edges.toDF("src", "dst").repartition(11))
       .as[(Long, Long)].collect().toMap
     assert(a === b && a === bruteTris(edges))
   }
@@ -301,22 +255,19 @@ class GraphRankSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap === Map(1L -> 0L))
   }
 
-  test("bfsHops converges to the same fixpoint as pinned-at-diameter, directed edges respected") {
+  test("bfsHopsPinned at the diameter: full reach, directed edges respected") {
     val path = sym(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (8L, 9L))).toDF("src", "dst")
-    val conv = GraphRank.bfsHops(path, Seq(1L).toDF("node"))
-      .as[(Long, Long)].collect().toMap
     val pinned = GraphRank.bfsHopsPinned(path, Seq(1L).toDF("node"), rounds = 4)
       .as[(Long, Long)].collect().toMap
-    assert(conv === pinned)
-    assert(conv === Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L))
+    assert(pinned === Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L))
     // directed chain 1→2→3: BFS follows arrows only
     val directed = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    assert(GraphRank.bfsHops(directed, Seq(3L).toDF("node"))
+    assert(GraphRank.bfsHopsPinned(directed, Seq(3L).toDF("node"), rounds = 2)
       .as[(Long, Long)].collect().toMap === Map(3L -> 0L))
     // partitioning-independent
-    val rep = GraphRank.bfsHops(path.repartition(7), Seq(1L).toDF("node"))
+    val rep = GraphRank.bfsHopsPinned(path.repartition(7), Seq(1L).toDF("node"), rounds = 4)
       .as[(Long, Long)].collect().toMap
-    assert(rep === conv)
+    assert(rep === pinned)
   }
 
   test("hits: hand-unrolled two iterations on a small bipartite graph") {

@@ -1,14 +1,37 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class KCoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def core(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] =
-    GraphRank.kCore(edges.toDF("src", "dst"), k)
+  /** The k-core, checked against [[brutePeel]]: every peel round deletes
+    * at least one edge until the edge set is stable, so the edge count
+    * bounds the peel depth.
+    */
+  private def core(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
+    val got = GraphRank.kCorePeeled(edges.toDF("src", "dst"), k, rounds = math.max(1, edges.size))
       .as[(Long, Long)].collect().toMap
+    assert(got === brutePeel(edges, k))
+    got
+  }
+
+  /** Sequential peel to the fixpoint over the canonical edge set. */
+  private def brutePeel(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
+    var es = edges.map { case (a, b) => (a min b, a max b) }
+      .filter(e => e._1 != e._2).distinct
+    var changed = true
+    while (changed) {
+      val deg = es.flatMap(e => Seq(e._1, e._2)).groupBy(identity)
+        .map { case (n, xs) => n -> xs.size }
+      val keep = deg.filter(_._2 >= k).keySet
+      val es2 = es.filter(e => keep(e._1) && keep(e._2))
+      changed = es2.size != es.size
+      es = es2
+    }
+    es.flatMap(e => Seq(e._1, e._2)).groupBy(identity)
+      .map { case (n, xs) => n -> xs.size.toLong }
+  }
 
   test("K4 with a pendant chain: the 3-core is exactly the K4") {
     // K4 on 1-4, chain 4-5-6 hanging off
@@ -36,25 +59,10 @@ class KCoreSpec extends SparkSpec {
   test("peeled form reaches the converged core within its round budget") {
     val rng = new scala.util.Random(3)
     val edges = (1 to 300).map(_ => (rng.nextInt(60).toLong, rng.nextInt(60).toLong))
-    val converged = core(edges, 3)
     val peeled = GraphRank.kCorePeeled(edges.toDF("src", "dst"), 3, rounds = 12)
       .as[(Long, Long)].collect().toMap
-    assert(peeled === converged)
-    // and matches a brute-force sequential peel
-    var es = edges.map { case (a, b) => (a min b, a max b) }
-      .filter(e => e._1 != e._2).distinct
-    var changed = true
-    while (changed) {
-      val deg = es.flatMap(e => Seq(e._1, e._2)).groupBy(identity)
-        .map { case (n, xs) => n -> xs.size }
-      val keep = deg.filter(_._2 >= 3).keySet
-      val es2 = es.filter(e => keep(e._1) && keep(e._2))
-      changed = es2.size != es.size
-      es = es2
-    }
-    val brute = es.flatMap(e => Seq(e._1, e._2)).groupBy(identity)
-      .map { case (n, xs) => n -> xs.size.toLong }
-    assert(converged === brute)
+    assert(peeled.nonEmpty)
+    assert(peeled === brutePeel(edges, 3))
   }
 
   test("duplicate/reversed/self-loop edges do not change the core") {
@@ -73,8 +81,8 @@ class KCoreSpec extends SparkSpec {
     val c1 = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
     val c2 = for (a <- 11L to 14L; b <- (a + 1) to 14L) yield (a, b)
     val edges = c1 ++ c2 ++ Seq((4L, 11L))
-    val got = GraphRank.labelPropagation(edges.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
+    // stable from round 3 on: 5 pinned rounds settle both cliques
+    val got = lpa(edges, rounds = 5)
     // each clique converges to one label; min-tie-break drives toward ids 1 / 11
     assert(Set(1L, 2L, 3L).map(got).size === 1)
     assert(Set(12L, 13L, 14L).map(got).size === 1)

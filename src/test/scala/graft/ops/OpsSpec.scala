@@ -13,12 +13,6 @@ class OpsSpec extends SparkSpec {
     ("a", 1.0), ("a", 3.0), ("b", 2.0), ("b", 6.0), ("b", 4.0)
   ).toDF("k", "v")
 
-  test("partitionAgg attaches a per-partition aggregate to every row") {
-    val out = Windows.partitionAgg(df, Seq("k"), max(col("v")), "k_max")
-      .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    out.foreach { case (k, _, m) => assert(m === (if (k == "a") 3.0 else 6.0)) }
-  }
-
   test("scan composes filter then projection") {
     val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.001")
     val out = Relational.scan(li, col("l_quantity") > 45, Seq(col("l_orderkey"), col("l_quantity")))
@@ -209,8 +203,8 @@ class SketchStoreSpec extends SparkSpec {
     }
     rm(new java.io.File(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
-    Partitioning.writeBucketed(Sketches.rollup(fine, Seq("week")), t,
-      bucketCols = Seq("week"), numBuckets = 4, sortCols = Seq("week"))
+    Sketches.rollup(fine, Seq("week")).write.mode("overwrite").format("parquet")
+      .bucketBy(4, "week").sortBy("week").saveAsTable(t)
     val delta = Sketches.rollup(
       Sketches.fineSketches(Seq(("w1", "dX", 5000L), ("w9", "dX", 1L))
         .toDF("week", "day", "uid"), Seq("week", "day"), "uid"), Seq("week"))

@@ -36,8 +36,11 @@ class PartitioningSpec extends SparkSpec {
 
   test("bucketed tables join without an exchange on the bucket key") {
     val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.001")
-    Partitioning.writeBucketed(li.select("l_orderkey", "l_quantity"), "li_b", Seq("l_orderkey"), 4, Seq("l_orderkey"))
-    Partitioning.writeBucketed(li.select("l_orderkey", "l_extendedprice"), "li_b2", Seq("l_orderkey"), 4, Seq("l_orderkey"))
+    def writeBucketed(df: org.apache.spark.sql.DataFrame, table: String): Unit =
+      df.write.mode("overwrite").format("parquet")
+        .bucketBy(4, "l_orderkey").sortBy("l_orderkey").saveAsTable(table)
+    writeBucketed(li.select("l_orderkey", "l_quantity"), "li_b")
+    writeBucketed(li.select("l_orderkey", "l_extendedprice"), "li_b2")
     val joined = spark.table("li_b").groupBy("l_orderkey").agg(sum("l_quantity"))
       .join(spark.table("li_b2").groupBy("l_orderkey").agg(sum("l_extendedprice")), "l_orderkey")
     val plan = joined.queryExecution.executedPlan.toString

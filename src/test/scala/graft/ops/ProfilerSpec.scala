@@ -211,7 +211,6 @@ class KeySkewSpec extends SparkSpec {
   }
 
   test("fdAudit: holding FD, violated FD, witness, and null discipline") {
-    import org.apache.spark.sql.functions.col
     // key 1 -> one rhs, key 2 -> two, key 3 -> three (worst), key 4 nulls
     val rows = Seq(
       (Some(1L), Some("a")), (Some(1L), Some("a")),

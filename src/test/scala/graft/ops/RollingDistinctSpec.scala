@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class RollingDistinctSpec extends SparkSpec {
   import spark.implicits._
@@ -93,34 +92,6 @@ class RollingDistinctSpec extends SparkSpec {
       assert(math.abs(approx(key) - ex) / ex <= 0.06,
         s"$key: approx ${approx(key)} vs exact $ex")
     }
-  }
-
-  test("incremental sketch merges converge to the one-shot build, replays included") {
-    import org.apache.spark.sql.functions.{col, hll_sketch_agg, hll_sketch_estimate, lit}
-    val all = (0 until 300).map(i => ("k" + (i % 2), day(i % 11), (i * 17 % 97).toLong))
-    val df = all.toDF("k", "day", "id")
-    val oneShot = df.groupBy("k", "day")
-      .agg(hll_sketch_agg(col("id"), lit(12)).as("sk"))
-      .select(col("k"), col("day"), hll_sketch_estimate(col("sk")).as("est"))
-      .as[(String, java.sql.Date, Double)].collect()
-      .map(t => (t._1, t._2.toString) -> t._3).toMap
-
-    // three batches, the third replaying half of the first (at-least-once)
-    val batches = Seq(all.take(120), all.slice(120, 300), all.take(60))
-    import org.apache.spark.sql.types.{BinaryType, DateType, StringType, StructField, StructType}
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("k", StringType), StructField("day", DateType),
-        StructField("sk", BinaryType))))
-    val finalStore = batches.foldLeft(empty) { (store, b) =>
-      RollingDistinct.mergeDailySketches(store, b.toDF("k", "day", "id"),
-        Seq("k"), "day", "id", "sk").localCheckpoint(true)
-    }
-    val got = finalStore
-      .select(col("k"), col("day"), hll_sketch_estimate(col("sk")).as("est"))
-      .as[(String, java.sql.Date, Double)].collect()
-      .map(t => (t._1, t._2.toString) -> t._3).toMap
-    assert(got === oneShot) // exact equality: HLL union is order/dup-insensitive
   }
 
   test("result is partitioning-independent") {

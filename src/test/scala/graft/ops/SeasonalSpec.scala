@@ -236,7 +236,6 @@ class SeasonalSpec extends SparkSpec {
   }
 
   test("medianPolish: hand 2x3 table — lower medians, effects, worst residual") {
-    import org.apache.spark.sql.functions.col
     // a: (1,2,3) -> row med 2, residuals (-1,0,1)
     // b: (11,14,13) -> row med 13, residuals (-2,1,0)
     // col lower medians of residuals: x=-2, y=0, z=0

@@ -79,8 +79,11 @@ class HttpSourceSpec extends SparkSpec {
       """{"metadata":{"matchId":"KR_1","participants":["p1"]},
         |"info":{"gameMode":"ARAM","gameDuration":900,"gameVersion":"14.1",
         |"participants":[],"teams":[]}}""".stripMargin.replace("\n", "")
-    val client = HttpSource.StubClient(Map("api/match/KR_1" -> detail))
-    val docs = HttpSource.fetchDocs(spark, client, id => s"api/match/$id", Seq("KR_1", "KR_404"))
+    import spark.implicits._
+    val responses = Map("api/match/KR_1" -> detail)
+    val docs = HttpSource.fetchDocsDistributed(Seq("KR_1", "KR_404").toDF("match_id"),
+      "match_id", id => s"api/match/$id", () => HttpSource.StubClient(responses),
+      parallelism = 2)
     assert(docs.filter(col("body").isNull).count() === 1)
 
     val parsed = HttpSource.parseBodies(docs.filter(col("body").isNotNull), MatchSchema.matchDoc)

@@ -37,51 +37,6 @@ class TextIngestSpec extends SparkSpec {
       (3L, "c", None)))
   }
 
-  test("csv: untypeable cells AND token-count drift are corrupt (strict gate)") {
-    val path = tmpFile("b.csv", Seq(
-      "1,a,1.5",
-      "2,b",          // missing trailing column → corrupt (column drift)
-      "3,c,2.5,junk", // extra column → corrupt (column drift)
-      "4,d,notanum")) // untypeable double → corrupt
-    val df = TextIngest.readCsv(spark, path, schema)
-    val corrupt = df.filter(col("_corrupt_record").isNotNull)
-      .select("_corrupt_record").collect().map(_.getString(0)).toSet
-    assert(corrupt === Set("2,b", "3,c,2.5,junk", "4,d,notanum"))
-    val valid = df.filter(col("_corrupt_record").isNull)
-      .select("id", "kind", "v").collect()
-      .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)))).toSet
-    assert(valid === Set((1L, "a", Some(1.5))))
-  }
-
-  test("csv: header line is dropped, separator configurable") {
-    val path = tmpFile("d.csv", Seq("id|kind|v", "7|z|9.5"))
-    val df = TextIngest.readCsv(spark, path, schema, header = true, sep = "|")
-    val rows = df.filter(col("_corrupt_record").isNull)
-      .select("id", "kind", "v").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-    assert(rows === Seq((7L, "z", 9.5)))
-  }
-
-  test("csv: header dropped per FILE; data rows equal to the header survive") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toFile
-    def write(name: String, lines: Seq[String]): Unit =
-      java.nio.file.Files.write(new java.io.File(dir, name).toPath,
-        lines.mkString("\n").getBytes("UTF-8"))
-    // two files, each with its own header line — the drop must be
-    // per-file, and the f2 data row that EQUALS the header text must
-    // surface (as a corrupt record under this schema), not vanish
-    write("f1.csv", Seq("id,kind,v", "1,a,1.5"))
-    write("f2.csv", Seq("id,kind,v", "2,b,2.5", "id,kind,v"))
-    val df = TextIngest.readCsv(spark, dir.toString, schema, header = true)
-    val valid = df.filter(col("_corrupt_record").isNull)
-      .select("id", "kind", "v").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    assert(valid === Set((1L, "a", 1.5), (2L, "b", 2.5)))
-    val corrupt = df.filter(col("_corrupt_record").isNotNull)
-      .select("_corrupt_record").collect().map(_.getString(0)).toSeq
-    assert(corrupt === Seq("id,kind,v"))
-  }
-
   test("corrupt predicate composes with aggregation in one pass") {
     val path = tmpFile("c.jsonl", Seq(
       """{"id":1,"kind":"a","v":1.0}""",

@@ -287,27 +287,6 @@ class StreamingSpec extends SparkSpec {
     assert(current() === Map("m1" -> "v2", "m2" -> "v1", "m3" -> "v1"))
   }
 
-  test("S4 time travel: readAt resolves state as of a batch; pre-compaction points refuse") {
-    val dir = Files.createTempDirectory("upsert_tt").toString
-    val b0 = Seq(("m1", 1L, "v1"), ("m2", 1L, "v1")).toDF("match_id", "version", "payload")
-    val b1 = Seq(("m1", 2L, "v2"), ("m3", 1L, "v1")).toDF("match_id", "version", "payload")
-    val b2 = Seq(("m2", 2L, "v2")).toDF("match_id", "version", "payload")
-    UpsertSink.writeDelta(b0, 0, dir)
-    UpsertSink.writeDelta(b1, 1, dir)
-    UpsertSink.writeDelta(b2, 2, dir)
-    def at(id: Long) = UpsertSink.readAt(spark, dir, Seq("match_id"), Seq("version"), id)
-      .collect().map(r => r.getString(0) -> r.getString(2)).toMap
-    assert(at(0) === Map("m1" -> "v1", "m2" -> "v1"))
-    assert(at(1) === Map("m1" -> "v2", "m2" -> "v1", "m3" -> "v1"))
-    assert(at(2) === Map("m1" -> "v2", "m2" -> "v2", "m3" -> "v1"))
-    assert(at(99) === at(2)) // future point = current state
-    // compaction folds history: tag = 3, so batches <= 1 are gone
-    UpsertSink.compact(spark, dir, Seq("match_id"), Seq("version"))
-    assert(at(2) === Map("m1" -> "v2", "m2" -> "v2", "m3" -> "v1"))
-    val err = intercept[IllegalArgumentException](at(0))
-    assert(err.getMessage.contains("folded"))
-  }
-
   test("E1+E2 topology: queues, api joins, ARAM gate, self-feeding frontier") {
     val base = Files.createTempDirectory("topo").toString
     val userQ = s"$base/users"; val matchQ = s"$base/matches"
