@@ -52,7 +52,7 @@ object Preprocess {
   /** Fit exact (interpolated) percentile bounds on the train set only.
     * Exact, not approx: pandas `quantile` interpolates linearly and the
     * DuckDB oracle (`quantile_cont`) agrees; `percentile_approx` does not.
-    * Sort-based (see [[graft.ops.Aggregates.sortedPercentiles]]) — the
+    * Sort-based (see [[graft.ops.Aggregates.sortedPercentilesMulti]]) — the
     * `Percentile` hash-map aggregate is the bottleneck on
     * wide-cardinality doubles.
     */

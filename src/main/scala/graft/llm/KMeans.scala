@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** k-means cells over an embedding column — the coarse quantizer behind
@@ -49,16 +49,23 @@ object KMeans {
     * unchanged: struct min orders by (dist2, cell)).
     */
   def assign(dfq: DataFrame, idCol: String, cents: Seq[Array[Double]]): DataFrame = {
-    val centsLit = typedLit(cents.map(_.toSeq))
-    val scored = transform(centsLit, (cv, i) =>
-      struct(
-        aggregate(zip_with(col("xq"), cv, (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x).as("d2"),
-        i.cast("int").as("cell")))
+    val scored = centroidDistances(cents)
     dfq.withColumn("best", array_min(scored))
       .select(col(idCol), col("xq"),
         col("best.cell").as("cell"), col("best.d2").as("dist2"))
   }
+
+  /** Per row, the array of (d2, cell) structs: squared L2 from `xq` to
+    * every centroid, folded left to right, with the centroid matrix as
+    * one literal — what [[assign]], [[silhouetteSimplified]] and
+    * [[Pq.routeCells]] rank.
+    */
+  private[llm] def centroidDistances(cents: Seq[Array[Double]]): Column =
+    transform(typedLit(cents.map(_.toSeq)), (cv, i) =>
+      struct(
+        aggregate(zip_with(col("xq"), cv, (a, b) => (a - b) * (a - b)),
+          lit(0.0), (acc, x) => acc + x).as("d2"),
+        i.cast("int").as("cell")))
 
   /** Simplified silhouette (the centroid-based form of Rousseeuw 1987,
     * a.k.a. the "simplified silhouette" of Vendramin et al. 2010):
@@ -86,12 +93,7 @@ object KMeans {
   def silhouetteSimplified(dfq: DataFrame, idCol: String,
       cents: Seq[Array[Double]]): DataFrame = {
     require(cents.size >= 2, "silhouette needs k >= 2 clusters")
-    val centsLit = typedLit(cents.map(_.toSeq))
-    val scored = transform(centsLit, (cv, i) =>
-      struct(
-        aggregate(zip_with(col("xq"), cv, (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x).as("d2"),
-        i.cast("int").as("cell")))
+    val scored = centroidDistances(cents)
     val a = sqrt(col("best.d2"))
     val b = sqrt(col("bmin"))
     val s = when(greatest(a, b) > 0, (b - a) / greatest(a, b)).otherwise(lit(0.0))

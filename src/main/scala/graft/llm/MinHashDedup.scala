@@ -219,7 +219,7 @@ object MinHashDedup {
     * pairs are 1.0 by set identity (emitted only when 1.0 clears the
     * threshold). Cost is the true output size.
     */
-  private def expandGroupPairs(repPairs: DataFrame, repKey: DataFrame,
+  private[llm] def expandGroupPairs(repPairs: DataFrame, repKey: DataFrame,
       members: DataFrame, idCol: String, threshold: Double): DataFrame = {
     val ga = members.select(col("gkey").as("gk_a"), col(idCol).as("id_a"))
     val gb = members.select(col("gkey").as("gk_b"), col(idCol).as("id_b"))

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -290,6 +290,40 @@ object Multimodal {
     b.array()
   }
 
+  /** One synthetic media row per input row: the `cols` are read as longs
+    * (the first is the media id), and `render` turns them into the
+    * payload of the given `kind`. Per-row generation: independent of
+    * partitioning and run order.
+    */
+  private def synthetic(df: DataFrame, kind: String, cols: Column*)(
+      render: Row => Array[Byte]): DataFrame = {
+    val rdd = df.select(cols.map(_.cast("long")): _*).rdd.mapPartitions { rows =>
+      rows.map(r => Row(r.getLong(0), kind, render(r)))
+    }
+    df.sparkSession.createDataFrame(rdd, syntheticSchema)
+  }
+
+  /** A w×h RGB image of the seed's pixel hash, encoded by `javax.imageio`
+    * in `format` — the GIF and JPEG generators' shared body.
+    */
+  private def renderImageIo(seed: Long, w: Int, h: Int, format: String): Array[Byte] = {
+    val im = new java.awt.image.BufferedImage(w, h,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val v = ((seed * 2654435761L + x * 97L + y * 193L) & 0xFFFFFFL).toInt
+        im.setRGB(x, y, v)
+        x += 1
+      }
+      y += 1
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(im, format, bos)
+    bos.toByteArray
+  }
+
   /** Deterministic synthetic 24-bit BMP payloads — the UNCOMPRESSED twin
     * of [[syntheticPngs]] with identical per-id pixels. PNG's inflate
     * step is what keeps a PNG decode outside SQL's reach; BMP has no
@@ -299,13 +333,8 @@ object Multimodal {
     * the Spark side still runs the REAL `javax.imageio` decode path.
     * Per-row generation: independent of partitioning and run order.
     */
-  def syntheticBmps(ids: DataFrame, idCol: String, w: Int, h: Int): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.select(col(idCol).cast("long")).rdd.mapPartitions { rows =>
-      rows.map(r => Row(r.getLong(0), "image", renderBmp(r.getLong(0), w, h)))
-    }
-    spark.createDataFrame(rdd, syntheticSchema)
-  }
+  def syntheticBmps(ids: DataFrame, idCol: String, w: Int, h: Int): DataFrame =
+    synthetic(ids, "image", col(idCol))(r => renderBmp(r.getLong(0), w, h))
 
   /** Hand-encoded binary PPM (P6) with the SAME pixel function as
     * [[renderPng]]/[[renderBmp]]: header `P6\n<w> <h>\n255\n`, then RGB
@@ -339,14 +368,8 @@ object Multimodal {
     * the PNG twin [[syntheticPngVariants]] adds overlay variants on top).
     */
   def syntheticBmpVariants(df: DataFrame, idCol: String, seedCol: String,
-      w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(idCol).cast("long"), col(seedCol).cast("long"))
-      .rdd.mapPartitions { rows =>
-        rows.map(r => Row(r.getLong(0), "image", renderBmp(r.getLong(1), w, h)))
-      }
-    spark.createDataFrame(rdd, syntheticSchema)
-  }
+      w: Int, h: Int): DataFrame =
+    synthetic(df, "image", col(idCol), col(seedCol))(r => renderBmp(r.getLong(1), w, h))
 
   /** Deterministic synthetic P6 payloads — the second uncompressed twin
     * of [[syntheticPngs]] (see [[syntheticBmps]]): every pixel at a
@@ -355,13 +378,8 @@ object Multimodal {
     * the real [[PpmCodec]] parse. Per-row generation: independent of
     * partitioning and run order.
     */
-  def syntheticPpms(ids: DataFrame, idCol: String, w: Int, h: Int): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.select(col(idCol).cast("long")).rdd.mapPartitions { rows =>
-      rows.map(r => Row(r.getLong(0), "image", renderPpm(r.getLong(0), w, h)))
-    }
-    spark.createDataFrame(rdd, syntheticSchema)
-  }
+  def syntheticPpms(ids: DataFrame, idCol: String, w: Int, h: Int): DataFrame =
+    synthetic(ids, "image", col(idCol))(r => renderPpm(r.getLong(0), w, h))
 
   /** Deterministic synthetic PNG payloads, one per input id — REAL encoded
     * images (`javax.imageio`) whose pixels derive arithmetically from the
@@ -369,13 +387,8 @@ object Multimodal {
     * decode → pixels) without external media in the sandbox. Per-row
     * generation: output is independent of partitioning and run order.
     */
-  def syntheticPngs(ids: DataFrame, idCol: String, w: Int, h: Int): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.select(col(idCol).cast("long")).rdd.mapPartitions { rows =>
-      rows.map(r => Row(r.getLong(0), "image", renderPng(r.getLong(0), 0L, w, h)))
-    }
-    spark.createDataFrame(rdd, syntheticSchema)
-  }
+  def syntheticPngs(ids: DataFrame, idCol: String, w: Int, h: Int): DataFrame =
+    synthetic(ids, "image", col(idCol))(r => renderPng(r.getLong(0), 0L, w, h))
 
   /** Deterministic synthetic GIF payloads — the third real
     * `javax.imageio` format on the decode surface (after PNG and BMP).
@@ -385,29 +398,8 @@ object Multimodal {
     * of the decode is fully oracle-checkable while the pixel leg rides
     * the same ImageIO machinery the BMP twin already hash-verifies.
     */
-  def syntheticGifs(ids: DataFrame, idCol: String, w: Int, h: Int): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.select(col(idCol).cast("long")).rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val im = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val v = ((r.getLong(0) * 2654435761L + x * 97L + y * 193L) & 0xFFFFFFL).toInt
-            im.setRGB(x, y, v)
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, "gif", bos)
-        Row(r.getLong(0), "image", bos.toByteArray)
-      }
-    }
-    spark.createDataFrame(rdd, syntheticSchema)
-  }
+  def syntheticGifs(ids: DataFrame, idCol: String, w: Int, h: Int): DataFrame =
+    synthetic(ids, "image", col(idCol))(r => renderImageIo(r.getLong(0), w, h, "gif"))
 
   /** Deterministic synthetic JPEG payloads — the fourth real
     * `javax.imageio` format on the decode surface. JPEG's entropy-coded
@@ -419,29 +411,8 @@ object Multimodal {
     * decode is fully oracle-checkable (the q_gif_dims discipline) while
     * the pixel leg stays explicitly out of scope.
     */
-  def syntheticJpegs(ids: DataFrame, idCol: String, w: Int, h: Int): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.select(col(idCol).cast("long")).rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val im = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val v = ((r.getLong(0) * 2654435761L + x * 97L + y * 193L) & 0xFFFFFFL).toInt
-            im.setRGB(x, y, v)
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(im, "jpg", bos)
-        Row(r.getLong(0), "image", bos.toByteArray)
-      }
-    }
-    spark.createDataFrame(rdd, syntheticSchema)
-  }
+  def syntheticJpegs(ids: DataFrame, idCol: String, w: Int, h: Int): DataFrame =
+    synthetic(ids, "image", col(idCol))(r => renderImageIo(r.getLong(0), w, h, "jpg"))
 
   /** [[syntheticPngs]] with an explicit (seed, variant) per id: equal seeds
     * render the same base image; variant > 0 adds a tiny overlay patch —
@@ -449,15 +420,9 @@ object Multimodal {
     * perceptual-hash rung is built to catch.
     */
   def syntheticPngVariants(df: DataFrame, idCol: String, seedCol: String,
-      variantCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(idCol).cast("long"), col(seedCol).cast("long"),
-      col(variantCol).cast("long")).rdd.mapPartitions { rows =>
-      rows.map(r => Row(r.getLong(0), "image",
-        renderPng(r.getLong(1), r.getLong(2), w, h)))
-    }
-    spark.createDataFrame(rdd, syntheticSchema)
-  }
+      variantCol: String, w: Int, h: Int): DataFrame =
+    synthetic(df, "image", col(idCol), col(seedCol), col(variantCol))(r =>
+      renderPng(r.getLong(1), r.getLong(2), w, h))
 
   private val decodedSchema = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -625,29 +590,17 @@ object Multimodal {
     * order.
     */
   def syntheticWavs(ids: DataFrame, idCol: String, nSamples: Int,
-      sampleRate: Int): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.select(col(idCol).cast("long")).rdd.mapPartitions { rows =>
-      rows.map(r => Row(r.getLong(0), "audio",
-        renderWav(r.getLong(0), nSamples, sampleRate)))
-    }
-    spark.createDataFrame(rdd, syntheticSchema)
-  }
+      sampleRate: Int): DataFrame =
+    synthetic(ids, "audio", col(idCol))(r => renderWav(r.getLong(0), nSamples, sampleRate))
 
   /** [[syntheticWavs]] with an explicit seed per id — equal seeds render
     * byte-identical clips under fresh ids: the duplicate-bearing corpus
     * shape the audio dedup rung is tested against.
     */
   def syntheticWavVariants(df: DataFrame, idCol: String, seedCol: String,
-      nSamples: Int, sampleRate: Int): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(idCol).cast("long"), col(seedCol).cast("long"))
-      .rdd.mapPartitions { rows =>
-        rows.map(r => Row(r.getLong(0), "audio",
-          renderWav(r.getLong(1), nSamples, sampleRate)))
-      }
-    spark.createDataFrame(rdd, syntheticSchema)
-  }
+      nSamples: Int, sampleRate: Int): DataFrame =
+    synthetic(df, "audio", col(idCol), col(seedCol))(r =>
+      renderWav(r.getLong(1), nSamples, sampleRate))
 
   private val wavFpSchema = StructType(Seq(
     StructField("media_id", LongType, nullable = false),

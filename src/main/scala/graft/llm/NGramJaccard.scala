@@ -93,65 +93,64 @@ object NGramJaccard {
       .select(col("len_bucket"), col("gram"), col(idCol), col("n_grams"), col("rk"))
     // both sides of the candidate self-join read the prefix postings
     val prefix = if (materialize) prefixLazy.localCheckpoint(false) else prefixLazy
-    // PPJoin candidate pruning on top of the prefix join — both provably
-    // recall-free at threshold t:
-    //  - length filter: Jaccard ≥ t forces min(|A|,|B|) ≥ t·max(|A|,|B|);
-    //  - positional filter: at the pair's FIRST shared gram g (global
-    //    order), every common gram ranks ≥ g, so overlap ≤
-    //    min(|A|−rk_A(g), |B|−rk_B(g)) + 1; that first shared gram always
-    //    lies in both prefixes (it precedes the prefix witness), so
-    //    max over the joined rows of that bound is a valid pair bound.
-    //    Jaccard ≥ t needs overlap ≥ t/(1+t)·(|A|+|B|) — prune below it.
-    //    This is what kills replica-heavy corpora: a junk pair sharing
-    //    only corpus-common grams meets them LATE in the rarity order,
-    //    where the remaining-suffix bound can no longer reach α.
-    val alpha = ceil(lit(threshold / (1 + threshold)) * (col("n_a") + col("n_b")) - lit(1e-9))
-    val candidates = prefix.select(col("len_bucket"), col("gram"),
-        col(idCol).as("id_a"), col("n_grams").as("n_a"), col("rk").as("rk_a"))
-      .join(prefix.select(col("len_bucket"), col("gram"),
-        col(idCol).as("id_b"), col("n_grams").as("n_b"), col("rk").as("rk_b")),
-        Seq("len_bucket", "gram"))
+    // the id order is a pair-key predicate: it reaches the prefix join
+    // through the pruning aggregate's grouping keys
+    val repPairs = verifiedPairs(prefix, idCol, prefix, idCol, Seq("len_bucket"),
+      postings, postings, threshold)
       .filter(col("id_a") < col("id_b"))
-      .filter(least(col("n_a"), col("n_b")) >=
-        ceil(lit(threshold) * greatest(col("n_a"), col("n_b")) - lit(1e-9)))
-      .groupBy("id_a", "id_b", "n_a", "n_b")
-      .agg(max(least(col("n_a") - col("rk_a"), col("n_b") - col("rk_b")) + 1).as("ubound"))
-      .filter(col("ubound") >= alpha)
-      .select("id_a", "id_b")
-    // verify by counting shared grams through the full postings, not by
-    // array_intersect on joined gram arrays: the count join is narrow rows
-    // through whole-stage codegen (measured ~4× faster at sf0.1), and
-    // |A∩B| with |A|,|B| gives the exact Jaccard without moving arrays
-    val pa = postings.select(col(idCol).as("id_a"), col("gram"), col("n_grams").as("n_a"))
-    val pb = postings.select(col(idCol).as("id_b"), col("gram"), col("n_grams").as("n_b"))
-    val repPairs = candidates.join(pa, "id_a").join(pb, Seq("id_b", "gram"))
-      .groupBy("id_a", "id_b", "n_a", "n_b")
-      .agg(count(lit(1)).as("shared"))
-      .select(col("id_a"), col("id_b"),
-        (col("shared").cast("double") / (col("n_a") + col("n_b") - col("shared"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
     // expand representatives back to members: Jaccard depends only on the
     // gram set, so every member of A's group pairs with every member of
     // B's group at the representatives' value, and members within one
     // group pair at exactly 1.0 (identical sets, same bucket by key
     // construction). Cost is the output size — already paid by any
     // implementation that emits these pairs.
-    val ga = members.select(col("gkey").as("gk_a"), col(idCol).as("id_a"))
-    val gb = members.select(col("gkey").as("gk_b"), col(idCol).as("id_b"))
-    val repToKey = all.select(col(idCol), col("gkey"))
-    val crossPairs = repPairs
-      .join(repToKey.select(col(idCol).as("id_a"), col("gkey").as("gk_a")), "id_a")
-      .join(repToKey.select(col(idCol).as("id_b"), col("gkey").as("gk_b")), "id_b")
-      .drop("id_a", "id_b")
-      .join(ga, "gk_a").join(gb, "gk_b")
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("jaccard"))
-    val intraPairs =
-      if (threshold > 1.0) crossPairs.limit(0)
-      else ga.join(members.select(col("gkey").as("gk_a"), col(idCol).as("id_b")), "gk_a")
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    crossPairs.unionByName(intraPairs)
+    MinHashDedup.expandGroupPairs(repPairs, all.select(col(idCol), col("gkey")),
+      members, idCol, threshold)
+  }
+
+  /** The PPJoin candidate pruning and exact verification of
+    * [[similarPairs]] and [[similarityJoin]]. `prefixA`/`prefixB` are the
+    * two sides' rarity prefixes (`keys`, gram, id, n_grams, rk), joined on
+    * `keys` and gram; `postA`/`postB` their full postings (id, gram,
+    * n_grams). Both prefix filters are recall-free at `threshold`:
+    *  - length filter: Jaccard ≥ t forces min(|A|,|B|) ≥ t·max(|A|,|B|);
+    *  - positional filter: at the pair's FIRST shared gram g (global
+    *    order), every common gram ranks ≥ g, so overlap ≤
+    *    min(|A|−rk_A(g), |B|−rk_B(g)) + 1; that first shared gram always
+    *    lies in both prefixes (it precedes the prefix witness), so max
+    *    over the joined rows of that bound is a valid pair bound. Jaccard
+    *    ≥ t needs overlap ≥ t/(1+t)·(|A|+|B|) — prune below it. This is
+    *    what kills replica-heavy corpora: a junk pair sharing only
+    *    corpus-common grams meets them LATE in the rarity order, where
+    *    the remaining-suffix bound can no longer reach α.
+    * Survivors are verified by counting shared grams through the full
+    * postings, not by array_intersect on joined gram arrays: the count
+    * join is narrow rows through whole-stage codegen (measured ~4× faster
+    * at sf0.1), and |A∩B| with |A|,|B| gives the exact Jaccard without
+    * moving arrays. Returns (id_a, id_b, jaccard ≥ threshold).
+    */
+  private def verifiedPairs(prefixA: DataFrame, idA: String, prefixB: DataFrame,
+      idB: String, keys: Seq[String], postA: DataFrame, postB: DataFrame,
+      threshold: Double): DataFrame = {
+    def side(p: DataFrame, id: String, s: String) =
+      p.select((keys :+ "gram").map(col) ++ Seq(col(id).as(s"id_$s"),
+        col("n_grams").as(s"n_$s"), col("rk").as(s"rk_$s")): _*)
+    val alpha = ceil(lit(threshold / (1 + threshold)) * (col("n_a") + col("n_b")) - lit(1e-9))
+    val candidates = side(prefixA, idA, "a").join(side(prefixB, idB, "b"), keys :+ "gram")
+      .filter(least(col("n_a"), col("n_b")) >=
+        ceil(lit(threshold) * greatest(col("n_a"), col("n_b")) - lit(1e-9)))
+      .groupBy("id_a", "id_b", "n_a", "n_b")
+      .agg(max(least(col("n_a") - col("rk_a"), col("n_b") - col("rk_b")) + 1).as("ubound"))
+      .filter(col("ubound") >= alpha)
+      .select("id_a", "id_b")
+    val pa = postA.select(col(idA).as("id_a"), col("gram"), col("n_grams").as("n_a"))
+    val pb = postB.select(col(idB).as("id_b"), col("gram"), col("n_grams").as("n_b"))
+    candidates.join(pa, "id_a").join(pb, Seq("id_b", "gram"))
+      .groupBy("id_a", "id_b", "n_a", "n_b")
+      .agg(count(lit(1)).as("shared"))
+      .select(col("id_a"), col("id_b"),
+        (col("shared").cast("double") / (col("n_a") + col("n_b") - col("shared"))).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
   }
 
   /** Cross-TABLE fuzzy similarity join (entity matching / record linkage):
@@ -213,26 +212,9 @@ object NGramJaccard {
         .select(col("gram"), col(idC), col("n_grams"), col("rk"))
       if (materialize) p.localCheckpoint(false) else p
     }
-    val alpha = ceil(lit(threshold / (1 + threshold)) * (col("n_l") + col("n_r")) - lit(1e-9))
-    val candidates = prefix(lpost, "id_l")
-      .select(col("gram"), col("id_l"), col("n_grams").as("n_l"), col("rk").as("rk_l"))
-      .join(prefix(rpost, "id_r")
-        .select(col("gram"), col("id_r"), col("n_grams").as("n_r"), col("rk").as("rk_r")),
-        Seq("gram"))
-      .filter(least(col("n_l"), col("n_r")) >=
-        ceil(lit(threshold) * greatest(col("n_l"), col("n_r")) - lit(1e-9)))
-      .groupBy("id_l", "id_r", "n_l", "n_r")
-      .agg(max(least(col("n_l") - col("rk_l"), col("n_r") - col("rk_r")) + 1).as("ubound"))
-      .filter(col("ubound") >= alpha)
-      .select("id_l", "id_r")
-    val repPairs = candidates
-      .join(lpost.select(col("id_l"), col("gram"), col("n_grams").as("n_l")), "id_l")
-      .join(rpost.select(col("id_r"), col("gram"), col("n_grams").as("n_r")), Seq("id_r", "gram"))
-      .groupBy("id_l", "id_r", "n_l", "n_r")
-      .agg(count(lit(1)).as("shared"))
-      .select(col("id_l"), col("id_r"),
-        (col("shared").cast("double") / (col("n_l") + col("n_r") - col("shared"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    val repPairs = verifiedPairs(prefix(lpost, "id_l"), "id_l", prefix(rpost, "id_r"),
+      "id_r", Seq(), lpost, rpost, threshold)
+      .select(col("id_a").as("id_l"), col("id_b").as("id_r"), col("jaccard"))
     // expand representative pairs to member pairs — cost is the true
     // output size, paid by any implementation emitting these pairs
     repPairs

@@ -77,24 +77,39 @@ object Pq {
     */
   def adcTopK(dfq: DataFrame, idCol: String, encoded: DataFrame,
       codebooks: Seq[Seq[Array[Long]]], topK: Int, queryPred: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = codebooks.size
+    val dt = distanceTable(
+      dfq.filter(queryPred).select(col(idCol).as("query_id"), col("xq")), codebooks)
+    val nbr = encoded.select(col(idCol).as("neighbor_id"),
+      posexplode(col("codes")).as(Seq("j", "code")))
+    topByAdc(nbr.join(broadcast(dt), Seq("j", "code")), topK)
+  }
+
+  /** Per query (`query_id`, `xq`): the squared L2 `d2` from its subvector
+    * j to every code of codebook j — the (query_id, j, code, d2) table
+    * the ADC lookups join.
+    */
+  private def distanceTable(queries: DataFrame,
+      codebooks: Seq[Seq[Array[Long]]]): DataFrame = {
     val sub = codebooks.head.head.length
-    val perJ = (0 until m).map { j =>
+    val perJ = codebooks.indices.map { j =>
       transform(typedLit(codebooks(j).map(_.toSeq)), (cv, i) =>
         struct(lit(j).as("j"), i.cast("int").as("code"),
           d2(slice(col("xq"), j * sub + 1, sub), cv).as("d2")))
     }
-    val dt = dfq.filter(queryPred)
-      .select(col(idCol).as("query_id"),
-        explode(flatten(array(perJ: _*))).as("e"))
+    queries
+      .select(col("query_id"), explode(flatten(array(perJ: _*))).as("e"))
       .select(col("query_id"), col("e.j").as("j"), col("e.code").as("code"),
         col("e.d2").as("d2"))
-    val nbr = encoded.select(col(idCol).as("neighbor_id"),
-      posexplode(col("codes")).as(Seq("j", "code")))
+  }
+
+  /** Sum the looked-up `d2` per (query, neighbor) into `adc` and keep each
+    * query's `topK` (ties → lower neighbor id; self excluded).
+    */
+  private def topByAdc(lookups: DataFrame, topK: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").asc, col("neighbor_id").asc)
-    nbr.join(broadcast(dt), Seq("j", "code"))
+    lookups
       .filter(col("neighbor_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("d2")).as("adc"))
@@ -111,12 +126,7 @@ object Pq {
   def routeCells(dfq: DataFrame, idCol: String, cents: Seq[Array[Double]],
       nProbe: Int, queryPred: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val centsLit = typedLit(cents.map(_.toSeq))
-    val scored = transform(centsLit, (cv, i) =>
-      struct(
-        aggregate(zip_with(col("xq"), cv, (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x).as("d2"),
-        i.cast("int").as("cell")))
+    val scored = KMeans.centroidDistances(cents)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("e.d2").asc, col("e.cell").asc)
     dfq.filter(queryPred)
@@ -138,32 +148,17 @@ object Pq {
   def ivfAdcTopK(dfq: DataFrame, idCol: String, coarse: DataFrame,
       encoded: DataFrame, codebooks: Seq[Seq[Array[Long]]], topK: Int,
       routed: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = codebooks.size
-    val sub = codebooks.head.head.length
-    val perJ = (0 until m).map { j =>
-      transform(typedLit(codebooks(j).map(_.toSeq)), (cv, i) =>
-        struct(lit(j).as("j"), i.cast("int").as("code"),
-          d2(slice(col("xq"), j * sub + 1, sub), cv).as("d2")))
-    }
-    val dt = dfq.join(routed.select(col("query_id")).distinct(),
-        col(idCol) === col("query_id"))
-      .select(col("query_id"), explode(flatten(array(perJ: _*))).as("e"))
-      .select(col("query_id"), col("e.j").as("j"), col("e.code").as("code"),
-        col("e.d2").as("d2"))
+    val dt = distanceTable(
+      dfq.join(routed.select(col("query_id")).distinct(), col(idCol) === col("query_id")),
+      codebooks)
     val nbr = encoded
       .join(coarse.withColumnRenamed(idCol, "__nid"),
         encoded(idCol) === col("__nid"))
       .select(col(idCol).as("neighbor_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    nbr.join(broadcast(routed), Seq("cell"))
-      .join(broadcast(dt), Seq("query_id", "j", "code"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("d2")).as("adc"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
+    topByAdc(
+      nbr.join(broadcast(routed), Seq("cell"))
+        .join(broadcast(dt), Seq("query_id", "j", "code")),
+      topK)
   }
 }

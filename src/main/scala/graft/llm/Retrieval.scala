@@ -38,25 +38,13 @@ object Retrieval {
     val t = graft.ops.Partitioning.spread(
         docs.select(col(idCol).as("doc_id"), col(textCol)))
       .select(col("doc_id"), split(col(textCol), " ").as("ws"))
-    val stats = t.agg(count(lit(1)).as("n"),
-      (sum(size(col("ws"))).cast("double") / count(lit(1))).as("avgdl"))
     val dl = t.select(col("doc_id"), size(col("ws")).as("dl"))
 
     val termCol = terms.columns.head
     val tf = t.select(col("doc_id"), explode(col("ws")).as("term"))
       .join(broadcast(terms.select(col(termCol).as("term"))), Seq("term"))
       .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-
-    // fixed operand order, mirrored by the oracle SQL
-    tf.join(df, Seq("term"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"), col("doc_id"), col("tf"),
-        (log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
-          .as("score"))
+    score(tf, dl, k1, b)
   }
 
   /** [[bm25]] over a PRE-AGGREGATED term-frequency table — the shared-scan
@@ -99,10 +87,18 @@ object Retrieval {
 
   private def scoreFromTf(tfAll: DataFrame, dl: DataFrame, terms: DataFrame,
                           k1: Double, b: Double): DataFrame = {
+    val termCol = terms.columns.head
+    score(tfAll.join(broadcast(terms.select(col(termCol).as("term"))), Seq("term")),
+      dl, k1, b)
+  }
+
+  /** The BM25 readout over the query terms' (term, doc_id, tf) rows, with
+    * N and avgdl taken from the (doc_id, dl) length table. Fixed operand
+    * order, mirrored by the oracle SQL.
+    */
+  private def score(tf: DataFrame, dl: DataFrame, k1: Double, b: Double): DataFrame = {
     val stats = dl.agg(count(lit(1)).as("n"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-    val termCol = terms.columns.head
-    val tf = tfAll.join(broadcast(terms.select(col(termCol).as("term"))), Seq("term"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     tf.join(df, Seq("term"))
       .join(dl, Seq("doc_id"))

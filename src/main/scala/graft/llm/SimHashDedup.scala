@@ -48,12 +48,6 @@ object SimHashDedup {
     }
   }
 
-  /** Hamming distance between two equal-length bit strings, as expression. */
-  def hamming(a: Column, b: Column, bits: Int = 32): Column =
-    (1 to bits).map { j =>
-      when(substring(a, j, 1) =!= substring(b, j, 1), 1).otherwise(0)
-    }.reduce((x, y) => x + y).cast("long")
-
   /** Near-duplicate pairs: band the signature into maxDist+1 contiguous
     * segments — by pigeonhole, a pair within hamming ≤ maxDist has its ≤
     * maxDist differing bits spread over at most maxDist bands, so at least

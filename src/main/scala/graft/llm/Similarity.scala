@@ -213,14 +213,21 @@ object Similarity {
       lshBucket(col(vecCol), signs).as("bucket"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
       lshBucket(col(vecCol), signs).as("bucket"))
-    c.join(broadcast(q), Seq("bucket"))
+    topCosine(c.join(broadcast(q), Seq("bucket")), k)
+  }
+
+  /** Score candidate (query_id, q_vec, neighbor_id, c_vec) pairs by exact
+    * cosine and keep each query's `k` best (ties → lower neighbor id; self
+    * excluded): (query_id, neighbor_id, cosine, rank).
+    */
+  private def topCosine(candidates: DataFrame, k: Int): DataFrame =
+    candidates
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long").as("rank"))
-  }
 
   /** All same-LSH-bucket pairs scored by exact cosine — the candidate
     * relation under both the top-k near-dup view and semantic dedup. One
@@ -417,13 +424,7 @@ object Similarity {
       .filter(col("c_rank") <= nProbe)
       .select(col("query_id"), col("q_vec"), col("cell"))
     val c = corpus.select(col(cellCol).as("cell"), col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    c.join(broadcast(routed), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long").as("rank"))
+    topCosine(c.join(broadcast(routed), Seq("cell")), k)
   }
 
   /** Johnson–Lindenstrauss random projection (Achlioptas 2003, the ±1

@@ -409,14 +409,6 @@ object TextAnalysis {
   def keyness(docs: DataFrame, textCol: String, inACol: Column,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val base = docs
-      .filter(col(textCol).isNotNull && inACol.isNotNull)
-      .select(inACol.cast("boolean").as("a"),
-        explode(tokens(col(textCol))).as("term"))
-    val tf = base.groupBy("term")
-      .agg(count_if(col("a")).as("tf_a"), count_if(!col("a")).as("tf_b"))
-      .localCheckpoint(false) // totals + the readout share it
-    val tot = tf.agg(sum(col("tf_a")).as("na"), sum(col("tf_b")).as("nb"))
     val t = col("tf_a") + col("tf_b")
     val ea = col("na").cast("double") * t / (col("na") + col("nb"))
     val eb = col("nb").cast("double") * t / (col("na") + col("nb"))
@@ -427,7 +419,7 @@ object TextAnalysis {
       when(col("tf_b") > 0,
         col("tf_b").cast("double") * log(col("tf_b").cast("double") / eb))
         .otherwise(lit(0.0)))
-    tf.crossJoin(broadcast(tot))
+    sliceCounts(docs, textCol, inACol)
       .select(col("term"), col("tf_a"), col("tf_b"),
         (floor(g2 * 1e6 + 0.5) / 1e6).as("g2"),
         when(col("tf_a").cast("double") * col("nb") >
@@ -435,6 +427,22 @@ object TextAnalysis {
           .otherwise(lit("B")).as("enriched_in"))
       .orderBy(col("g2").desc, col("term").asc)
       .limit(k)
+  }
+
+  /** Per term, its token count in slice A (`tf_a`, `inACol` true) and in
+    * slice B (`tf_b`), with the slice totals `na`/`nb` broadcast onto
+    * every row — the table [[keyness]] and [[monroeLogOdds]] score.
+    */
+  private def sliceCounts(docs: DataFrame, textCol: String, inACol: Column): DataFrame = {
+    val base = docs
+      .filter(col(textCol).isNotNull && inACol.isNotNull)
+      .select(inACol.cast("boolean").as("a"),
+        explode(tokens(col(textCol))).as("term"))
+    val tf = base.groupBy("term")
+      .agg(count_if(col("a")).as("tf_a"), count_if(!col("a")).as("tf_b"))
+      .localCheckpoint(false) // totals + the readout share it
+    val tot = tf.agg(sum(col("tf_a")).as("na"), sum(col("tf_b")).as("nb"))
+    tf.crossJoin(broadcast(tot))
   }
 
   /** Monroe–Colaresi–Quinn (2008) "Fightin' Words" log-odds keyness with
@@ -462,14 +470,6 @@ object TextAnalysis {
       priorMass: Double, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(priorMass > 0, s"priorMass must be > 0, got $priorMass")
-    val base = docs
-      .filter(col(textCol).isNotNull && inACol.isNotNull)
-      .select(inACol.cast("boolean").as("a"),
-        explode(tokens(col(textCol))).as("term"))
-    val tf = base.groupBy("term")
-      .agg(count_if(col("a")).as("tf_a"), count_if(!col("a")).as("tf_b"))
-      .localCheckpoint(false) // totals + the readout share it
-    val tot = tf.agg(sum(col("tf_a")).as("na"), sum(col("tf_b")).as("nb"))
     val alphaT = lit(priorMass) * (col("tf_a") + col("tf_b")).cast("double") /
       (col("na") + col("nb")).cast("double")
     val a0 = lit(priorMass)
@@ -481,7 +481,7 @@ object TextAnalysis {
     val sigma = sqrt(lit(1.0) / (col("tf_a") + alphaT) +
       lit(1.0) / (col("tf_b") + alphaT))
     val z = delta / sigma
-    tf.crossJoin(broadcast(tot))
+    sliceCounts(docs, textCol, inACol)
       .select(col("term"), col("tf_a"), col("tf_b"),
         (floor(delta * 1e6 + 0.5) / 1e6).as("delta"),
         (floor(z * 1e6 + 0.5) / 1e6).as("z"),
@@ -887,7 +887,6 @@ object TextAnalysis {
   def heapsLaw(docs: DataFrame, idCol: String, textCol: String,
       minLen: Int = 1, checkpoints: Int = 10): DataFrame = {
     require(checkpoints >= 2, "need at least 2 checkpoints for a fit")
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val toks = docs.filter(col(idCol).isNotNull)
       .select(col(idCol).as("doc"),
         posexplode(split(col(textCol), " ")).as(Seq("pos", "term")))
@@ -912,21 +911,32 @@ object TextAnalysis {
     val vAt = firsts.crossJoin(broadcast(ck))
       .filter(col("fg") <= col("n"))
       .groupBy(col("j"), col("n")).agg(count(lit(1)).as("v"))
-    val q = vAt
-      .withColumn("xq", floor(log(col("n").cast("double")) * 1e9 + lit(0.5)).cast(dec))
-      .withColumn("yq", floor(log(col("v").cast("double")) * 1e9 + lit(0.5)).cast(dec))
+    val fit = logLogFit(vAt, "n", "v")
+      .select(col("slope").as("beta"), col("coef").as("k_coef"))
+    vAt.select(col("j"), col("n"), col("v"))
+      .crossJoin(broadcast(fit))
+  }
+
+  /** The one-row OLS fit of ln y on ln x over `points` — (slope, coef)
+    * with y ≈ coef·x^slope — that [[heapsLaw]] and [[zipfFit]] report:
+    * both logs land on the 1e-9 grid as decimal(38,0) before the moment
+    * sums, so the fit is order-free.
+    */
+  private def logLogFit(points: DataFrame, x: String, y: String): DataFrame = {
+    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
+    val q = points
+      .withColumn("xq", floor(log(col(x).cast("double")) * 1e9 + lit(0.5)).cast(dec))
+      .withColumn("yq", floor(log(col(y).cast("double")) * 1e9 + lit(0.5)).cast(dec))
     val m = q.agg(count(lit(1)).cast(dec).as("m"),
       sum(col("xq")).as("sx"), sum(col("yq")).as("sy"),
       sum((col("xq") * col("yq")).cast(dec)).as("sxy"),
       sum((col("xq") * col("xq")).cast(dec)).as("sxx"))
-    val beta = (col("m") * col("sxy") - col("sx") * col("sy")).cast("double") /
+    val slope = (col("m") * col("sxy") - col("sx") * col("sy")).cast("double") /
       (col("m") * col("sxx") - col("sx") * col("sx")).cast("double")
-    val fit = m.select(beta.as("beta"),
+    m.select(slope.as("slope"),
       exp((col("sy").cast("double") / 1e9 -
-        beta * (col("sx").cast("double") / 1e9)) / col("m").cast("double"))
-        .as("k_coef"))
-    q.select(col("j"), col("n"), col("v"))
-      .crossJoin(broadcast(fit))
+        slope * (col("sx").cast("double") / 1e9)) / col("m").cast("double"))
+        .as("coef"))
   }
 
   /** Zipf rank-frequency fit over the corpus unigram distribution:
@@ -951,7 +961,6 @@ object TextAnalysis {
   def zipfFit(docs: DataFrame, textCol: String, minLen: Int = 1,
       topR: Int = 1000): DataFrame = {
     require(topR >= 4, "need topR >= 4 ranks for a fit")
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val tf = docs
       .select(explode(split(col(textCol), " ")).as("term"))
       .filter(length(col("term")) >= minLen)
@@ -962,19 +971,8 @@ object TextAnalysis {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= topR)
       .select(col("rank"), col("tf"))
-    val q = ranked
-      .withColumn("xq", floor(log(col("rank").cast("double")) * 1e9 + lit(0.5)).cast(dec))
-      .withColumn("yq", floor(log(col("tf").cast("double")) * 1e9 + lit(0.5)).cast(dec))
-    val m = q.agg(count(lit(1)).cast(dec).as("m"),
-      sum(col("xq")).as("sx"), sum(col("yq")).as("sy"),
-      sum((col("xq") * col("yq")).cast(dec)).as("sxy"),
-      sum((col("xq") * col("xq")).cast(dec)).as("sxx"))
-    val slope = (col("m") * col("sxy") - col("sx") * col("sy")).cast("double") /
-      (col("m") * col("sxx") - col("sx") * col("sx")).cast("double")
-    val fit = m.select(slope.as("slope"),
-      exp((col("sy").cast("double") / 1e9 -
-        slope * (col("sx").cast("double") / 1e9)) / col("m").cast("double"))
-        .as("c_coef"))
+    val fit = logLogFit(ranked, "rank", "tf")
+      .select(col("slope"), col("coef").as("c_coef"))
     ranked
       .filter((col("rank").bitwiseAND(col("rank") - 1)) === 0)
       .crossJoin(broadcast(fit))

@@ -45,39 +45,18 @@ object Aggregates {
     * the bottleneck (every distinct value is an entry merged on the
     * driver); a sort is the shape that scales — at 100 TB this is the
     * only viable exact path.
-    */
-  def sortedPercentiles(df: DataFrame, valueCol: String, ps: Seq[Double]): Seq[Double] = {
-    val sorted = df.select(col(valueCol).cast("double")).na.drop()
-      .orderBy(col(valueCol)).rdd.map(_.getDouble(0))
-      .zipWithIndex().map(_.swap).cache()
-    try {
-      val n = sorted.count()
-      require(n > 0, s"sortedPercentiles on empty column $valueCol")
-      val targets = ps.flatMap { p =>
-        val q = p * (n - 1); Seq(math.floor(q).toLong, math.ceil(q).toLong)
-      }.distinct.toSet
-      val vals = sorted.filter { case (i, _) => targets.contains(i) }.collect().toMap
-      ps.map { p =>
-        val q = p * (n - 1)
-        val lo = math.floor(q).toLong; val hi = math.ceil(q).toLong
-        val vLo = vals(lo); val vHi = vals(hi)
-        if (lo == hi) vLo else vLo + (q - lo) * (vHi - vLo)
-      }
-    } finally { sorted.unpersist(false); () }
-  }
-
-  /** Multi-column form of [[sortedPercentiles]]: ONE scan and ONE shuffle
-    * for any number of columns, with parallelism independent of the column
-    * count. Columns are melted to (name, value) rows (`stack`) and
-    * RANGE-partitioned on (name, value) — each column's sort spreads over
-    * many partitions instead of one reducer per column (a per-name window
-    * would cap parallelism at |cols|, which dies at scale when fitting 2-3
-    * columns over billions of rows). Two cheap passes over the sorted,
-    * locally-checkpointed pairs: (1) per-partition per-name counts (≤
-    * P·|cols| numbers to the driver) give every partition its global
-    * starting offset per name; (2) each partition emits only the rows whose
-    * global per-name index is a percentile boundary. Interpolation math is
-    * identical to `percentile` / pandas / DuckDB `quantile_cont`.
+    *
+    * ONE scan and ONE shuffle for any number of columns, with parallelism
+    * independent of the column count. Columns are melted to (name, value)
+    * rows (`stack`) and RANGE-partitioned on (name, value) — each column's
+    * sort spreads over many partitions instead of one reducer per column
+    * (a per-name window would cap parallelism at |cols|, which dies at
+    * scale when fitting 2-3 columns over billions of rows). Two cheap
+    * passes over the sorted, locally-checkpointed pairs: (1) per-partition
+    * per-name counts (≤ P·|cols| numbers to the driver) give every
+    * partition its global starting offset per name; (2) each partition
+    * emits only the rows whose global per-name index is a percentile
+    * boundary.
     */
   def sortedPercentilesMulti(df: DataFrame, cols: Seq[String],
       ps: Seq[Double]): Map[String, Seq[Double]] = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,31 +25,8 @@ object AsOfJoin {
     * Unmatched left rows keep null right columns (left-outer semantics;
     * filter `r_<ts> IS NOT NULL` for inner).
     */
-  def backward(left: DataFrame, right: DataFrame, keyCols: Seq[String], tsCol: String): DataFrame = {
-    val leftPayload = left.columns.filterNot(c => keyCols.contains(c))
-    val rightPayload = right.columns.filterNot(c => keyCols.contains(c))
-
-    val l = left.select(
-      keyCols.map(col) ++ Seq(col(tsCol).as("__ts"), lit(1).as("__side"),
-        struct(leftPayload.map(col): _*).as("__l"), lit(null).cast(
-          right.select(struct(rightPayload.map(col): _*)).schema.head.dataType).as("__r")): _*)
-    val r = right.select(
-      keyCols.map(col) ++ Seq(col(tsCol).as("__ts"), lit(0).as("__side"),
-        lit(null).cast(left.select(struct(leftPayload.map(col): _*)).schema.head.dataType).as("__l"),
-        struct(rightPayload.map(col): _*).as("__r")): _*)
-
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("__ts").asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val matched = l.unionByName(r)
-      .withColumn("__match", last(col("__r"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-
-    val leftCols = keyCols.map(col) ++ leftPayload.map(c => col(s"__l.$c").as(c))
-    val rightCols = rightPayload.map(c => col(s"__match.$c").as(s"r_$c"))
-    matched.select(leftCols ++ rightCols: _*)
-  }
+  def backward(left: DataFrame, right: DataFrame, keyCols: Seq[String], tsCol: String): DataFrame =
+    carryRight(left, right, keyCols, tsCol, col("__ts").asc)
 
   /** Forward as-of join: for every left row, the right row with the
     * SMALLEST timestamp ≥ the left row's timestamp per key — next-touch
@@ -59,7 +36,16 @@ object AsOfJoin {
     * timestamps (≥ inclusive), and the same last-non-null carry walks
     * the future side. Identical one-shuffle cost.
     */
-  def forward(left: DataFrame, right: DataFrame, keyCols: Seq[String], tsCol: String): DataFrame = {
+  def forward(left: DataFrame, right: DataFrame, keyCols: Seq[String], tsCol: String): DataFrame =
+    carryRight(left, right, keyCols, tsCol, col("__ts").desc)
+
+  /** The as-of composition both directions share: the tagged union sorted
+    * per key by `tsOrder` (on the unified timestamp `__ts`), right rows
+    * first at equal timestamps, with the last non-null right payload
+    * carried onto each left row.
+    */
+  private def carryRight(left: DataFrame, right: DataFrame, keyCols: Seq[String],
+      tsCol: String, tsOrder: Column): DataFrame = {
     val leftPayload = left.columns.filterNot(c => keyCols.contains(c))
     val rightPayload = right.columns.filterNot(c => keyCols.contains(c))
 
@@ -73,7 +59,7 @@ object AsOfJoin {
         struct(rightPayload.map(col): _*).as("__r")): _*)
 
     val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("__ts").desc, col("__side").asc)
+      .orderBy(tsOrder, col("__side").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     val matched = l.unionByName(r)

@@ -113,15 +113,7 @@ object Attribution {
     */
   def transitionSurprise(df: DataFrame, entityCol: String, tsCol: String,
       tieCol: String, typeCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(entityCol)
-      .orderBy(col(tsCol).asc, col(tieCol).asc)
-    val trans = df
-      .filter(col(entityCol).isNotNull && col(tsCol).isNotNull &&
-        col(typeCol).isNotNull)
-      .withColumn("__next", lead(col(typeCol), 1).over(w))
-      .filter(col("__next").isNotNull)
-      .select(col(entityCol), col(typeCol).as("a"), col("__next").as("b"))
+    val trans = transitions(df, entityCol, tsCol, tieCol, typeCol)
       .localCheckpoint(false) // feeds the model AND the scoring pass
     val model = trans.groupBy("a", "b").agg(count(lit(1)).as("c"))
     val fromTot = model.groupBy("a").agg(sum(col("c")).as("ca"))
@@ -135,6 +127,21 @@ object Attribution {
       .agg(count(lit(1)).as("n_trans"), sum(col("lp")).as("s"))
       .select(col(entityCol), col("n_trans"),
         (col("s").cast("double") / col("n_trans") / 1e12).as("surprise"))
+  }
+
+  /** Every consecutive event pair of an entity, in (ts, tie) order:
+    * (entity, a = type, b = next type) — what [[transitionSurprise]] and
+    * [[transitionEntropy]] count.
+    */
+  private def transitions(df: DataFrame, entityCol: String, tsCol: String,
+      tieCol: String, typeCol: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(entityCol)
+      .orderBy(col(tsCol).asc, col(tieCol).asc)
+    df.filter(col(entityCol).isNotNull && col(tsCol).isNotNull &&
+        col(typeCol).isNotNull)
+      .withColumn("__next", lead(col(typeCol), 1).over(w))
+      .filter(col("__next").isNotNull)
+      .select(col(entityCol), col(typeCol).as("a"), col("__next").as("b"))
   }
 
   /** Entropy rate of the event stream — the corpus-level summary
@@ -161,16 +168,8 @@ object Attribution {
     */
   def transitionEntropy(df: DataFrame, entityCol: String, tsCol: String,
       tieCol: String, typeCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(entityCol)
-      .orderBy(col(tsCol).asc, col(tieCol).asc)
-    val trans = df
-      .filter(col(entityCol).isNotNull && col(tsCol).isNotNull &&
-        col(typeCol).isNotNull)
-      .withColumn("__next", lead(col(typeCol), 1).over(w))
-      .filter(col("__next").isNotNull)
-      .select(col(typeCol).as("a"), col("__next").as("b"))
-    val cells = trans.groupBy("a", "b").agg(count(lit(1)).as("c"))
+    val cells = transitions(df, entityCol, tsCol, tieCol, typeCol)
+      .groupBy("a", "b").agg(count(lit(1)).as("c"))
       .localCheckpoint(false) // totals + both entropies read it
     val fromTot = cells.groupBy("a").agg(sum(col("c")).as("ca"))
     val grand = cells.agg(sum(col("c")).as("t"),

@@ -63,6 +63,37 @@ object Bootstrap {
       struct(i.as("rep"), graft.llm.Sampling.hashUniform(
         concat(key.cast("string"), lit("#"), i.cast("string"))).as("u"))))
 
+  /** The bootstrap input of [[meanCI]] and [[medianCI]]: rows with a
+    * non-null group, value and key as (g, x, k), spread to the
+    * parallelism floor before the ×B replica work (single-row-group local
+    * inputs scan as ONE task; no-op at scale — see Partitioning.spread).
+    */
+  private def replicaInput(df: DataFrame, groupCol: String, valueCol: String,
+      keyCol: String, b: Int, tail: Double): DataFrame = {
+    require(b >= 4, s"need >= 4 replicas, got $b")
+    require(tail > 0 && tail < 0.5, s"tail must be in (0, 0.5): $tail")
+    Partitioning.spread(
+      df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull &&
+        col(keyCol).isNotNull)
+        .select(col(groupCol).as("g"), col(valueCol).as("x"), col(keyCol).as("k")))
+  }
+
+  /** Per group `g`, the replica statistic `stat` at the lower-quantile
+    * ranks ⌈tail·B⌉ and ⌈(1−tail)·B⌉ of its B non-null values:
+    * (g, ci_lo, ci_hi).
+    */
+  private def percentileCI(reps: DataFrame, stat: String, tail: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val ranked = reps.filter(col(stat).isNotNull)
+      .withColumn("rn", row_number().over(Window.partitionBy("g").orderBy(col(stat).asc)))
+      .withColumn("nb", count(lit(1)).over(Window.partitionBy("g")))
+    val lo = ceil(col("nb") * tail).cast("long")
+    val hi = ceil(col("nb") * (1.0 - tail)).cast("long")
+    ranked.groupBy(col("g"))
+      .agg(min(when(col("rn") === lo, col(stat))).as("ci_lo"),
+        min(when(col("rn") === hi, col(stat))).as("ci_hi"))
+  }
+
   /** Percentile bootstrap CI for the per-group MEAN of `valueCol`:
     * (group, n, est, ci_lo, ci_hi) at confidence `1 − 2·tail` using `b`
     * replicas. `keyCol` seeds the per-row draw (unique non-null row
@@ -79,35 +110,19 @@ object Bootstrap {
     */
   def meanCI(df: DataFrame, groupCol: String, valueCol: String,
              keyCol: String, b: Int = 40, tail: Double = 0.025): DataFrame = {
-    require(b >= 4, s"need >= 4 replicas, got $b")
-    require(tail > 0 && tail < 0.5, s"tail must be in (0, 0.5): $tail")
-    import org.apache.spark.sql.expressions.Window
-    // parallelism floor before the ×B digest work (single-row-group local
-    // inputs scan as ONE task; no-op at scale — see Partitioning.spread)
-    val base = Partitioning.spread(
-      df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull &&
-        col(keyCol).isNotNull)
-        .select(col(groupCol), col(valueCol), col(keyCol)))
+    val base = replicaInput(df, groupCol, valueCol, keyCol, b, tail)
     val reps = base
-      .select(col(groupCol).as("g"), col(valueCol).cast("double").as("x"),
-        replicaDraws(col(keyCol), b).as("d"))
+      .select(col("g"), col("x").cast("double").as("x"),
+        replicaDraws(col("k"), b).as("d"))
       .select(col("g"), col("x"), col("d.rep").as("rep"),
         poissonWeightFromU(col("d.u")).as("w"))
       .groupBy("g", "rep")
       .agg(sum(col("w") * col("x")).as("wx"), sum(col("w")).as("wn"))
       .withColumn("m", when(col("wn") > 0, col("wx") / col("wn")))
-    val wOrd = Window.partitionBy("g").orderBy(col("m").asc)
-    val ranked = reps.filter(col("m").isNotNull)
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("nb", count(lit(1)).over(Window.partitionBy("g")))
-    val lo = ceil(col("nb") * tail).cast("long")
-    val hi = ceil(col("nb") * (1.0 - tail)).cast("long")
-    val ci = ranked.groupBy(col("g"))
-      .agg(min(when(col("rn") === lo, col("m"))).as("ci_lo"),
-        min(when(col("rn") === hi, col("m"))).as("ci_hi"))
-    val est = base.groupBy(col(groupCol).as("g"))
+    val ci = percentileCI(reps, "m", tail)
+    val est = base.groupBy(col("g"))
       .agg(count(lit(1)).as("n"),
-        (sum(col(valueCol).cast("double")) / count(lit(1))).as("est"))
+        (sum(col("x").cast("double")) / count(lit(1))).as("est"))
     est.join(ci, Seq("g"))
       .select(col("g").as(groupCol), col("n"), col("est"),
         col("ci_lo"), col("ci_hi"))
@@ -128,14 +143,9 @@ object Bootstrap {
     */
   def medianCI(df: DataFrame, groupCol: String, valueCol: String,
                keyCol: String, b: Int = 40, tail: Double = 0.025): DataFrame = {
-    require(b >= 4, s"need >= 4 replicas, got $b")
-    require(tail > 0 && tail < 0.5, s"tail must be in (0, 0.5): $tail")
     import org.apache.spark.sql.expressions.Window
-    val base = Partitioning.spread(
-      df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull &&
-        col(keyCol).isNotNull)
-        .select(col(groupCol).as("g"), col(valueCol).cast("long").as("v"),
-          col(keyCol).as("k")))
+    val base = replicaInput(df, groupCol, valueCol, keyCol, b, tail)
+      .select(col("g"), col("x").cast("long").as("v"), col("k"))
     // lower median of a (partition-keyed) weighted value collapse
     def lowerMedian(cells: DataFrame, parts: Seq[String]): DataFrame = {
       val cum = Window.partitionBy(parts.map(col): _*).orderBy(col("v").asc)
@@ -156,15 +166,7 @@ object Bootstrap {
         .filter(col("c") > 0)
         .groupBy("g", "rep", "v").agg(sum(col("c")).as("c")),
       Seq("g", "rep"))
-    val wOrd = Window.partitionBy("g").orderBy(col("med").asc)
-    val ranked = repMed
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("nb", count(lit(1)).over(Window.partitionBy("g")))
-    val lo = ceil(col("nb") * tail).cast("long")
-    val hi = ceil(col("nb") * (1.0 - tail)).cast("long")
-    val ci = ranked.groupBy(col("g"))
-      .agg(min(when(col("rn") === lo, col("med"))).as("ci_lo"),
-        min(when(col("rn") === hi, col("med"))).as("ci_hi"))
+    val ci = percentileCI(repMed, "med", tail)
     val est = lowerMedian(
       base.groupBy("g", "v").agg(count(lit(1)).as("c")), Seq("g"))
       .withColumnRenamed("med", "est")

@@ -162,6 +162,16 @@ object Changepoint {
           floor(lit(threshold) * 1e9).cast("long")).as("alarm"))
   }
 
+  /** The (g, t, v) series [[pettitt]] and [[mannKendall]] read: rows with
+    * a non-null group, time and value, time and value as longs.
+    */
+  private def groupSeries(df: DataFrame, groupCol: String, tCol: String,
+      valueCol: String): DataFrame = {
+    val x = col(valueCol).cast("long")
+    df.filter(col(groupCol).isNotNull && col(tCol).isNotNull && x.isNotNull)
+      .select(col(groupCol).as("g"), col(tCol).cast("long").as("t"), x.as("v"))
+  }
+
   /** Pettitt change-point test (1979) — the rank-based single-shift
     * locator that completes [[cusum]]: CUSUM needs a known pre-shift
     * mean and slack, Pettitt asks the assumption-free question "did this
@@ -187,11 +197,7 @@ object Changepoint {
     */
   def pettitt(df: DataFrame, groupCol: String, tCol: String,
       valueCol: String): DataFrame = {
-    val x = col(valueCol).cast("long")
-    val series = df
-      .filter(col(groupCol).isNotNull && col(tCol).isNotNull && x.isNotNull)
-      .select(col(groupCol).as("g"), col(tCol).cast("long").as("t"),
-        x.as("v"))
+    val series = groupSeries(df, groupCol, tCol, valueCol)
     val wVal = Window.partitionBy("g").orderBy(col("v").asc)
       .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     val wTies = Window.partitionBy("g", "v")
@@ -243,11 +249,7 @@ object Changepoint {
     */
   def mannKendall(df: DataFrame, groupCol: String, tCol: String,
       valueCol: String): DataFrame = {
-    val x = col(valueCol).cast("long")
-    val series = df
-      .filter(col(groupCol).isNotNull && col(tCol).isNotNull && x.isNotNull)
-      .select(col(groupCol).as("g"), col(tCol).cast("long").as("t"),
-        x.as("v"))
+    val series = groupSeries(df, groupCol, tCol, valueCol)
       .localCheckpoint(false) // pair join (both sides) + tie collapse
     val a = series.select(col("g"), col("t").as("ti"), col("v").as("vi"))
     val b = series.select(col("g"), col("t").as("tj"), col("v").as("vj"))

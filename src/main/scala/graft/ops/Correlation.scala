@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -101,26 +101,41 @@ object Correlation {
     */
   def pearsonMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "pearsonMatrix needs at least two columns")
+    val m = momentRow(df, cols)
+    val pairs = for { i <- cols.indices; j <- (i + 1) until cols.size } yield {
+      val (x, y) = (cols(i), cols(j))
+      struct(lit(x).as("x"), lit(y).as("y"), pearsonR(x, y).as("corr"))
+    }
+    m.select(col("n"), explode(array(pairs: _*)).as("pair"))
+      .select(col("pair.x").as("x"), col("pair.y").as("y"), col("n"),
+        col("pair.corr").as("corr"))
+  }
+
+  /** The one moment row [[pearsonMatrix]] and [[partialCorr]] read, over
+    * the rows where every one of `cols` is non-null: `n`, each column's
+    * long sum `s_c`, and each pair's decimal(38,0) product sum `p_a_b`
+    * (a before b in `cols`, a = b included).
+    */
+  private def momentRow(df: DataFrame, cols: Seq[String]): DataFrame = {
     val complete = df.filter(cols.map(c => col(c).isNotNull).reduce(_ && _))
     def dec(c: String) = col(c).cast(DecimalType(19, 0))
     val sums = cols.map(c => sum(col(c).cast("long")).as(s"s_$c"))
     val prods = for {
       i <- cols.indices; j <- i until cols.size
     } yield sum((dec(cols(i)) * dec(cols(j))).cast(Dec)).as(s"p_${cols(i)}_${cols(j)}")
-    val m = complete.agg(count(lit(1)).as("n"), (sums ++ prods): _*)
-    val pairs = for { i <- cols.indices; j <- (i + 1) until cols.size } yield {
-      val (x, y) = (cols(i), cols(j))
-      val nD = col("n").cast("double")
-      val sx = col(s"s_$x").cast("double"); val sy = col(s"s_$y").cast("double")
-      val covN = nD * col(s"p_${x}_$y").cast("double") - sx * sy
-      val varXN = nD * col(s"p_${x}_$x").cast("double") - sx * sx
-      val varYN = nD * col(s"p_${y}_$y").cast("double") - sy * sy
-      struct(lit(x).as("x"), lit(y).as("y"),
-        when(varXN > 0 && varYN > 0, covN / sqrt(varXN * varYN)).as("corr"))
-    }
-    m.select(col("n"), explode(array(pairs: _*)).as("pair"))
-      .select(col("pair.x").as("x"), col("pair.y").as("y"), col("n"),
-        col("pair.corr").as("corr"))
+    complete.agg(count(lit(1)).as("n"), (sums ++ prods): _*)
+  }
+
+  /** Pearson r of `x` and `y` on a [[momentRow]] (x before y in its
+    * columns): the n·Sxy − Sx·Sy closed form, NULL when a variance is 0.
+    */
+  private def pearsonR(x: String, y: String): Column = {
+    val nD = col("n").cast("double")
+    val sx = col(s"s_$x").cast("double"); val sy = col(s"s_$y").cast("double")
+    val covN = nD * col(s"p_${x}_$y").cast("double") - sx * sy
+    val varXN = nD * col(s"p_${x}_$x").cast("double") - sx * sx
+    val varYN = nD * col(s"p_${y}_$y").cast("double") - sy * sy
+    when(varXN > 0 && varYN > 0, covN / sqrt(varXN * varYN))
   }
 
   /** Kendall τ-b per group: the concordance-based rank correlation —
@@ -191,22 +206,9 @@ object Correlation {
   def partialCorr(df: DataFrame, xCol: String, yCol: String,
       zCol: String): DataFrame = {
     val cols = Seq(xCol, yCol, zCol)
-    val complete = df.filter(cols.map(c => col(c).isNotNull).reduce(_ && _))
-    def dec(c: String) = col(c).cast(DecimalType(19, 0))
-    val sums = cols.map(c => sum(col(c).cast("long")).as(s"s_$c"))
-    val prods = for {
-      i <- cols.indices; j <- i until cols.size
-    } yield sum((dec(cols(i)) * dec(cols(j))).cast(Dec)).as(s"p_${cols(i)}_${cols(j)}")
-    val m = complete.agg(count(lit(1)).as("n"), (sums ++ prods): _*)
-    val nD = col("n").cast("double")
-    def r(x: String, y: String): org.apache.spark.sql.Column = {
-      val sx = col(s"s_$x").cast("double"); val sy = col(s"s_$y").cast("double")
-      val covN = nD * col(s"p_${x}_$y").cast("double") - sx * sy
-      val varXN = nD * col(s"p_${x}_$x").cast("double") - sx * sx
-      val varYN = nD * col(s"p_${y}_$y").cast("double") - sy * sy
-      when(varXN > 0 && varYN > 0, covN / sqrt(varXN * varYN))
-    }
-    val rxy = r(xCol, yCol); val rxz = r(xCol, zCol); val ryz = r(yCol, zCol)
+    val m = momentRow(df, cols)
+    val rxy = pearsonR(xCol, yCol); val rxz = pearsonR(xCol, zCol)
+    val ryz = pearsonR(yCol, zCol)
     val gate = (lit(1.0) - rxz * rxz) * (lit(1.0) - ryz * ryz)
     m.select(col("n"), rxy.as("r_xy"), rxz.as("r_xz"), ryz.as("r_yz"),
       when(rxy.isNotNull && rxz.isNotNull && ryz.isNotNull && gate > 0,

@@ -89,7 +89,20 @@ object Distribution {
     * (bounded by the quantization contract) with one cumulative window per
     * segment (partition size = |values|, never row count).
     */
-  def ksDrift(df: DataFrame, segCol: String, valueCol: String): DataFrame = {
+  def ksDrift(df: DataFrame, segCol: String, valueCol: String): DataFrame =
+    ecdfGrid(df, segCol, valueCol)
+      .groupBy(col("seg").as(segCol))
+      .agg(max(col("stot")).as("n_seg"),
+        max(abs(col("cs").cast("double") / col("stot") -
+          col("cg").cast("double") / col("gtot"))).as("ks"))
+
+  /** The (segment, distinct value) grid [[ksDrift]], [[cvmDrift]] and
+    * [[wassersteinDrift]] read: per cell the segment count `sn` (0 where
+    * the segment lacks the value), the pooled count `gn`, the segment
+    * total `stot`, the cumulative `cs`/`cg` through that value, and the
+    * grand total `gtot`.
+    */
+  private def ecdfGrid(df: DataFrame, segCol: String, valueCol: String): DataFrame = {
     val base = df
       .filter(col(segCol).isNotNull && col(valueCol).isNotNull)
       .select(col(segCol).as("seg"), col(valueCol).cast("long").as("v"))
@@ -110,10 +123,6 @@ object Distribution {
       .withColumn("cs", sum(col("sn")).over(w))
       .withColumn("cg", sum(col("gn")).over(w))
       .crossJoin(broadcast(grand))
-      .groupBy(col("seg").as(segCol))
-      .agg(max(col("stot")).as("n_seg"),
-        max(abs(col("cs").cast("double") / col("stot") -
-          col("cg").cast("double") / col("gtot"))).as("ks"))
   }
 
   /** Per-segment Cramér–von Mises drift (ω² form) against the corpus-wide
@@ -137,26 +146,9 @@ object Distribution {
     */
   def cvmDrift(df: DataFrame, segCol: String, valueCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val base = df
-      .filter(col(segCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(segCol).as("seg"), col(valueCol).cast("long").as("v"))
-    val segCnt = base.groupBy("seg", "v")
-      .agg(count(lit(1)).as("sn"))
-      .localCheckpoint(false)
-    val gv = segCnt.groupBy("v").agg(sum(col("sn")).as("gn"))
-    val segs = segCnt.groupBy("seg").agg(sum(col("sn")).as("stot"))
-    val grand = gv.agg(sum(col("gn")).as("gtot"))
-    val grid = gv.crossJoin(broadcast(segs))
-      .join(segCnt, Seq("seg", "v"), "left")
-      .na.fill(0L, Seq("sn"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("seg").orderBy(col("v").asc)
     val gap = col("cs").cast("double") / col("stot") -
       col("cg").cast("double") / col("gtot")
-    grid
-      .withColumn("cs", sum(col("sn")).over(w))
-      .withColumn("cg", sum(col("gn")).over(w))
-      .crossJoin(broadcast(grand))
+    ecdfGrid(df, segCol, valueCol)
       .withColumn("t12",
         floor(col("gn").cast("double") * gap * gap * 1e12 + 0.5)
           .cast(dec))
@@ -188,31 +180,14 @@ object Distribution {
   def wassersteinDrift(df: DataFrame, segCol: String,
       valueCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val base = df
-      .filter(col(segCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(segCol).as("seg"), col(valueCol).cast("long").as("v"))
-    val segCnt = base.groupBy("seg", "v")
-      .agg(count(lit(1)).as("sn"))
-      .localCheckpoint(false)
-    val gv = segCnt.groupBy("v").agg(sum(col("sn")).as("gn"))
-    val segs = segCnt.groupBy("seg").agg(sum(col("sn")).as("stot"))
-    val grand = gv.agg(sum(col("gn")).as("gtot"))
-    val grid = gv.crossJoin(broadcast(segs))
-      .join(segCnt, Seq("seg", "v"), "left")
-      .na.fill(0L, Seq("sn"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("seg").orderBy(col("v").asc)
     val gap = abs(col("cs").cast("double") / col("stot") -
       col("cg").cast("double") / col("gtot"))
-    grid
-      .withColumn("cs", sum(col("sn")).over(w))
-      .withColumn("cg", sum(col("gn")).over(w))
+    ecdfGrid(df, segCol, valueCol)
       .withColumn("dv",
         (coalesce(lead(col("v"), 1).over(
           org.apache.spark.sql.expressions.Window
             .partitionBy("seg").orderBy(col("v").asc)), col("v")) -
           col("v")).cast("double"))
-      .crossJoin(broadcast(grand))
       .withColumn("t9", floor(gap * col("dv") * 1e9 + 0.5).cast(dec))
       .groupBy(col("seg").as(segCol))
       .agg(max(col("stot")).as("n_seg"),
@@ -241,6 +216,18 @@ object Distribution {
   def psiDrift(df: DataFrame, segCol: String, valueCol: String,
                boundaries: Seq[Double]): DataFrame = {
     require(boundaries.nonEmpty, "psiDrift needs at least one bin boundary")
+    binShares(df, segCol, valueCol, boundaries)
+      .groupBy(col("seg").as(segCol))
+      .agg(max(col("stot")).as("n_seg"),
+        sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
+  }
+
+  /** The (segment, bin) grid [[psiDrift]] and [[hellingerDrift]] read:
+    * every segment × every bin, with the segment total `stot` and the
+    * ½-count smoothed segment share `p` and corpus share `q` of the bin.
+    */
+  private def binShares(df: DataFrame, segCol: String, valueCol: String,
+      boundaries: Seq[Double]): DataFrame = {
     val bs = boundaries.sorted
     val nb = bs.size + 1
     val binExpr = bs.foldLeft(lit(0L)) { (acc, bd) =>
@@ -256,16 +243,13 @@ object Distribution {
     val gBin = segBin.groupBy("bin").agg(sum(col("c")).as("g"))
     val grand = segBin.agg(sum(col("c")).as("gtot"))
     val bins = segBin.sparkSession.range(nb).select(col("id").as("bin"))
-    val grid = segs.crossJoin(broadcast(bins))
+    segs.crossJoin(broadcast(bins))
       .join(segBin, Seq("seg", "bin"), "left")
       .join(broadcast(gBin), Seq("bin"), "left")
       .na.fill(0L, Seq("c", "g"))
       .crossJoin(broadcast(grand))
       .withColumn("p", (col("c") + lit(0.5)) / (col("stot") + lit(0.5 * nb)))
       .withColumn("q", (col("g") + lit(0.5)) / (col("gtot") + lit(0.5 * nb)))
-    grid.groupBy(col("seg").as(segCol))
-      .agg(max(col("stot")).as("n_seg"),
-        sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
   }
 
   /** Per-segment Hellinger distance against corpus-wide bin shares — the
@@ -289,29 +273,8 @@ object Distribution {
   def hellingerDrift(df: DataFrame, segCol: String, valueCol: String,
                      boundaries: Seq[Double]): DataFrame = {
     require(boundaries.nonEmpty, "hellingerDrift needs bin boundaries")
-    val bs = boundaries.sorted
-    val nb = bs.size + 1
-    val binExpr = bs.foldLeft(lit(0L)) { (acc, bd) =>
-      acc + when(col(valueCol).cast("double") >= lit(bd), 1L).otherwise(0L)
-    }
-    val base = df
-      .filter(col(segCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(segCol).as("seg"), binExpr.as("bin"))
-    val segBin = base.groupBy("seg", "bin")
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // feeds totals, global shares AND the grid
-    val segs = segBin.groupBy("seg").agg(sum(col("c")).as("stot"))
-    val gBin = segBin.groupBy("bin").agg(sum(col("c")).as("g"))
-    val grand = segBin.agg(sum(col("c")).as("gtot"))
-    val bins = segBin.sparkSession.range(nb).select(col("id").as("bin"))
-    val grid = segs.crossJoin(broadcast(bins))
-      .join(segBin, Seq("seg", "bin"), "left")
-      .join(broadcast(gBin), Seq("bin"), "left")
-      .na.fill(0L, Seq("c", "g"))
-      .crossJoin(broadcast(grand))
-      .withColumn("p", (col("c") + lit(0.5)) / (col("stot") + lit(0.5 * nb)))
-      .withColumn("q", (col("g") + lit(0.5)) / (col("gtot") + lit(0.5 * nb)))
-    grid.groupBy(col("seg").as(segCol))
+    binShares(df, segCol, valueCol, boundaries)
+      .groupBy(col("seg").as(segCol))
       .agg(max(col("stot")).as("n_seg"),
         (sum(floor(sqrt(col("p") * col("q")) * 1e12 + lit(0.5)).cast("long"))
           .cast("double") / 1e12).as("bc"))
@@ -377,19 +340,8 @@ object Distribution {
     */
   def infoGain(df: DataFrame, features: Seq[(String, Column)],
                labelCol: Column): DataFrame = {
-    require(features.nonEmpty, "need at least one feature")
-    val names = features.map(_._1)
-    val base = df
-      .select(features.map { case (n, c) =>
-        c.cast("string").as(s"__f_$n") } :+
-        labelCol.cast("string").as("__y"): _*)
-      .filter(names.map(n => col(s"__f_$n").isNotNull).reduce(_ && _) &&
-        col("__y").isNotNull)
-    val stacked = base
-      .select(explode(array(names.map(n =>
-        struct(lit(n).as("f"), col(s"__f_$n").as("x"))): _*)).as("fx"),
-        col("__y").as("y"))
-      .select(col("fx.f").as("f"), col("fx.x").as("x"), col("y"))
+    val stacked = stackFeatures(df,
+      features.map { case (n, c) => n -> c.cast("string") }, labelCol.cast("string"))
     val cells = stacked.groupBy("f", "x", "y")
       .agg(count(lit(1)).as("n"))
       .localCheckpoint(false) // feeds marginals + both entropies
@@ -415,6 +367,26 @@ object Distribution {
         (col("h_y") - col("h_y_given_x")).as("info_gain"),
         when(col("h_x") > 0,
           (col("h_y") - col("h_y_given_x")) / col("h_x")).as("gain_ratio"))
+  }
+
+  /** The feature sweep's stacked scan, shared with [[Stump.giniStump]]:
+    * rows where every feature and the label are non-null, one output row
+    * (f = feature name, x = its value, y = label) per feature.
+    */
+  private[ops] def stackFeatures(df: DataFrame, features: Seq[(String, Column)],
+      labelCol: Column): DataFrame = {
+    require(features.nonEmpty, "need at least one feature")
+    val names = features.map(_._1)
+    val base = df
+      .select(features.map { case (n, c) => c.as(s"__f_$n") } :+
+        labelCol.as("__y"): _*)
+      .filter(names.map(n => col(s"__f_$n").isNotNull).reduce(_ && _) &&
+        col("__y").isNotNull)
+    base
+      .select(explode(array(names.map(n =>
+        struct(lit(n).as("f"), col(s"__f_$n").as("x"))): _*)).as("fx"),
+        col("__y").as("y"))
+      .select(col("fx.f").as("f"), col("fx.x").as("x"), col("y"))
   }
 
   /** Jensen-Shannon divergence between two samples' categorical
@@ -576,27 +548,42 @@ object Distribution {
     * data-sized; the fact-table pass happened upstream in the sweep.
     */
   def bhAdjust(pvals: DataFrame, testCol: String, pCol: String,
-      alpha: Double): DataFrame = {
+      alpha: Double): DataFrame =
+    stepUp(rankedP(pvals, testCol, pCol), pCol, alpha, col("m").cast("double"))
+
+  private val allTests = org.apache.spark.sql.expressions.Window
+    .partitionBy(lit(1))
+    .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+      org.apache.spark.sql.expressions.Window.unboundedFollowing)
+
+  /** The non-null p-values of [[bhAdjust]]/[[byAdjust]] with their
+    * ascending `rank` (ties on the test key) and the test count `m`.
+    */
+  private def rankedP(pvals: DataFrame, testCol: String, pCol: String): DataFrame = {
     val wRank = org.apache.spark.sql.expressions.Window
       .orderBy(col(pCol).asc, col(testCol).asc)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
+    pvals
+      .filter(col(pCol).isNotNull)
+      .withColumn("rank", row_number().over(wRank).cast("long"))
+      .withColumn("m", count(lit(1)).over(allTests))
+  }
+
+  /** The step-up rule over [[rankedP]]'s table: critical value
+    * rank·α/`mult`, the largest rank under it, and the adjusted
+    * p̃ = min(1, min over the tail of p·`mult`/rank).
+    */
+  private def stepUp(ranked: DataFrame, pCol: String, alpha: Double,
+      mult: Column): DataFrame = {
     val wTail = org.apache.spark.sql.expressions.Window
       .orderBy(col("rank").desc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    pvals
-      .filter(col(pCol).isNotNull)
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .withColumn("m", count(lit(1)).over(wAll))
-      .withColumn("crit", col("rank").cast("double") * alpha / col("m"))
+    ranked
+      .withColumn("crit", col("rank").cast("double") * alpha / mult)
       .withColumn("kstar",
-        max(when(col(pCol) <= col("crit"), col("rank"))).over(wAll))
+        max(when(col(pCol) <= col("crit"), col("rank"))).over(allTests))
       .withColumn("p_adj",
-        least(lit(1.0),
-          min(col(pCol) * col("m").cast("double") / col("rank")).over(wTail)))
+        least(lit(1.0), min(col(pCol) * mult / col("rank")).over(wTail)))
       .withColumn("rejected",
         col("kstar").isNotNull && col("rank") <= col("kstar"))
       .drop("kstar")
@@ -615,12 +602,22 @@ object Distribution {
     * expressions of them (callers qround). Same one-shuffle scale shape as
     * [[mutualInformation]]/[[chiSquare]].
     */
-  def liftCells(df: DataFrame, xCol: String, yCol: String): DataFrame = {
+  def liftCells(df: DataFrame, xCol: String, yCol: String): DataFrame =
+    contingency(df, xCol, yCol)
+      .withColumn("lift", col("o").cast("double") * col("tot") /
+        (col("rt").cast("double") * col("ct")))
+      .select(col("x").as(xCol), col("y").as(yCol), col("o"), col("e"), col("lift"))
+
+  /** The observed (x, y) cells of [[liftCells]] and [[chiSquare]]: count
+    * `o`, row total `rt`, column total `ct`, grand total `tot` and the
+    * independence expectation `e`.
+    */
+  private def contingency(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val joint = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("x"), col(yCol).as("y"))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint(false) // feeds both marginals and the cell output
+      .localCheckpoint(false) // feeds both marginals and the cells
     val rx = joint.groupBy("x").agg(sum(col("o")).as("rt"))
     val cy = joint.groupBy("y").agg(sum(col("o")).as("ct"))
     val grand = joint.agg(sum(col("o")).as("tot"))
@@ -628,31 +625,18 @@ object Distribution {
       .join(broadcast(rx), "x").join(broadcast(cy), "y")
       .crossJoin(broadcast(grand))
       .withColumn("e", col("rt").cast("double") * col("ct") / col("tot"))
-      .withColumn("lift", col("o").cast("double") * col("tot") /
-        (col("rt").cast("double") * col("ct")))
-      .select(col("x").as(xCol), col("y").as(yCol), col("o"), col("e"), col("lift"))
   }
 
   def chiSquare(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val joint = df
-      .filter(col(xCol).isNotNull && col(yCol).isNotNull)
-      .groupBy(col(xCol).as("x"), col(yCol).as("y"))
-      .agg(count(lit(1)).as("o"))
-      .localCheckpoint(false) // feeds both marginals and the cell sum
-    val rx = joint.groupBy("x").agg(sum(col("o")).as("rt"))
-    val cy = joint.groupBy("y").agg(sum(col("o")).as("ct"))
-    val dims = rx.agg(count(lit(1)).as("kx"))
-      .crossJoin(broadcast(cy.agg(count(lit(1)).as("ky"))))
-    val grand = joint.agg(sum(col("o")).as("tot"))
-    val cells = joint
-      .join(broadcast(rx), "x").join(broadcast(cy), "y")
-      .crossJoin(broadcast(grand))
-      .withColumn("e", col("rt").cast("double") * col("ct") / col("tot"))
+    val cells = contingency(df, xCol, yCol)
+    val dims = cells.agg(countDistinct(col("x")).as("kx"),
+      countDistinct(col("y")).as("ky"))
     val present = cells.agg(
       sum((col("o") - col("e")) * (col("o") - col("e")) / col("e") - col("e"))
-        .as("s"))
+        .as("s"),
+      max(col("tot")).as("tot"))
     present
-      .crossJoin(broadcast(grand)).crossJoin(broadcast(dims))
+      .crossJoin(broadcast(dims))
       .select(col("tot").as("n"),
         ((col("kx") - 1) * (col("ky") - 1)).as("dof"),
         (col("s") + col("tot")).as("chi2"),
@@ -817,33 +801,11 @@ object Distribution {
     */
   def byAdjust(pvals: DataFrame, testCol: String, pCol: String,
       alpha: Double): DataFrame = {
-    val wRank = org.apache.spark.sql.expressions.Window
-      .orderBy(col(pCol).asc, col(testCol).asc)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val wTail = org.apache.spark.sql.expressions.Window
-      .orderBy(col("rank").desc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    pvals
-      .filter(col(pCol).isNotNull)
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .withColumn("m", count(lit(1)).over(wAll))
+    val ranked = rankedP(pvals, testCol, pCol)
       .withColumn("cm",
-        sum(floor(lit(1e12) / col("rank") + 0.5).cast("long")).over(wAll)
+        sum(floor(lit(1e12) / col("rank") + 0.5).cast("long")).over(allTests)
           .cast("double") / 1e12)
-      .withColumn("crit",
-        col("rank").cast("double") * alpha / (col("m") * col("cm")))
-      .withColumn("kstar",
-        max(when(col(pCol) <= col("crit"), col("rank"))).over(wAll))
-      .withColumn("p_adj",
-        least(lit(1.0),
-          min(col(pCol) * (col("m") * col("cm")) / col("rank")).over(wTail)))
-      .withColumn("rejected",
-        col("kstar").isNotNull && col("rank") <= col("kstar"))
-      .drop("kstar")
+    stepUp(ranked, pCol, alpha, col("m") * col("cm"))
   }
 
   /** Wilson score interval per group (Wilson 1927) — the rate CI that

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative link-graph ranking (PageRank) in fixed-point integer
@@ -182,15 +182,8 @@ object GraphRank {
     val init = scaleTotal / n
     val teleport = (15L * init) / 100L
     val tele = nodes.withColumn("tele", lit(teleport))
-    iterateFixed(eW, nodes.withColumn("pr", lit(init)), iterations) { ranks =>
-      val contrib = eW.join(ranks.hint("SHUFFLE_HASH"), eW("src") === ranks("node"))
-        .select(col("dst").as("node"), lit(0L).as("t"),
-          expr("(pr * w) div wsum").as("c"))
-      contrib
-        .union(tele.select(col("node"), col("tele").as("t"), lit(0L).as("c")))
-        .groupBy("node")
-        .agg((sum(col("t")) + expr("(85 * sum(c)) div 100")).as("pr"))
-    }
+    iterateFixed(eW, nodes.withColumn("pr", lit(init)), iterations)(
+      flow(eW, tele, _, expr("(pr * w) div wsum")))
   }
 
   /** One PageRank iteration. Steady-state dataflow is ONE exchange: the
@@ -208,7 +201,15 @@ object GraphRank {
     * the marginal cost: each extra iteration adds exactly one Exchange to
     * the plan.
     */
-  private[ops] def step(eDeg: DataFrame, tele: DataFrame, ranks: DataFrame): DataFrame = {
+  private[ops] def step(eDeg: DataFrame, tele: DataFrame, ranks: DataFrame): DataFrame =
+    flow(eDeg, tele, ranks, expr("pr div outdeg"))
+
+  /** [[step]] over any src-partitioned edge table, with `share` the mass
+    * one edge carries from its source's rank `pr` (`pr div outdeg` in the
+    * uniform walk, `(pr * w) div wsum` in [[pageRankWeighted]]).
+    */
+  private def flow(edgeTable: DataFrame, tele: DataFrame, ranks: DataFrame,
+      share: Column): DataFrame = {
     // SHUFFLE_HASH (round 15): the default sort-merge join re-SORTS the
     // cached edge partitions every iteration (the edge cache is hash-
     // partitioned, not sorted); hashing the node-sized rank table per
@@ -216,8 +217,8 @@ object GraphRank {
     // co-partitioned, so the exchange count is unchanged — this removes
     // the per-iteration edge sort, not a shuffle. Never a broadcast (a
     // real rank table doesn't broadcast at graph scale).
-    val contrib = eDeg.join(ranks.hint("SHUFFLE_HASH"), eDeg("src") === ranks("node"))
-      .select(col("dst").as("node"), lit(0L).as("t"), expr("pr div outdeg").as("c"))
+    val contrib = edgeTable.join(ranks.hint("SHUFFLE_HASH"), edgeTable("src") === ranks("node"))
+      .select(col("dst").as("node"), lit(0L).as("t"), share.as("c"))
     contrib
       .union(tele.select(col("node"), col("tele").as("t"), lit(0L).as("c")))
       .groupBy("node")
@@ -323,25 +324,38 @@ object GraphRank {
     * under the cap; degrees in the Jaccard denominator stay FULL.
     */
   def linkPredictionScores(edges: DataFrame, maxDegree: Int = 64): DataFrame = {
+    val (cn, deg) = wedgePairs(edges, maxDegree, count(lit(1)).as("cn"))
+    cn.join(deg.select(col("node").as("a"), col("deg").as("deg_a")), Seq("a"))
+      .join(deg.select(col("node").as("b"), col("deg").as("deg_b")), Seq("b"))
+      .select(col("a"), col("b"), col("cn"), col("deg_a"), col("deg_b"),
+        (col("cn").cast("double") /
+          (col("deg_a") + col("deg_b") - col("cn"))).as("jaccard"))
+  }
+
+  /** The wedge prelude of [[linkPredictionScores]] and
+    * [[linkPredictionWeighted]]: every non-adjacent pair a < b that shares
+    * an apex of degree ≤ `maxDegree`, aggregated by `aggs` over its wedges
+    * (each carrying the apex degree `apexdeg`); with the canonical edge
+    * set's node degrees.
+    */
+  private def wedgePairs(edges: DataFrame, maxDegree: Int,
+      aggs: Column*): (DataFrame, DataFrame) = {
     require(maxDegree >= 2)
     val e = canonicalUndirected(edges).localCheckpoint(true)
     val deg = degreesOf(e)
     val sym = e.select(col("u").as("apex"), col("v").as("nbr"))
       .unionAll(e.select(col("v").as("apex"), col("u").as("nbr")))
     val small = sym.join(
-      deg.filter(col("deg") <= maxDegree).select(col("node").as("apex")),
-      Seq("apex"), "left_semi")
-    val wedges = small.select(col("apex"), col("nbr").as("a"))
+      deg.filter(col("deg") <= maxDegree)
+        .select(col("node").as("apex"), col("deg").as("apexdeg")),
+      Seq("apex"))
+    val wedges = small.select(col("apex"), col("apexdeg"), col("nbr").as("a"))
       .join(small.select(col("apex"), col("nbr").as("b")), Seq("apex"))
       .filter(col("a") < col("b"))
-    val cn = wedges.groupBy("a", "b").agg(count(lit(1)).as("cn"))
+    val pairs = wedges.groupBy("a", "b").agg(aggs.head, aggs.tail: _*)
       .join(e.select(col("u").as("a"), col("v").as("b")),
         Seq("a", "b"), "left_anti")
-    cn.join(deg.select(col("node").as("a"), col("deg").as("deg_a")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("deg_b")), Seq("b"))
-      .select(col("a"), col("b"), col("cn"), col("deg_a"), col("deg_b"),
-        (col("cn").cast("double") /
-          (col("deg_a") + col("deg_b") - col("cn"))).as("jaccard"))
+    (pairs, deg)
   }
 
   /** Adamic–Adar + Resource-Allocation link prediction (the weighted
@@ -368,29 +382,12 @@ object GraphRank {
     * set. Never all-pairs.
     */
   def linkPredictionWeighted(edges: DataFrame, maxDegree: Int = 64): DataFrame = {
-    require(maxDegree >= 2)
-    val e = canonicalUndirected(edges).localCheckpoint(true)
-    val deg = degreesOf(e)
-    val sym = e.select(col("u").as("apex"), col("v").as("nbr"))
-      .unionAll(e.select(col("v").as("apex"), col("u").as("nbr")))
-    val small = sym.join(
-      deg.filter(col("deg") <= maxDegree)
-        .select(col("node").as("apex"), col("deg").as("apexdeg")),
-      Seq("apex"))
-    val wedges = small.select(col("apex"), col("apexdeg"), col("nbr").as("a"))
-      .join(small.select(col("apex"), col("nbr").as("b")), Seq("apex"))
-      .filter(col("a") < col("b"))
-    val scoredPairs = wedges
-      .select(col("a"), col("b"),
-        floor(lit(1e12) / log(col("apexdeg").cast("double")) + 0.5)
-          .cast("long").as("aa12"),
-        floor(lit(1e12) / col("apexdeg").cast("double") + 0.5)
-          .cast("long").as("ra12"))
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("cn"), sum(col("aa12")).as("saa"),
-        sum(col("ra12")).as("sra"))
-      .join(e.select(col("u").as("a"), col("v").as("b")),
-        Seq("a", "b"), "left_anti")
+    val (scoredPairs, _) = wedgePairs(edges, maxDegree,
+      count(lit(1)).as("cn"),
+      sum(floor(lit(1e12) / log(col("apexdeg").cast("double")) + 0.5)
+        .cast("long")).as("saa"),
+      sum(floor(lit(1e12) / col("apexdeg").cast("double") + 0.5)
+        .cast("long")).as("sra"))
     scoredPairs.select(col("a"), col("b"), col("cn"),
       (col("saa").cast("double") / 1e12).as("aa"),
       (col("sra").cast("double") / 1e12).as("ra"))
@@ -478,13 +475,8 @@ object GraphRank {
     * stage. Returns (node BIGINT, tri_cnt BIGINT) for nodes in ≥1 triangle.
     */
   def triangleCountsAdjacency(edges: DataFrame): DataFrame = {
-    val e = edges.select(
-      least(col("src").cast("long"), col("dst").cast("long")).as("u"),
-      greatest(col("src").cast("long"), col("dst").cast("long")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-    val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
+    val e = canonicalUndirected(edges)
+    val deg = degreesOf(e)
     val oriented = e
       .join(deg.withColumnRenamed("node", "u").withColumnRenamed("deg", "du"), "u")
       .join(deg.withColumnRenamed("node", "v").withColumnRenamed("deg", "dv"), "v")

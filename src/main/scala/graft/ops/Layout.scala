@@ -93,35 +93,6 @@ object Layout {
   def quantize(c: Column, lo: Column, hi: Column, bits: Int): Column =
     quantizeN(c, lo, hi, 1 << bits)
 
-  /** Cluster `df` by the z-value of `cols` (each min-max quantized to
-    * `bits` bits): range-partition + sort within partitions, ready for a
-    * partitioned write. One extra pass for the bounds, one range exchange.
-    *
-    * `bits` is a per-lane CAP: the effective lane width is
-    * `min(bits, 63 / cols.size)` so the interleave always fits a signed
-    * long — the default 16 works for any column count instead of tripping
-    * [[zValue]]'s hard require at 4+ columns.
-    */
-  def zOrderBy(df: DataFrame, cols: Seq[String], bits: Int = 16,
-      numPartitions: Int = 0): DataFrame = {
-    require(cols.nonEmpty, "zOrderBy needs at least one cluster column")
-    val laneBits = math.min(bits, 63 / cols.size)
-    val statExprs = cols.zipWithIndex.flatMap { case (c, i) =>
-      Seq(min(col(c)).as(s"__lo$i"), max(col(c)).as(s"__hi$i"))
-    }
-    val stats = df.agg(statExprs.head, statExprs.tail: _*)
-    val withZ = df.crossJoin(broadcast(stats))
-      .withColumn("__z", zValue(
-        cols.zipWithIndex.map { case (c, i) =>
-          quantize(col(c).cast("double"), col(s"__lo$i"), col(s"__hi$i"), laneBits)
-        }, laneBits))
-      .drop(cols.indices.flatMap(i => Seq(s"__lo$i", s"__hi$i")): _*)
-    val parted =
-      if (numPartitions > 0) withZ.repartitionByRange(numPartitions, col("__z"))
-      else withZ.repartitionByRange(col("__z"))
-    parted.sortWithinPartitions("__z").drop("__z")
-  }
-
   /** Small-file compaction plan: assign each file (row) of a group to an
     * output bin of ~`targetBytes`, by walking the group's files in
     * deterministic hash order and opening a new bin whenever the running

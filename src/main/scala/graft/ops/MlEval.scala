@@ -67,20 +67,9 @@ object MlEval {
     */
   def bestF1(df: DataFrame, groupCol: String, scoreCol: String,
       labelCol: Column): DataFrame = {
-    val g = df
-      .select(col(groupCol).as("g"), col(scoreCol).cast("long").as("s"),
-        labelCol.cast("int").as("y"))
-      .filter(col("g").isNotNull && col("s").isNotNull && col("y").isNotNull)
-      .groupBy("g", "s")
-      .agg(count(lit(1)).as("c"), sum(col("y")).as("p"))
-    val wCum = Window.partitionBy("g").orderBy(col("s").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy("g")
-    val scanned = g
-      .withColumn("tp", sum(col("p")).over(wCum))
-      .withColumn("sc", sum(col("c")).over(wCum))
-      .withColumn("np", sum(col("p")).over(wAll))
-      .withColumn("fp", col("sc") - col("tp"))
+    val scanned = scoreSweep(df, groupCol, scoreCol, labelCol)
+      .withColumn("tp", col("cp"))
+      .withColumn("fp", col("cc") - col("tp"))
     val f1 = lit(2.0) * col("tp") / (col("tp") + col("fp") + col("np"))
     val graded = scanned
       .withColumn("f1", f1)
@@ -93,6 +82,29 @@ object MlEval {
         col("tp"), col("fp"), (col("np") - col("tp")).as("fn"),
         col("np").as("n_pos"),
         when(col("np") > 0, col("f1")).as("f1"))
+  }
+
+  /** The descending-score sweep of [[bestF1]] and [[gainsTable]]: per
+    * (group `g`, integral score `s`) the rows `c` and positives `p`, the
+    * cumulative rows `cc` and positives `cp` at scores ≥ s, and the
+    * group's rows `n` and positives `np`.
+    */
+  private def scoreSweep(df: DataFrame, groupCol: String, scoreCol: String,
+      labelCol: Column): DataFrame = {
+    val g = df
+      .select(col(groupCol).as("g"), col(scoreCol).cast("long").as("s"),
+        labelCol.cast("int").as("y"))
+      .filter(col("g").isNotNull && col("s").isNotNull && col("y").isNotNull)
+      .groupBy("g", "s")
+      .agg(count(lit(1)).as("c"), sum(col("y")).as("p"))
+    val wCum = Window.partitionBy("g").orderBy(col("s").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wAll = Window.partitionBy("g")
+    g
+      .withColumn("cc", sum(col("c")).over(wCum))
+      .withColumn("cp", sum(col("p")).over(wCum))
+      .withColumn("n", sum(col("c")).over(wAll))
+      .withColumn("np", sum(col("p")).over(wAll))
   }
 
   /** Cumulative gains / lift table per group — the model-eval readout a
@@ -113,20 +125,7 @@ object MlEval {
     */
   def gainsTable(df: DataFrame, groupCol: String, scoreCol: String,
       labelCol: Column): DataFrame = {
-    val g = df
-      .select(col(groupCol).as("g"), col(scoreCol).cast("long").as("s"),
-        labelCol.cast("int").as("y"))
-      .filter(col("g").isNotNull && col("s").isNotNull && col("y").isNotNull)
-      .groupBy("g", "s")
-      .agg(count(lit(1)).as("c"), sum(col("y")).as("p"))
-    val wCum = Window.partitionBy("g").orderBy(col("s").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy("g")
-    val scanned = g
-      .withColumn("cc", sum(col("c")).over(wCum))
-      .withColumn("cp", sum(col("p")).over(wCum))
-      .withColumn("n", sum(col("c")).over(wAll))
-      .withColumn("np", sum(col("p")).over(wAll))
+    val scanned = scoreSweep(df, groupCol, scoreCol, labelCol)
     val deciles = (1 to 10).map { d =>
       min(when(col("cc") * 10 >= col("n") * d,
         struct(col("cc"), col("cp")))).as(s"d$d")
@@ -168,22 +167,6 @@ object MlEval {
         col("tp") * 2.0 / (col("tp") * 2 + col("fp") + col("fn"))).as("f1"))
   }
 
-  /** Calibration (reliability) bins: equal-width bins over a fixed-point
-    * score in [0, scale), each reporting mean predicted probability vs
-    * observed positive rate — the reliability-diagram table behind a
-    * calibration check of any probabilistic scorer.
-    *
-    * `scoreFp` must be an INTEGER column (score · scale, the repo's
-    * fixed-point idiom), so the bin index `⌊score·bins/scale⌋` is integer
-    * arithmetic and Σscore per bin is an exact long: `mean_pred` and
-    * `frac_pos` are then single divisions of identical exact operands on
-    * every engine, and `gap` is one IEEE subtraction of those. Rows with a
-    * null score or label are dropped; scores outside [0, scale) clamp to
-    * the edge bins (a miscalibrated scorer can emit p slightly past 1).
-    *
-    * Scale shape: one map-side-combined hash aggregate into at most
-    * `bins` rows — nothing else moves.
-    */
   /** Cohen's κ agreement between two categorical label columns — the
     * label-quality audit for any doubly-annotated data (two annotators,
     * or a heuristic classifier vs a stored gold label): chance-corrected
@@ -205,6 +188,23 @@ object MlEval {
   def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(19, 0)
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    val (tot, ra, rb) = agreement(df, aCol, bCol)
+    val pem = ra.join(rb, Seq("__k"))
+      .agg(coalesce(sum((col("__ma").cast(dec) * col("__mb").cast(dec)).cast(dec38)),
+        lit(0).cast(dec38)).as("pem"))
+    val po = col("agree").cast("double") / col("n")
+    val pe = col("pem").cast("double") / (col("n").cast("double") * col("n"))
+    tot.crossJoin(broadcast(pem))
+      .select(col("n"), col("agree"), po.as("po"), pe.as("pe"),
+        when(pe < 1.0, (po - pe) / (lit(1.0) - pe)).as("kappa"))
+  }
+
+  /** The two-rater agreement table of [[cohenKappa]] and
+    * [[krippendorffAlpha]]: a one-row (n, agree) total, and the per-label
+    * `__k` marginals of rater A (`__ma`) and rater B (`__mb`).
+    */
+  private def agreement(df: DataFrame, aCol: String,
+      bCol: String): (DataFrame, DataFrame, DataFrame) = {
     val cells = df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).as("__a"), col(bCol).as("__b"))
@@ -214,14 +214,7 @@ object MlEval {
       sum(when(col("__a") === col("__b"), col("__c")).otherwise(0L)).as("agree"))
     val ra = cells.groupBy(col("__a").as("__k")).agg(sum(col("__c")).as("__ma"))
     val rb = cells.groupBy(col("__b").as("__k")).agg(sum(col("__c")).as("__mb"))
-    val pem = ra.join(rb, Seq("__k"))
-      .agg(coalesce(sum((col("__ma").cast(dec) * col("__mb").cast(dec)).cast(dec38)),
-        lit(0).cast(dec38)).as("pem"))
-    val po = col("agree").cast("double") / col("n")
-    val pe = col("pem").cast("double") / (col("n").cast("double") * col("n"))
-    tot.crossJoin(broadcast(pem))
-      .select(col("n"), col("agree"), po.as("po"), pe.as("pe"),
-        when(pe < 1.0, (po - pe) / (lit(1.0) - pe)).as("kappa"))
+    (tot, ra, rb)
   }
 
   /** Krippendorff's α (nominal, two raters, complete data) — the
@@ -248,15 +241,7 @@ object MlEval {
   def krippendorffAlpha(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(19, 0)
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val cells = df
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
-      .groupBy(col(aCol).as("__a"), col(bCol).as("__b"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false) // totals + pooled marginals read it
-    val tot = cells.agg(sum(col("__c")).as("n"),
-      sum(when(col("__a") === col("__b"), col("__c")).otherwise(0L)).as("agree"))
-    val ra = cells.groupBy(col("__a").as("__k")).agg(sum(col("__c")).as("__ma"))
-    val rb = cells.groupBy(col("__b").as("__k")).agg(sum(col("__c")).as("__mb"))
+    val (tot, ra, rb) = agreement(df, aCol, bCol)
     val pooled = ra.join(rb, Seq("__k"), "full_outer")
       .select((coalesce(col("__ma"), lit(0L)) +
         coalesce(col("__mb"), lit(0L))).as("__nc"))
@@ -272,6 +257,22 @@ object MlEval {
         when(dE > 0, lit(1.0) - (lit(1.0) - po) / dE).as("alpha"))
   }
 
+  /** Calibration (reliability) bins: equal-width bins over a fixed-point
+    * score in [0, scale), each reporting mean predicted probability vs
+    * observed positive rate — the reliability-diagram table behind a
+    * calibration check of any probabilistic scorer.
+    *
+    * `scoreFp` must be an INTEGER column (score · scale, the repo's
+    * fixed-point idiom), so the bin index `⌊score·bins/scale⌋` is integer
+    * arithmetic and Σscore per bin is an exact long: `mean_pred` and
+    * `frac_pos` are then single divisions of identical exact operands on
+    * every engine, and `gap` is one IEEE subtraction of those. Rows with a
+    * null score or label are dropped; scores outside [0, scale) clamp to
+    * the edge bins (a miscalibrated scorer can emit p slightly past 1).
+    *
+    * Scale shape: one map-side-combined hash aggregate into at most
+    * `bins` rows — nothing else moves.
+    */
   def calibrationBins(df: DataFrame, scoreFp: Column, labelCol: Column,
                       bins: Int = 10, scale: Long = 1000L): DataFrame = {
     require(bins > 0 && scale > 0)

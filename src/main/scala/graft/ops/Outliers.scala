@@ -126,18 +126,8 @@ object Outliers {
     */
   def iqrFences(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cells = df
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .groupBy(col(groupCol).as("g"), col(valueCol).cast("long").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // quartile window + the fence counts share it
-    val cum = Window.partitionBy("g").orderBy(col("v").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy("g")
-    val qs = cells
-      .withColumn("cc", sum(col("c")).over(cum))
-      .withColumn("n", sum(col("c")).over(tot))
+    val cells = RankTests.groupValueCounts(df, groupCol, valueCol)
+    val qs = RankTests.withGroupCum(cells)
       .groupBy("g")
       .agg(max(col("n")).as("n"),
         // lower order statistics at ⌈n/4⌉ / ⌈3n/4⌉: ceil of exact

@@ -114,17 +114,8 @@ object RankTests {
     */
   def brownForsythe(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val cells = df
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .groupBy(col(groupCol).as("g"), col(valueCol).cast("long").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // feeds the median window AND the moments
-    val cum = Window.partitionBy("g").orderBy(col("v").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy("g")
-    val med = cells
-      .withColumn("cc", sum(col("c")).over(cum))
-      .withColumn("n", sum(col("c")).over(tot))
+    val cells = groupValueCounts(df, groupCol, valueCol)
+    val med = withGroupCum(cells)
       .groupBy("g")
       // lower median rank = (n+1) div 2 — integral: Spark's `/` on longs
       // is DOUBLE division, so floor() the exact-for-n<2⁵² quotient
@@ -151,6 +142,29 @@ object RankTests {
         when(col("k") > 1 && col("n") > col("k") && col("ssw") > 0,
           (col("ssb") / (col("k") - 1)) /
             (col("ssw") / (col("n") - col("k")))).as("f_bf"))
+  }
+
+  /** The (group `g`, integral value `v`) row counts `c` over rows where
+    * both are non-null: the one collapse [[brownForsythe]],
+    * [[kruskalWallis]] and [[Outliers.iqrFences]] start from, checkpointed
+    * because each reads it twice.
+    */
+  private[ops] def groupValueCounts(df: DataFrame, groupCol: String,
+      valueCol: String): DataFrame =
+    df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
+      .groupBy(col(groupCol).as("g"), col(valueCol).cast("long").as("v"))
+      .agg(count(lit(1)).as("c"))
+      .localCheckpoint(false)
+
+  /** [[groupValueCounts]] plus the group's cumulative count `cc` through
+    * each value and its size `n`: what locates an order statistic.
+    */
+  private[ops] def withGroupCum(cells: DataFrame): DataFrame = {
+    val cum = Window.partitionBy("g").orderBy(col("v").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cells
+      .withColumn("cc", sum(col("c")).over(cum))
+      .withColumn("n", sum(col("c")).over(Window.partitionBy("g")))
   }
 
   /** k-sample Anderson–Darling statistic, tie-adjusted midrank form
@@ -259,11 +273,7 @@ object RankTests {
     */
   def kruskalWallis(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val cells = df
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .groupBy(col(groupCol).as("g"), col(valueCol).cast("long").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // pooled value table + group sums read it
+    val cells = groupValueCounts(df, groupCol, valueCol)
     val pooled = cells.groupBy("v").agg(sum(col("c")).as("t"))
       .withColumn("cc", sum(col("t")).over(
         Window.orderBy(col("v").asc)
@@ -322,37 +332,16 @@ object RankTests {
     */
   def friedman(df: DataFrame, blockCol: String, treatCol: String,
       valueCol: String): DataFrame = {
-    val cells = df
-      .filter(col(blockCol).isNotNull && col(treatCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .groupBy(col(blockCol).as("b"), col(treatCol).as("j"))
-      .agg(sum(col(valueCol).cast("long")).as("v"))
-      .localCheckpoint(false) // k discovery + complete-block filter share it
-    val k = cells.agg(countDistinct(col("j")).as("k"))
-    val complete = cells
-      .withColumn("nb", count(lit(1)).over(Window.partitionBy("b")))
-      .crossJoin(broadcast(k))
-      .filter(col("nb") === col("k"))
-    // doubled midrank of treatment j within block b: 2C_v − t_v + 1
-    val wCum = Window.partitionBy("b").orderBy(col("v").asc)
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val wTie = Window.partitionBy("b", "v")
-    val ranked = complete
-      .withColumn("cc", count(lit(1)).over(wCum))
-      .withColumn("tv", count(lit(1)).over(wTie))
-      .withColumn("r2", lit(2L) * col("cc") - col("tv") + lit(1L))
+    val (ranked, dropped) = completeBlocks(df, blockCol, col(treatCol), valueCol)
     val byJ = ranked.groupBy(col("j"))
       .agg(sum(col("r2")).as("r2j"), count(lit(1)).as("bj"),
         max(col("k")).as("kk"))
     // tie mass Σ(t³−t) over (block, value) tie groups of the kept blocks
-    val ties = complete.groupBy(col("b"), col("v"))
+    val ties = ranked.groupBy(col("b"), col("v"))
       .agg(count(lit(1)).as("t"))
       .agg(coalesce(sum(
         (col("t").cast(dec19) * col("t").cast(dec19) * col("t").cast(dec19))
           .cast(dec) - col("t").cast(dec)), lit(0).cast(dec)).as("tt"))
-    val dropped = cells.groupBy(col("b")).agg(count(lit(1)).as("nb"))
-      .crossJoin(broadcast(k)).agg(
-        count_if(col("nb") =!= col("k")).as("b_dropped"))
     val dev = col("r2j") - col("bj") * (col("kk") + lit(1L))
     val agg0 = byJ
       .select(col("kk"), col("bj"),
@@ -390,12 +379,38 @@ object RankTests {
     */
   def pageTrend(df: DataFrame, blockCol: String, treatOrderCol: String,
       valueCol: String): DataFrame = {
+    val (ranked, dropped) =
+      completeBlocks(df, blockCol, col(treatOrderCol).cast("long"), valueCol)
+    val agg0 = ranked.groupBy(col("j"))
+      .agg(sum(col("r2")).as("r2j"), count(lit(1)).as("bj"),
+        max(col("k")).as("kk"))
+      .agg(max(col("kk")).as("k"), max(col("bj")).as("b"),
+        sum((col("j").cast(dec19) * col("r2j").cast(dec19)).cast(dec))
+          .as("l2"))
+    val kd = col("k").cast("double"); val bd = col("b").cast("double")
+    val lStat = col("l2").cast("double") / 2.0
+    val muL = bd * kd * (kd + 1.0) * (kd + 1.0) / 4.0
+    val sigma = sqrt(bd * kd * kd * (kd + 1.0) * (kd * kd - 1.0) / 144.0)
+    agg0.crossJoin(broadcast(dropped))
+      .select(col("k"), col("b"), col("b_dropped"), lStat.as("l_stat"),
+        when(col("k") > 1 && col("b") > 0 && sigma > 0,
+          (lStat - muL) / sigma).as("z"))
+  }
+
+  /** The complete-design prelude of [[friedman]] and [[pageTrend]]: per
+    * (block `b`, treatment `j`) the summed value `v`, kept only for blocks
+    * that hold every one of the `k` treatments, with the doubled
+    * within-block midrank `r2` = 2C_v − t_v + 1; and the one-row count
+    * `b_dropped` of the incomplete blocks.
+    */
+  private def completeBlocks(df: DataFrame, blockCol: String, treat: Column,
+      valueCol: String): (DataFrame, DataFrame) = {
     val cells = df
-      .filter(col(blockCol).isNotNull && col(treatOrderCol).isNotNull &&
+      .filter(col(blockCol).isNotNull && treat.isNotNull &&
         col(valueCol).isNotNull)
-      .groupBy(col(blockCol).as("b"), col(treatOrderCol).cast("long").as("j"))
+      .groupBy(col(blockCol).as("b"), treat.as("j"))
       .agg(sum(col(valueCol).cast("long")).as("v"))
-      .localCheckpoint(false)
+      .localCheckpoint(false) // k discovery + complete-block filter share it
     val k = cells.agg(countDistinct(col("j")).as("k"))
     val complete = cells
       .withColumn("nb", count(lit(1)).over(Window.partitionBy("b")))
@@ -411,20 +426,7 @@ object RankTests {
     val dropped = cells.groupBy(col("b")).agg(count(lit(1)).as("nb"))
       .crossJoin(broadcast(k)).agg(
         count_if(col("nb") =!= col("k")).as("b_dropped"))
-    val agg0 = ranked.groupBy(col("j"))
-      .agg(sum(col("r2")).as("r2j"), count(lit(1)).as("bj"),
-        max(col("k")).as("kk"))
-      .agg(max(col("kk")).as("k"), max(col("bj")).as("b"),
-        sum((col("j").cast(dec19) * col("r2j").cast(dec19)).cast(dec))
-          .as("l2"))
-    val kd = col("k").cast("double"); val bd = col("b").cast("double")
-    val lStat = col("l2").cast("double") / 2.0
-    val muL = bd * kd * (kd + 1.0) * (kd + 1.0) / 4.0
-    val sigma = sqrt(bd * kd * kd * (kd + 1.0) * (kd * kd - 1.0) / 144.0)
-    agg0.crossJoin(broadcast(dropped))
-      .select(col("k"), col("b"), col("b_dropped"), lStat.as("l_stat"),
-        when(col("k") > 1 && col("b") > 0 && sigma > 0,
-          (lStat - muL) / sigma).as("z"))
+    (ranked, dropped)
   }
 
   /** Jonckheere–Terpstra test (1954) — the ordered-alternative form of

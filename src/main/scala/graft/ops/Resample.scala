@@ -25,17 +25,24 @@ object Resample {
     */
   def dailyGridFfill(df: DataFrame, keys: Seq[String], dayCol: String,
       valueCols: Seq[String]): DataFrame = {
-    val span = df.groupBy(keys.map(col): _*)
-      .agg(min(col(dayCol)).as("__d0"), max(col(dayCol)).as("__d1"))
-    val grid = span.select(
-      keys.map(col) :+
-        explode(sequence(col("__d0"), col("__d1"), expr("interval 1 day"))).as(dayCol): _*)
-    val joined = grid.join(df, keys :+ dayCol, "left")
+    val joined = dailyGrid(df, keys, dayCol)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(dayCol).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     valueCols.foldLeft(joined) { (acc, c) =>
       acc.withColumn(c, last(col(c), ignoreNulls = true).over(w))
     }
+  }
+
+  /** Every day of each key's [min(dayCol), max(dayCol)] span, left-joined
+    * to `df`'s row for that day: the grid both resample modes fill.
+    */
+  private def dailyGrid(df: DataFrame, keys: Seq[String], dayCol: String): DataFrame = {
+    val span = df.groupBy(keys.map(col): _*)
+      .agg(min(col(dayCol)).as("__d0"), max(col(dayCol)).as("__d1"))
+    val grid = span.select(
+      keys.map(col) :+
+        explode(sequence(col("__d0"), col("__d1"), expr("interval 1 day"))).as(dayCol): _*)
+    grid.join(df, keys :+ dayCol, "left")
   }
 
   /** Same per-key daily grid, but gaps LINEARLY INTERPOLATED between the
@@ -54,12 +61,7 @@ object Resample {
     */
   def dailyGridInterp(df: DataFrame, keys: Seq[String], dayCol: String,
       valueCol: String): DataFrame = {
-    val span = df.groupBy(keys.map(col): _*)
-      .agg(min(col(dayCol)).as("__d0"), max(col(dayCol)).as("__d1"))
-    val grid = span.select(
-      keys.map(col) :+
-        explode(sequence(col("__d0"), col("__d1"), expr("interval 1 day"))).as(dayCol): _*)
-    val joined = grid.join(df, keys :+ dayCol, "left")
+    val joined = dailyGrid(df, keys, dayCol)
     val wPrev = Window.partitionBy(keys.map(col): _*).orderBy(col(dayCol).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wNext = Window.partitionBy(keys.map(col): _*).orderBy(col(dayCol).asc)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -71,6 +71,26 @@ object Seasonal {
           col("__sd").cast("double") / (col("__nd") * 7)).as("residual"))
   }
 
+  private val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
+  private def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(19, 0))
+
+  /** The (g, t, x) points of a series with non-null group, time and value
+    * (time and value as longs), and per group the count `n`, sum `s` and
+    * decimal(38,0) square sum `sxx`: what [[acf]] and [[saxSymbols]] read.
+    */
+  private def seriesMoments(df: DataFrame, groupCol: String, timeCol: String,
+      valueCol: String): (DataFrame, DataFrame) = {
+    val pts = df
+      .filter(col(groupCol).isNotNull && col(timeCol).isNotNull &&
+        col(valueCol).isNotNull)
+      .select(col(groupCol).as("g"), col(timeCol).cast("long").as("t"),
+        col(valueCol).cast("long").as("x"))
+    val moments = pts.groupBy(col("g"))
+      .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
+        sum((dec(col("x")) * dec(col("x"))).cast(Dec)).as("sxx"))
+    (pts, moments)
+  }
+
   /** Sample autocorrelation function per group at lags 1..`maxLag` over
     * an integer-time series — the periodicity/persistence audit that
     * decides the seasonal window [[weekdayDecompose]] assumes (a weekly
@@ -99,17 +119,7 @@ object Seasonal {
   def acf(df: DataFrame, groupCol: String, timeCol: String,
           valueCol: String, maxLag: Int): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1, got $maxLag")
-    val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    def dec(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(19, 0))
-    val pts = df
-      .filter(col(groupCol).isNotNull && col(timeCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .select(col(groupCol).as("g"), col(timeCol).cast("long").as("t"),
-        col(valueCol).cast("long").as("x"))
-    val moments = pts.groupBy(col("g"))
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
-        sum((dec(col("x")) * dec(col("x"))).cast(Dec)).as("sxx"))
+    val (pts, moments) = seriesMoments(df, groupCol, timeCol, valueCol)
     val a = pts.as("a"); val b = pts.as("b")
     val pairs = a.join(b,
         col("a.g") === col("b.g") &&
@@ -149,9 +159,6 @@ object Seasonal {
   def xcf(df: DataFrame, groupCol: String, timeCol: String,
           xCol: String, yCol: String, maxLag: Int): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1, got $maxLag")
-    val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    def dec(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(19, 0))
     val pts = df
       .filter(col(groupCol).isNotNull && col(timeCol).isNotNull &&
         col(xCol).isNotNull && col(yCol).isNotNull)
@@ -255,24 +262,14 @@ object Seasonal {
     require(breakpoints.nonEmpty && breakpoints == breakpoints.sorted,
       "breakpoints must be a sorted non-empty list")
     require(breakpoints.size <= 25, "alphabet capped at 26 letters")
-    val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    def dec(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(19, 0))
-    val pts = df
-      .filter(col(groupCol).isNotNull && col(timeCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .select(col(groupCol).as("g"), col(timeCol).cast("long").as("t"),
-        col(valueCol).cast("long").as("x"))
-    val moments = pts.groupBy("g").agg(
-      count(lit(1)).as("mn"), sum(col("x")).as("ms"),
-      sum((dec(col("x")) * dec(col("x"))).cast(Dec)).as("mq"))
+    val (pts, moments) = seriesMoments(df, groupCol, timeCol, valueCol)
     val segs = pts
       .withColumn("seg", floor(col("t").cast("double") / segLen).cast("long"))
       .groupBy("g", "seg")
       .agg(count(lit(1)).as("n_pts"), sum(col("x")).as("sx"))
-    val nD = col("mn").cast("double")
-    val mu = col("ms").cast("double") / nD
-    val sigma = sqrt(col("mq").cast("double") / nD - mu * mu)
+    val nD = col("n").cast("double")
+    val mu = col("s").cast("double") / nD
+    val sigma = sqrt(col("sxx").cast("double") / nD - mu * mu)
     val paa = (col("sx").cast("double") / col("n_pts") - mu) / sigma
     val letterIdx = breakpoints
       .foldLeft(lit(0)) { (acc, bp) =>

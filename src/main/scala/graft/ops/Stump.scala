@@ -39,19 +39,9 @@ object Stump {
     */
   def giniStump(df: DataFrame, features: Seq[(String, Column)],
       labelCol: Column): DataFrame = {
-    require(features.nonEmpty, "need at least one feature")
-    val names = features.map(_._1)
-    val base = df
-      .select(features.map { case (n, c) =>
-        c.cast("long").as(s"__f_$n") } :+
-        labelCol.cast("boolean").as("__y"): _*)
-      .filter(names.map(n => col(s"__f_$n").isNotNull).reduce(_ && _) &&
-        col("__y").isNotNull)
-    val stacked = base
-      .select(explode(array(names.map(n =>
-        struct(lit(n).as("f"), col(s"__f_$n").as("v"))): _*)).as("fv"),
-        col("__y").as("y"))
-      .select(col("fv.f").as("f"), col("fv.v").as("v"), col("y"))
+    val stacked = Distribution.stackFeatures(df,
+      features.map { case (n, c) => n -> c.cast("long") }, labelCol.cast("boolean"))
+      .withColumnRenamed("x", "v")
     val cells = stacked.groupBy("f", "v")
       .agg(count(lit(1)).as("c"),
         sum(when(col("y"), 1L).otherwise(0L)).as("p"))

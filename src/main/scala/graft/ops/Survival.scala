@@ -34,6 +34,29 @@ import org.apache.spark.sql.functions._
   */
 object Survival {
 
+  private val wCum = Window.partitionBy("g").orderBy(col("t").asc)
+    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** Per (group `g`, integral time `t`): events `d`, censorings `c`, and
+    * the subjects still at risk `n_risk` (all of the group's rows at or
+    * after t) — the table [[kaplanMeier]] and [[nelsonAalen]] read.
+    */
+  private def riskTable(df: DataFrame, groupCol: String, durationCol: String,
+      eventCol: String): DataFrame = {
+    val ev = col(eventCol).cast("long")
+    val cells = df
+      .filter(col(groupCol).isNotNull && col(durationCol).isNotNull &&
+        ev.isNotNull)
+      .groupBy(col(groupCol).as("g"), col(durationCol).cast("long").as("t"))
+      .agg(sum(ev).as("d"), sum(lit(1L) - ev).as("c"))
+    val wPrev = Window.partitionBy("g").orderBy(col("t").asc)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    cells
+      .withColumn("n_risk",
+        sum(col("d") + col("c")).over(Window.partitionBy("g")) -
+          coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
+  }
+
   /** `df`: one subject per row with integral `durationCol` (time under
     * observation) and `eventCol` (1 = event observed at duration,
     * 0 = censored at duration). Returns one row per (group, t) at
@@ -44,21 +67,7 @@ object Survival {
     */
   def kaplanMeier(df: DataFrame, groupCol: String, durationCol: String,
                   eventCol: String): DataFrame = {
-    val ev = col(eventCol).cast("long")
-    val cells = df
-      .filter(col(groupCol).isNotNull && col(durationCol).isNotNull &&
-        ev.isNotNull)
-      .groupBy(col(groupCol).as("g"), col(durationCol).cast("long").as("t"))
-      .agg(sum(ev).as("d"), sum(lit(1L) - ev).as("c"))
-    val wAll = Window.partitionBy("g")
-    val wPrev = Window.partitionBy("g").orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.partitionBy("g").orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cells
-      .withColumn("n_risk",
-        sum(col("d") + col("c")).over(wAll) -
-          coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
+    riskTable(df, groupCol, durationCol, eventCol)
       // ln term only at event times; d == n_risk extinguishes the curve
       .withColumn("__term",
         when(col("d") > 0 && col("d") < col("n_risk"),
@@ -99,21 +108,7 @@ object Survival {
     */
   def nelsonAalen(df: DataFrame, groupCol: String, durationCol: String,
                   eventCol: String): DataFrame = {
-    val ev = col(eventCol).cast("long")
-    val cells = df
-      .filter(col(groupCol).isNotNull && col(durationCol).isNotNull &&
-        ev.isNotNull)
-      .groupBy(col(groupCol).as("g"), col(durationCol).cast("long").as("t"))
-      .agg(sum(ev).as("d"), sum(lit(1L) - ev).as("c"))
-    val wAll = Window.partitionBy("g")
-    val wPrev = Window.partitionBy("g").orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.partitionBy("g").orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cells
-      .withColumn("n_risk",
-        sum(col("d") + col("c")).over(wAll) -
-          coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
+    riskTable(df, groupCol, durationCol, eventCol)
       .withColumn("hazard",
         when(col("d") > 0, col("d").cast("double") / col("n_risk"))
           .otherwise(lit(0.0)))

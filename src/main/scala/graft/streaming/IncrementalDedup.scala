@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
 import graft.llm.MinHashDedup
 
 /** Continuous corpus dedup: each micro-batch of crawled documents is
@@ -21,13 +21,34 @@ import graft.llm.MinHashDedup
   */
 object IncrementalDedup {
 
-  private def priorSigDirs(spark: SparkSession, dir: String, batchId: Long): Seq[String] = {
+  /** The `<prefix><batchId>` output directories under `dir` (none when
+    * `dir` does not exist yet).
+    */
+  private def batchDirs(spark: SparkSession, dir: String,
+      prefix: String): Seq[Path] = {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Seq.empty
-    else fs.globStatus(new Path(dir, "sigs_*")).toSeq.map(_.getPath)
-      .filter(p => p.getName.stripPrefix("sigs_").toLongOption.exists(_ < batchId))
+    else fs.globStatus(new Path(dir, s"$prefix*")).toSeq.map(_.getPath)
+  }
+
+  /** The [[batchDirs]] of batches before `batchId`: a replay's view of
+    * the store.
+    */
+  private[streaming] def priorBatchDirs(spark: SparkSession, dir: String,
+      prefix: String, batchId: Long): Seq[String] =
+    batchDirs(spark, dir, prefix)
+      .filter(p => p.getName.stripPrefix(prefix).toLongOption.exists(_ < batchId))
       .map(_.toString)
+
+  /** Every committed `<prefix>*` output under `dir` read as one table, or
+    * an empty one with `schema` when no batch has committed yet.
+    */
+  private[streaming] def readAllBatches(spark: SparkSession, dir: String,
+      prefix: String, schema: StructType): DataFrame = {
+    val dirs = batchDirs(spark, dir, prefix).map(_.toString)
+    if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.parquet(dirs: _*)
   }
 
   /** foreachBatch body. Writes `dir/pairs_<batchId>` (near-dup pairs with
@@ -41,7 +62,7 @@ object IncrementalDedup {
       threshold: Double = 0.5): Unit = {
     val spark = batch.sparkSession
     val sigs = MinHashDedup.signatures(batch, idCol, textCol, k, numHashes)
-    val prior = priorSigDirs(spark, dir, batchId)
+    val prior = priorBatchDirs(spark, dir, "sigs_", batchId)
     val pairs =
       if (prior.isEmpty)
         MinHashDedup.pairsFromSignatures(sigs, idCol, numHashes, numBands, threshold)
@@ -55,17 +76,8 @@ object IncrementalDedup {
   /** All near-dup pairs discovered so far, across every processed batch;
     * empty (with the pair schema) when no batch has committed yet.
     */
-  def pairsSoFar(spark: SparkSession, dir: String): DataFrame = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs =
-      if (!fs.exists(base)) Seq.empty
-      else fs.globStatus(new Path(dir, "pairs_*")).toSeq.map(_.getPath.toString)
-    if (dirs.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType),
-          StructField("jaccard", DoubleType))))
-    } else spark.read.parquet(dirs: _*)
-  }
+  def pairsSoFar(spark: SparkSession, dir: String): DataFrame =
+    readAllBatches(spark, dir, "pairs_",
+      StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType),
+        StructField("jaccard", DoubleType))))
 }

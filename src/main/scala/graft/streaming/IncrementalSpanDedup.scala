@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 import graft.llm.SpanDedup
 
 /** Continuous substring dedup: each micro-batch of documents is scrubbed
@@ -19,15 +19,6 @@ import graft.llm.SpanDedup
   */
 object IncrementalSpanDedup {
 
-  private def priorSpanDirs(spark: SparkSession, dir: String, batchId: Long): Seq[String] = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) Seq.empty
-    else fs.globStatus(new Path(dir, "spans_*")).toSeq.map(_.getPath)
-      .filter(p => p.getName.stripPrefix("spans_").toLongOption.exists(_ < batchId))
-      .map(_.toString)
-  }
-
   /** foreachBatch body. Writes `dir/scrubbed_<batchId>` (the batch with
     * repeated spans removed) and `dir/spans_<batchId>` (window hashes
     * first seen in this batch).
@@ -35,7 +26,7 @@ object IncrementalSpanDedup {
   def processBatch(batch: DataFrame, batchId: Long, dir: String,
       idCol: String, textCol: String, k: Int = 8): Unit = {
     val spark = batch.sparkSession
-    val prior = priorSpanDirs(spark, dir, batchId)
+    val prior = IncrementalDedup.priorBatchDirs(spark, dir, "spans_", batchId)
     val store =
       if (prior.isEmpty) spark.range(0).selectExpr("id AS h").filter("false")
       else spark.read.parquet(prior: _*)
@@ -48,17 +39,8 @@ object IncrementalSpanDedup {
   /** Scrubbed documents across every processed batch; empty (with the
     * scrub schema) when no batch has committed yet.
     */
-  def scrubbedSoFar(spark: SparkSession, dir: String): DataFrame = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs =
-      if (!fs.exists(base)) Seq.empty
-      else fs.globStatus(new Path(dir, "scrubbed_*")).toSeq.map(_.getPath.toString)
-    if (dirs.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType), StructField("n_kept", LongType),
-          StructField("n_removed", LongType), StructField("text_scrubbed", StringType))))
-    } else spark.read.parquet(dirs: _*)
-  }
+  def scrubbedSoFar(spark: SparkSession, dir: String): DataFrame =
+    IncrementalDedup.readAllBatches(spark, dir, "scrubbed_",
+      StructType(Seq(StructField("doc_id", LongType), StructField("n_kept", LongType),
+        StructField("n_removed", LongType), StructField("text_scrubbed", StringType))))
 }

@@ -1,18 +1,18 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards against main code that only its own specs reach. Starting from
   * the allow-listed roots below and the benchmark harness
   * (`perfbench/src/main`), a main file is reached when a reached file
   * names one of its top-level declarations (for a package object: the
-  * package or one of its members) in comment-stripped source. Every main
-  * file must end up reached, and every public member of a top-level main
-  * object outside the root files must be named somewhere in main or
-  * benchmark source. The test reads source text, so it runs from the
-  * repository root (sbt's default working directory).
+  * package or one of its members). Every main file must end up reached,
+  * and every public member of a top-level main object outside the root
+  * files must be named somewhere in main or benchmark source. Names count
+  * only outside comments and string literals ([[SourceText.normalize]]).
+  * The test reads source text, so it runs from the repository root (sbt's
+  * default working directory).
   */
 class MainReachabilitySpec extends AnyFunSuite {
 
@@ -54,22 +54,6 @@ class MainReachabilitySpec extends AnyFunSuite {
   private val mainDir = Paths.get("src/main/scala")
   private val benchDir = Paths.get("perfbench/src/main/scala")
 
-  private def scalaFiles(dir: Path): Seq[Path] = {
-    val s = Files.walk(dir)
-    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList.sorted
-    finally s.close()
-  }
-
-  // string and char literals are matched first so that comment markers
-  // inside them are kept; comments become a single space
-  private val token =
-    "\"\"\"[\\s\\S]*?\"\"\"|\"(?:\\\\.|[^\"\\\\\\n])*\"|'(?:\\\\.|[^'\\\\\\n])'|//[^\\n]*|/\\*[\\s\\S]*?\\*/".r
-
-  private def stripComments(src: String): String =
-    token.replaceAllIn(src, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        if (m.matched.startsWith("/")) " " else m.matched))
-
   private val modifiers =
     "(?:(?:private|protected)(?:\\[\\w+\\])?\\s+|final\\s+|sealed\\s+|abstract\\s+|case\\s+|implicit\\s+|lazy\\s+)*"
   private val topLevel = s"(?m)^$modifiers(?:class|object|trait|type|val|def)\\s+(\\w+)".r
@@ -84,10 +68,10 @@ class MainReachabilitySpec extends AnyFunSuite {
     topLevel.findAllMatchIn(text).map(_.group(1)).toSet ++ pkg ++ members
   }
 
-  private lazy val main = scalaFiles(mainDir)
+  private lazy val main = SourceText.scalaFiles(mainDir)
   private lazy val rel = main.map(f => f -> mainDir.relativize(f).toString).toMap
-  private lazy val text = (main ++ scalaFiles(benchDir))
-    .map(f => f -> stripComments(new String(Files.readAllBytes(f), "UTF-8"))).toMap
+  private lazy val text =
+    (main ++ SourceText.scalaFiles(benchDir)).map(f => f -> SourceText.read(f)).toMap
 
   test("every main file is reached from an entry point, the benchmark or the allow-list") {
     val missing = roots.keySet -- rel.values

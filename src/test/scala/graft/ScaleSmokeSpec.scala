@@ -101,8 +101,17 @@ class ScaleSmokeSpec extends SparkSpec {
   test("z-order at 4.8M rows: clustering is a permutation and both spans stay narrow") {
     val li = x8(Tables.lineitem(spark, sf)).drop("__rep")
       .select("l_partkey", "l_suppkey", "l_orderkey")
-    val z = graft.ops.Layout.zOrderBy(li, Seq("l_partkey", "l_suppkey"),
-      bits = 10, numPartitions = 32)
+    // quantize both keys to 10 bits against their bounds, then range-sort
+    // on the interleaved z-value
+    import graft.ops.Layout.{quantize, zValue}
+    val b = li.agg(min("l_partkey").as("lp"), max("l_partkey").as("hp"),
+      min("l_suppkey").as("ls"), max("l_suppkey").as("hs"))
+    val z = li.crossJoin(broadcast(b))
+      .withColumn("z", zValue(Seq(
+        quantize(col("l_partkey").cast("double"), col("lp"), col("hp"), 10),
+        quantize(col("l_suppkey").cast("double"), col("ls"), col("hs"), 10)), 10))
+      .repartitionByRange(32, col("z")).sortWithinPartitions("z")
+      .select(li.columns.map(col): _*)
     assert(z.count() === li.count())
     // per-partition spans of BOTH key domains ≪ global span
     val spans = z.withColumn("p", spark_partition_id())

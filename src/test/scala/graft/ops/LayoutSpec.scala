@@ -34,7 +34,10 @@ class LayoutSpec extends SparkSpec {
         .agg(avg("sx").as("ax"), avg("sy").as("ay")).head()
       (per.getDouble(0), per.getDouble(1))
     }
-    val (zx, zy) = spans(Layout.zOrderBy(grid, Seq("x", "y"), bits = 6, numPartitions = 16))
+    // x, y already sit on the [0, 2^6) lattice: cluster by their z-value
+    val zSorted = grid.withColumn("z", Layout.zValue(Seq(col("x"), col("y")), 6))
+      .repartitionByRange(16, col("z")).sortWithinPartitions("z")
+    val (zx, zy) = spans(zSorted)
     val linear = grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
     val (lx, ly) = spans(linear)
     // linear sort: x-span tiny, y-span ~ the whole domain
@@ -57,17 +60,6 @@ class LayoutSpec extends SparkSpec {
     val q = df.select(Layout.quantizeN(col("v"), lit(7.0), lit(7.0), 20).as("q"))
       .as[Long].collect().toSeq
     assert(q === Seq(0L, 0L, 0L))
-  }
-
-  test("zOrderBy caps per-lane bits so 4+ columns fit 63 bits") {
-    // default bits=16 with 4 columns would need 64 interleaved bits; the
-    // effective lane width must derive down to 63/4 = 15 instead of throwing
-    val df = spark.range(256).select(
-      col("id").as("a"), pmod(col("id"), lit(16L)).as("b"),
-      pmod(col("id"), lit(7L)).as("c"), pmod(col("id"), lit(3L)).as("d"))
-    val out = Layout.zOrderBy(df, Seq("a", "b", "c", "d"), numPartitions = 4)
-    assert(out.count() === 256L)
-    assert(out.columns.toSeq === Seq("a", "b", "c", "d"))
   }
 
   test("compactionPlan: sequential greedy semantics, partitioning-independent") {

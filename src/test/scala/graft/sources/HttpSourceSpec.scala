@@ -66,9 +66,10 @@ class HttpSourceSpec extends SparkSpec {
     }
     val ids = (1 to 12).map(i => s"KR_$i").toDF("match_id")
     // parallelism 8 exceeds the 4-req window budget: the fan-out must be
-    // capped at 4 partitions of 1 req/window, never 8 × 1
+    // capped at 4 partitions of 1 req/window, never 8 × 1. A 50 ms window
+    // keeps each partition's two window waits short.
     val n = HttpSource.fetchDocsDistributed(ids, "match_id", id => s"api/$id",
-      factory, parallelism = 8, maxRequestsPerWindow = 4).count()
+      factory, parallelism = 8, maxRequestsPerWindow = 4, windowMillis = 50L).count()
     assert(n === 12)
     assert(clientsMade.value === 4L,
       s"expected fan-out capped at 4 partitions, got ${clientsMade.value}")
