@@ -14,6 +14,13 @@ import org.apache.spark.sql.DataFrame
   * partitions (match_id; match_id×team), the distinct for split keys, and
   * the final metric aggregates — everything else is narrow projections, so
   * the pipeline scales with input size, not with operator count.
+  *
+  * The lineage runs once: the flow fans out at two points, and each is an
+  * eager local checkpoint. [[Preprocess.splitByGroup]] materializes the
+  * labeled input, which the split key table, both semi-joins and — through
+  * `train`/`test` — the encoder fit, `transform` and the ranking read.
+  * [[fit]] materializes the encoded, derived train table, which the clip
+  * fit and the scaler fit (over the clipped table) both range-sort.
   */
 object Pipeline {
 
@@ -31,7 +38,7 @@ object Pipeline {
     */
   def fit(train: DataFrame): Fitted = {
     val encoder = Preprocess.fitEncoder(train, "champion")
-    val derived = Preprocess.derivedFeatures(encoder(train))
+    val derived = Preprocess.derivedFeatures(encoder(train)).localCheckpoint(eager = true)
     val clip = Preprocess.fitClip(derived, clipCols)
     val scaler = Preprocess.fitRobustScaler(clip(derived), Preprocess.modelFeatureCols)
     Fitted(encoder, clip, scaler)

@@ -224,9 +224,17 @@ object Preprocess {
     * reproducible for a fixed seed; exact memberships differ from sklearn's
     * (documented deviation — golden tests assert proportions and
     * disjointness, not memberships).
+    *
+    * Materialization point: `df` is checkpointed once, eagerly, and the key
+    * table and both semi-joins read that checkpoint. Without it each of
+    * them (and every consumer of `train`/`test` downstream — the fit
+    * aggregates, transform, ranking) would re-plan and re-run `df`'s whole
+    * lineage, which for the ARAM pipeline is the nested match read plus
+    * explode and two windows.
     */
   def splitByGroup(df: DataFrame, groupCol: String, testFraction: Double = 0.2,
       seed: Long = 42L): (DataFrame, DataFrame) = {
+    val input = df.localCheckpoint(eager = true)
     // No broadcast hint on the key tables: distinct group keys over a fact
     // table are scale-proportional (billions of match ids at 100 TB), and a
     // forced hint would driver-collect them. AQE still picks broadcast-hash
@@ -236,12 +244,12 @@ object Preprocess {
     // stops AQE coalescing the key table, which would change the memberships
     // of the seeded split: it samples each partition on its own.
     val partitions = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val keys = df.select(col(groupCol)).repartition(partitions, col(groupCol)).distinct()
+    val keys = input.select(col(groupCol)).repartition(partitions, col(groupCol)).distinct()
       .localCheckpoint(eager = false)
     val Array(trainKeys, testKeys) =
       keys.randomSplit(Array(1.0 - testFraction, testFraction), seed)
-    (df.join(trainKeys, Seq(groupCol), "left_semi"),
-      df.join(testKeys, Seq(groupCol), "left_semi"))
+    (input.join(trainKeys, Seq(groupCol), "left_semi"),
+      input.join(testKeys, Seq(groupCol), "left_semi"))
   }
 
   /** Deterministic hash-based alternative to [[splitByGroup]] for cases

@@ -46,7 +46,10 @@ object Partitioning {
     * partition count is only inspected when the analyzed plan is a pure
     * scan/project/filter/generate chain; an input that already went
     * through a join/aggregate/window/repartition has reducer-side
-    * parallelism and passes through untouched.
+    * parallelism and passes through untouched. Plan nodes do not hold
+    * the plans of subquery expressions (an IN/EXISTS/scalar subquery in
+    * a filter becomes a join or a broadcast at planning), so an input
+    * whose expressions hold any subquery passes through untouched too.
     *
     * Float-sum caveat (round-15 ADVICE): the round-robin targets
     * `defaultParallelism`, so the row-to-partition layout — and with it
@@ -66,7 +69,8 @@ object Partitioning {
            _: Deduplicate | _: RepartitionOperation | _: Intersect |
            _: Except | _: GlobalLimit | _: FlatMapGroupsWithState |
            _: MapGroups | _: CoGroup => true
-      case _ => false
+      case p => p.expressions.exists(_.exists(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.SubqueryExpression]))
     }
     if (exchangeSuspect) return df
     val target = df.sparkSession.sparkContext.defaultParallelism

@@ -592,7 +592,8 @@ object RelationalQueries {
     sf1 = true),
 
     // Z-order (Morton) curve — the bit-interleave behind write-side layout
-    // clustering (ops.Layout.zOrderBy), verified cross-engine: z-values of
+    // clustering (ops.Layout.zValue plus a caller-side range sort on the
+    // z-value), verified cross-engine: z-values of
     // (partkey, suppkey) low bytes, aggregated per curve cell. Pure integer
     // shift/and/or Column math, fully inside whole-stage codegen; the
     // locality property itself is proven in LayoutSpec.

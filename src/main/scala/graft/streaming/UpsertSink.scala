@@ -25,24 +25,28 @@ object UpsertSink {
   def writeDelta(batch: DataFrame, batchId: Long, dir: String): Unit =
     batch.write.mode("overwrite").parquet(s"$dir/delta_$batchId")
 
-  /** Resolve current state: newest row per key across all deltas. */
+  /** Resolve current state: newest row per key across all deltas. Reads
+    * the listed delta dirs, not a `delta_*` glob: Spark probes a glob path
+    * literally for a `_spark_metadata` log and warns with a stack trace
+    * when it is missing.
+    */
   def readCurrent(spark: SparkSession, dir: String, keyCols: Seq[String],
       versionCols: Seq[String]): DataFrame = {
-    val all = spark.read.parquet(s"$dir/delta_*")
+    val (_, deltas) = listDeltas(spark, dir)
+    require(deltas.nonEmpty, s"no delta_* dirs under $dir")
+    val all = spark.read.parquet(deltas.map(_.toString).toSeq: _*)
     Dedup.lastWriteWins(all, keyCols, versionCols.map(col(_).desc))
   }
 
   /** The dir's OWN filesystem (never `FileSystem.get`'s default — the
     * state dir may live on s3a/hdfs while the default FS is local), plus
-    * the delta entry names under it.
+    * the delta entries under it.
     */
   private def listDeltas(spark: SparkSession, dir: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path, Array[String]) = {
+      : (org.apache.hadoop.fs.FileSystem, Array[org.apache.hadoop.fs.Path]) = {
     val base = new org.apache.hadoop.fs.Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val names = fs.listStatus(base).map(_.getPath.getName)
-      .filter(_.startsWith("delta_"))
-    (fs, base, names)
+    (fs, fs.listStatus(base).map(_.getPath).filter(_.getName.startsWith("delta_")))
   }
 
   /** Compact deltas into a single resolved snapshot (run periodically;
@@ -62,8 +66,7 @@ object UpsertSink {
     */
   def compact(spark: SparkSession, dir: String, keyCols: Seq[String],
       versionCols: Seq[String]): Unit = {
-    val (fs, base, names) = listDeltas(spark, dir)
-    val inputs = names.map(n => new org.apache.hadoop.fs.Path(base, n))
+    val (fs, inputs) = listDeltas(spark, dir)
     // nothing new since the last compaction → no-op
     if (!inputs.exists(_.getName.matches("delta_\\d+"))) return
     val tag = inputs.flatMap(p => "\\d+$".r.findFirstIn(p.getName))

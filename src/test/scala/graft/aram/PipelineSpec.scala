@@ -26,6 +26,18 @@ class PipelineSpec extends SparkSpec {
     assert(r.select("puuid").distinct().count() === r.count())
   }
 
+  test("E3: split, fit, transform and ranking run the labeled lineage once") {
+    val labeled = Labeling.label(PlayerFeatures.extract(matches))
+    val n = labeled.count()
+    // every labeled row passes this filter once per evaluation of the lineage
+    val seen = spark.sparkContext.longAccumulator("pipeline.spec.rows")
+    val touch = udf { (_: String) => seen.add(1L); true }.asNondeterministic()
+    val (train, test) = Preprocess.splitByGroup(labeled.filter(touch(col("match_id"))), "match_id")
+    val scored = Pipeline.ruleScorer(Map("kda" -> 1.0))(Pipeline.transform(Pipeline.fit(train), test))
+    Ranking.predictedRanks(scored, "predicted_score", Seq("match_id"), "puuid").collect()
+    assert(seen.value === n)
+  }
+
   test("labeling check (test_labeling shapes): win-team mean rank beats lose-team") {
     val labeled = Labeling.label(PlayerFeatures.extract(matches))
     val byWin = labeled.groupBy("win").agg(avg("rank_in_match").as("mean_rank"))

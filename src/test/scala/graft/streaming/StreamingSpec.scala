@@ -287,6 +287,14 @@ class StreamingSpec extends SparkSpec {
     assert(current() === Map("m1" -> "v2", "m2" -> "v1", "m3" -> "v1"))
   }
 
+  test("S4 upsert sink: reading an empty state dir fails naming the dir") {
+    val dir = Files.createTempDirectory("upsert-empty").toString
+    val e = intercept[IllegalArgumentException] {
+      UpsertSink.readCurrent(spark, dir, Seq("match_id"), Seq("version"))
+    }
+    assert(e.getMessage.contains(dir))
+  }
+
   test("E1+E2 topology: queues, api joins, ARAM gate, self-feeding frontier") {
     val base = Files.createTempDirectory("topo").toString
     val userQ = s"$base/users"; val matchQ = s"$base/matches"
