@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize
 
 /** Transitive duplicate clustering: connected components over the near-dup
   * pair graph by iterative min-label propagation — upgrades pairwise
@@ -17,8 +18,8 @@ import org.apache.spark.sql.functions._
   * converge in 2-3 rounds either way; the jump step is what keeps
   * adversarial chain- or tree-shaped components from turning round count
   * into graph diameter at corpus scale. Lineage is cut per iteration
-  * (`localCheckpoint`) — without it the plan doubles every round, which is
-  * the classic iterative-DataFrame trap.
+  * ([[graft.ops.Materialize]]) — without it the plan doubles every round,
+  * which is the classic iterative-DataFrame trap.
   */
 object DupClusters {
 
@@ -35,19 +36,22 @@ object DupClusters {
     */
   def clusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // symmetric edge list, hash-partitioned by src ONCE before the cut
-    // (round 16, guide §2.4 — the pageRank/BFS partition-once
-    // discipline): distinct used to leave the checkpoint partitioned by
-    // hash(src, dst), so EVERY round's propagation join re-exchanged the
-    // whole edge list by src; repartition(src) first lets distinct reuse
-    // the layout (subset-of-keys clustering) and the checkpoint preserves
-    // it, so per-round joins move only the node-sized label table
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .repartition(col("src"))
-      .distinct().localCheckpoint(false)
+    // (the pageRank/BFS partition-once discipline): repartition(src)
+    // first lets distinct reuse the layout (subset-of-keys clustering).
+    // A plain localCheckpoint declares no partitioning under AQE, so
+    // every round re-exchanged the whole edge list anyway. Materialize
+    // declares the src hash when AQE kept every shuffle partition, or a
+    // single partition when it coalesced to one; then per-round joins
+    // move only the label table (a coalesce to 2+ partitions declares
+    // nothing, and the edges are exchanged again)
+    val edges = Materialize(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .repartition(col("src"))
+        .distinct())
 
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(false)
+    var labels = Materialize(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
 
     // Convergence check via the label-sum invariant: labels are monotone
     // non-increasing per id (least of own and neighbor min), so the total
@@ -60,32 +64,33 @@ object DupClusters {
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      // SHUFFLE_HASH on the node-sized label table (round 16): the edge
-      // cache is hash-partitioned but UNSORTED, so the default sort-merge
-      // join re-sorted the edge partitions every round; hashing the label
-      // table streams the edges as-is (same per-iteration discipline as
-      // GraphRank.step — never a broadcast, labels are node-sized)
+      // SHUFFLE_HASH on the node-sized label table: the stored edges are
+      // UNSORTED, so a sort-merge join would re-sort them every round;
+      // hashing the label table streams the edges as-is, and on the
+      // declared co-partitioning neither side is exchanged (same
+      // per-iteration discipline as GraphRank.step — never a broadcast,
+      // labels are node-sized)
       val nbrMin = edges.join(labels.hint("SHUFFLE_HASH"),
           edges("src") === labels("id"))
         .groupBy(col("dst").as("id2")).agg(min(col("label")).as("nbr_min"))
-      // checkpointed: prop feeds both sides of the jump join below —
+      // materialized: prop feeds both sides of the jump join below —
       // without the cut the propagation join/aggregate lineage is
       // instantiated twice per round (exchange reuse is not guaranteed)
-      val prop = labels.join(nbrMin, labels("id") === nbrMin("id2"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        .localCheckpoint(false)
+      val prop = Materialize(
+        labels.join(nbrMin, labels("id") === nbrMin("id2"), "left")
+          .select(col("id"), least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label")))
       // Pointer jump (path halving): every label is itself a vertex id, so
       // label(label) is defined; taking it halves each label chain. Labels
       // stay monotone non-increasing and within the component, so the
       // fixpoint (= constant labels per component, anchored at the min id)
       // is unchanged — only the number of rounds to reach it drops.
-      // checkpointed too: next is consumed three times (the convergence
+      // materialized too: next is consumed three times (the convergence
       // aggregate, then both label joins of the following round), so one
       // materialization beats three executions of the jump join
       val parents = prop.select(col("id").as("pid"), col("label").as("plabel"))
-      val next = prop.join(parents, prop("label") === parents("pid"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("plabel"), col("label"))).as("label"))
-        .localCheckpoint(false)
+      val next = Materialize(
+        prop.join(parents, prop("label") === parents("pid"), "left")
+          .select(col("id"), least(col("label"), coalesce(col("plabel"), col("label"))).as("label")))
       val s = labelSum(next)
       converged = (s == null && prevSum == null) || (s != null && s.compareTo(prevSum) == 0)
       prevSum = s

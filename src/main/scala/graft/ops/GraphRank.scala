@@ -28,9 +28,10 @@ import org.apache.spark.sql.functions._
   * ONCE and cached — `InMemoryRelation` preserves the child's
   * `outputPartitioning`, so every iteration's join reuses that layout and
   * only the (node, pr) table (one row per node, two longs wide) moves per
-  * round. Lineage is cut every other round with an eager
-  * `localCheckpoint`, the same guard as the connected-components loop
-  * (`DupClusters`), so plan size stays O(1) in the iteration count.
+  * round. Lineage is cut every other round with [[Materialize]] (an eager
+  * checkpoint that declares the partitioning and size it stored), the
+  * same cut as the connected-components loop (`DupClusters`), so plan
+  * size stays O(1) in the iteration count.
   */
 object GraphRank {
 
@@ -70,7 +71,7 @@ object GraphRank {
                          scaleTotal: Long = 1000000000000L): DataFrame = {
     require(iterations >= 0, "iterations must be non-negative")
     val (eDeg, nodes0) = degreeJoinedEdges(edges)
-    val nodes = nodes0.localCheckpoint(true)
+    val nodes = Materialize(nodes0)
 
     val n = nodes.count()
     require(n > 0, "empty graph")
@@ -94,9 +95,9 @@ object GraphRank {
     while (i < iterations) {
       ranks = step(ranks)
       i += 1
-      if (i % 2 == 0 && i < iterations) ranks = ranks.localCheckpoint(true)
+      if (i % 2 == 0 && i < iterations) ranks = Materialize(ranks)
     }
-    val out = ranks.localCheckpoint(true)
+    val out = Materialize(ranks)
     edgeTable.unpersist(false)
     out
   }
@@ -124,11 +125,10 @@ object GraphRank {
     require(iterations >= 0, "iterations must be non-negative")
     val (eDeg, nodes0) = degreeJoinedEdges(edges)
     val seedCol = seeds.columns.head
-    val nodes = nodes0
+    val nodes = Materialize(nodes0
       .join(seeds.select(col(seedCol).cast("long").as("node"))
         .distinct().withColumn("__seed", lit(true)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__seed"), lit(false)).as("__seed"))
-      .localCheckpoint(true)
+      .select(col("node"), coalesce(col("__seed"), lit(false)).as("__seed")))
 
     val nSeeds = nodes.filter(col("__seed")).count()
     require(nSeeds > 0, "no seed is a graph node")
@@ -173,10 +173,9 @@ object GraphRank {
     val eW = e.join(wsum, "src")
       .select("src", "dst", "w", "wsum")
       .cache()
-    val nodes = eW.select(col("src").as("node"))
+    val nodes = Materialize(eW.select(col("src").as("node"))
       .union(eW.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val n = nodes.count()
     require(n > 0, "empty graph")
     val init = scaleTotal / n
@@ -246,10 +245,10 @@ object GraphRank {
     */
   def kCorePeeled(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    var e = canonicalUndirected(edges).localCheckpoint(true)
+    var e = Materialize(canonicalUndirected(edges))
     var i = 0
     while (i < rounds) {
-      e = peelOnce(e, k).localCheckpoint(true)
+      e = Materialize(peelOnce(e, k))
       i += 1
     }
     degreesOf(e).filter(col("deg") >= k)
@@ -281,7 +280,7 @@ object GraphRank {
     var labels = labels0
     var i = 0
     while (i < rounds) {
-      labels = lpaStep(sym, labels).localCheckpoint(true)
+      labels = Materialize(lpaStep(sym, labels))
       i += 1
     }
     labels
@@ -289,18 +288,19 @@ object GraphRank {
 
   private def lpaInit(edges: DataFrame): (DataFrame, DataFrame) = {
     val e = canonicalUndirected(edges)
-    val sym = e.select(col("u").as("node"), col("v").as("nbr"))
+    val sym = Materialize(e.select(col("u").as("node"), col("v").as("nbr"))
       .unionAll(e.select(col("v").as("node"), col("u").as("nbr")))
-      .repartition(col("nbr"))
-      .localCheckpoint(true)
-    val labels = sym.select(col("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
+      .repartition(col("nbr")))
+    val labels = Materialize(sym.select(col("node")).distinct()
+      .select(col("node"), col("node").as("label")))
     (sym, labels)
   }
 
+  // SHUFFLE_HASH on the node-sized label table, as in [[step]]: never a
+  // broadcast (one more job per round), and on the co-partitioning
+  // [[Materialize]] declares neither side is exchanged
   private def lpaStep(sym: DataFrame, labels: DataFrame): DataFrame =
-    sym.join(labels.select(col("node").as("nbr"), col("label")), Seq("nbr"))
+    sym.join(labels.select(col("node").as("nbr"), col("label")).hint("SHUFFLE_HASH"), Seq("nbr"))
       .groupBy(col("node"), col("label")).agg(count(lit(1)).as("__cnt"))
       .groupBy(col("node"))
       .agg(max(struct(col("__cnt"), (-col("label")).as("__neg"))).as("__m"))
@@ -341,7 +341,7 @@ object GraphRank {
   private def wedgePairs(edges: DataFrame, maxDegree: Int,
       aggs: Column*): (DataFrame, DataFrame) = {
     require(maxDegree >= 2)
-    val e = canonicalUndirected(edges).localCheckpoint(true)
+    val e = Materialize(canonicalUndirected(edges))
     val deg = degreesOf(e)
     val sym = e.select(col("u").as("apex"), col("v").as("nbr"))
       .unionAll(e.select(col("v").as("apex"), col("u").as("nbr")))
@@ -416,7 +416,7 @@ object GraphRank {
   def degreeAssortativity(edges: DataFrame): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val dec19 = org.apache.spark.sql.types.DecimalType(19, 0)
-    val e = canonicalUndirected(edges).localCheckpoint(true)
+    val e = Materialize(canonicalUndirected(edges))
     val deg = degreesOf(e)
     val withDeg = e
       .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
@@ -477,24 +477,23 @@ object GraphRank {
   def triangleCountsAdjacency(edges: DataFrame): DataFrame = {
     val e = canonicalUndirected(edges)
     val deg = degreesOf(e)
-    val oriented = e
+    val oriented = Materialize(e
       .join(deg.withColumnRenamed("node", "u").withColumnRenamed("deg", "du"), "u")
       .join(deg.withColumnRenamed("node", "v").withColumnRenamed("deg", "dv"), "v")
       .select(
         when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
           col("u")).otherwise(col("v")).as("a"),
         when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-          col("v")).otherwise(col("u")).as("b"))
-      .localCheckpoint(true)
+          col("v")).otherwise(col("u")).as("b")))
 
     // out-neighbor lists (bounded at O(√m) per node by the orientation)
     val adj = oriented.groupBy(col("a").as("n")).agg(collect_list(col("b")).as("nbrs"))
-    val tri = oriented
+    // materialized: consumed by three corner projections
+    val tri = Materialize(oriented
       .join(adj.select(col("n").as("a"), col("nbrs").as("na")), Seq("a"))
       .join(adj.select(col("n").as("b"), col("nbrs").as("nb")), Seq("b"))
       .select(col("a"), col("b"), array_intersect(col("na"), col("nb")).as("ws"))
-      .filter(size(col("ws")) > 0)
-      .localCheckpoint(true) // consumed by three corner projections
+      .filter(size(col("ws")) > 0))
 
     tri.select(col("a").as("node"), size(col("ws")).cast("long").as("c"))
       .union(tri.select(col("b").as("node"), size(col("ws")).cast("long").as("c")))
@@ -524,17 +523,18 @@ object GraphRank {
   def bfsHopsPinned(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be non-negative")
     // partition-once (round 15): without the src hash layout every round's
-    // frontier join re-exchanged the whole edge list; the checkpoint
-    // preserves the partitioning, so each [[bfsStep]] join is
-    // co-partitioned on the edge side
-    val e = edges.select(col("src").cast("long").as("src"),
+    // frontier join re-exchanged the whole edge list. [[Materialize]]
+    // declares the layout it stored (the src hash when AQE kept every
+    // shuffle partition, one partition when it coalesced to one), so
+    // each [[bfsStep]] join is co-partitioned on the edge side
+    val e = Materialize(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-      .repartition(col("src")).localCheckpoint(true)
-    var dist = seeds.select(col("node").cast("long").as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
+      .repartition(col("src")))
+    var dist = Materialize(seeds.select(col("node").cast("long").as("node")).distinct()
+      .withColumn("dist", lit(0L)))
     var i = 0
     while (i < rounds) {
-      dist = bfsStep(e, dist).localCheckpoint(true)
+      dist = Materialize(bfsStep(e, dist))
       i += 1
     }
     dist
@@ -608,8 +608,8 @@ object GraphRank {
         .groupBy(col("src")).agg(sum(col("a")).cast(Dec).as("h"))
       i += 1
       if (i % 2 == 0 && i < iterations) {
-        auths = auths.localCheckpoint(true)
-        hubs = hubs.localCheckpoint(true)
+        auths = Materialize(auths)
+        hubs = Materialize(hubs)
       }
     }
     val aTot = auths.agg(sum(col("a")).cast(Dec).as("at"))
@@ -622,7 +622,7 @@ object GraphRank {
       .select(lit("hub").as("kind"), col("src").as("id"),
         col("h").cast("double").as("raw"),
         (col("h").cast("double") / col("ht").cast("double")).as("score"))
-    val out = aOut.unionByName(hOut).localCheckpoint(true)
+    val out = Materialize(aOut.unionByName(hOut))
     eBySrc.unpersist(false)
     eByDst.unpersist(false)
     out

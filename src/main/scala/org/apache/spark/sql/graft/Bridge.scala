@@ -32,6 +32,21 @@ object Bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
 
+  /** Bytes the block managers hold for `rdd`'s cached partitions, memory
+    * plus disk. Read from the block manager master, which every task
+    * updates before it finishes; `SparkContext.getRDDStorageInfo` reads
+    * the same numbers from the status store, which the listener bus fills
+    * asynchronously, so right after a job it can lag.
+    */
+  def storedBytes(rdd: org.apache.spark.rdd.RDD[_]): Long = {
+    val id = rdd.id
+    rdd.sparkContext.env.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks.iterator)
+      .collect { case (org.apache.spark.storage.RDDBlockId(`id`, _), s) =>
+        s.memSize + s.diskSize }
+      .sum
+  }
+
   def registerTempFunction(spark: SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

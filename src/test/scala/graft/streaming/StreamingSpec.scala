@@ -136,7 +136,9 @@ class StreamingSpec extends SparkSpec {
     IncrementalDedup.processBatch(batch1, 1L, dir, "doc_id", "text",
       numBands = 6, threshold = 0.4)
     assert(pairSet() === pairs)
-    assert(spark.read.parquet(s"$dir/sigs_*").count() === 5)
+    val sigs = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("sigs_")).map(_.getPath)
+    assert(spark.read.parquet(sigs.toSeq: _*).count() === 5)
   }
 
   test("incrementally maintained aggregate: foreachBatch folds batches; replay idempotent") {
