@@ -10,17 +10,21 @@ import org.apache.spark.sql.DataFrame
   * function producing a `predicted_score` column (an MLlib model's
   * prediction, a rule expression, precomputed columns) slots in.
   *
-  * Plan shape: the only shuffles in the whole pipeline are the two window
-  * partitions (match_id; match_id×team), the distinct for split keys, and
-  * the final metric aggregates — everything else is narrow projections, so
-  * the pipeline scales with input size, not with operator count.
+  * Plan shape: the shuffles are the labeling windows (match_id×team for
+  * the features, match_id for the rank label), the split's key
+  * repartition + distinct (and its semi-joins, unless AQE broadcasts the
+  * keys), the encoder's distinct, the fit's one range sort, the
+  * predicted-rank window (match_id) and the final metric aggregate.
+  * Everything else is narrow projections, and the fitted state reaches
+  * the transform as literals and a broadcast local dimension table, so the
+  * pipeline scales with input size, not with operator count.
   *
-  * The lineage runs once: the flow fans out at two points, and each is an
-  * eager local checkpoint. [[Preprocess.splitByGroup]] materializes the
-  * labeled input, which the split key table, both semi-joins and — through
-  * `train`/`test` — the encoder fit, `transform` and the ranking read.
-  * [[fit]] materializes the encoded, derived train table, which the clip
-  * fit and the scaler fit (over the clipped table) both range-sort.
+  * The lineage runs once: the flow fans out at one point, an eager local
+  * checkpoint. [[Preprocess.splitByGroup]] materializes the labeled input,
+  * which the split key table, both semi-joins and — through `train`/`test`
+  * — the encoder fit, `transform` and the ranking read. The encoded,
+  * derived train table has one consumer, the order-statistics sort of
+  * [[Preprocess.fitClipAndScaler]], so [[fit]] does not materialize it.
   */
 object Pipeline {
 
@@ -34,13 +38,13 @@ object Pipeline {
 
   /** Fit preprocessing on the train split (encode → derive → clip → scale
     * over the 23 model features) — `feature_factory.prepare_features` +
-    * `fit_transform`.
+    * `fit_transform`. The clip bounds and the scaler statistics over the
+    * clipped table come from one range sort.
     */
   def fit(train: DataFrame): Fitted = {
     val encoder = Preprocess.fitEncoder(train, "champion")
-    val derived = Preprocess.derivedFeatures(encoder(train)).localCheckpoint(eager = true)
-    val clip = Preprocess.fitClip(derived, clipCols)
-    val scaler = Preprocess.fitRobustScaler(clip(derived), Preprocess.modelFeatureCols)
+    val (clip, scaler) = Preprocess.fitClipAndScaler(
+      Preprocess.derivedFeatures(encoder(train)), clipCols, Preprocess.modelFeatureCols)
     Fitted(encoder, clip, scaler)
   }
 

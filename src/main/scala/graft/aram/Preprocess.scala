@@ -2,6 +2,8 @@ package graft.aram
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
+import scala.jdk.CollectionConverters._
 
 /** Fit/apply preprocessing — the reference's `FeatureFactory` state
   * (`clip_values`, `champion_encoder`, `RobustScaler` — `transformer/
@@ -41,11 +43,18 @@ object Preprocess {
 
   // ---------------------------------------------------------------- P7 ----
 
-  /** Fitted 1%/99% clip bounds per column (`feature_factory.py:229-238`). */
+  /** Fitted 1%/99% clip bounds per column (`feature_factory.py:229-238`).
+    * A null or NaN passes through unchanged, as pandas `clip` keeps NaN:
+    * `greatest` skips nulls and orders NaN above every value, so without
+    * the guard a null would come out as the lower bound and a NaN as the
+    * upper one. The percentile fits skip both, so the scaler fitted over
+    * the clipped table skips them too.
+    */
   final case class ClipModel(bounds: Map[String, (Double, Double)]) {
     def apply(df: DataFrame): DataFrame =
       bounds.foldLeft(df) { case (acc, (c, (lo, hi))) =>
-        acc.withColumn(c, least(greatest(col(c), lit(lo)), lit(hi)))
+        acc.withColumn(c, when(col(c).isNull || isnan(col(c)), col(c))
+          .otherwise(least(greatest(col(c), lit(lo)), lit(hi))))
       }
   }
 
@@ -59,6 +68,50 @@ object Preprocess {
   def fitClip(train: DataFrame, cols: Seq[String], lo: Double = 0.01, hi: Double = 0.99): ClipModel =
     ClipModel(graft.ops.Aggregates.sortedPercentilesMulti(train, cols, Seq(lo, hi))
       .map { case (c, Seq(l, h)) => c -> (l, h) })
+
+  /** [[fitClip]] and [[fitRobustScaler]] over the clipped table, from ONE
+    * range sort: the same bounds and (median, IQR) bits as
+    * `fitRobustScaler(clipModel(train), scaleCols)` after
+    * `fitClip(train, clipCols)`, at one sort instead of two.
+    *
+    * One [[graft.ops.Aggregates.sortedOrderStats]] call takes the order
+    * statistics at p ∈ {0.01, 0.99, 0.25, 0.5, 0.75} of every column. Clip
+    * bounds interpolate the first two. The clip is monotone, so the sorted
+    * clipped column is the clipped sorted column: a clipped column's
+    * scaler quantiles interpolate its order statistics after clipping them
+    * with [[ClipModel.apply]]'s semantics ([[clipValue]]). The clip keeps
+    * nulls and NaNs, and the sort skips them, so both paths count the same
+    * values.
+    */
+  private[aram] def fitClipAndScaler(train: DataFrame, clipCols: Seq[String],
+      scaleCols: Seq[String]): (ClipModel, RobustScalerModel) = {
+    val stats = graft.ops.Aggregates.sortedOrderStats(train,
+      (scaleCols ++ clipCols).distinct, Seq(0.01, 0.99, 0.25, 0.5, 0.75))
+    val clip = ClipModel(clipCols.map { c =>
+      val Seq(l, h) = stats(c).take(2).map(_.interpolated)
+      c -> (l, h)
+    }.toMap)
+    val scaler = RobustScalerModel(scaleCols.map { c =>
+      val Seq(q25, q50, q75) = stats(c).drop(2).map { s =>
+        clip.bounds.get(c).fold(s) { case (l, h) =>
+          s.copy(vLo = clipValue(s.vLo, l, h), vHi = clipValue(s.vHi, l, h))
+        }.interpolated
+      }
+      c -> (q50, q75 - q25)
+    }.toMap)
+    (clip, scaler)
+  }
+
+  /** [[ClipModel.apply]] on one order statistic (never null or NaN), with
+    * Spark's `greatest` / `least` semantics rather than `math.max` /
+    * `math.min`: −0.0 equals 0.0, and a tie keeps the first argument, the
+    * value itself, so a −0.0 beside a 0.0 bound stays −0.0.
+    */
+  private def clipValue(v: Double, lo: Double, hi: Double): Double = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val g = if (compareDoubles(lo, v) > 0) lo else v
+    if (compareDoubles(hi, g) < 0) hi else g
+  }
 
   /** [[fitClip]] on a quantized value GRID — the cheap fit path for
     * continuous columns at scale. Values quantize to an integer grid
@@ -183,18 +236,15 @@ object Preprocess {
   }
 
   def fitEncoder(train: DataFrame, keyCol: String, idCol: String = "champion_id"): EncoderModel = {
-    // dense ids in sorted key order WITHOUT a no-partition window (which
-    // funnels the whole dim through one reducer): a range-partitioned sort
-    // + zipWithIndex stays distributed at any key cardinality and assigns
-    // the identical ids (zipWithIndex preserves the global sort order)
-    val spark = train.sparkSession
-    val sorted = train.select(col(keyCol)).distinct().orderBy(col(keyCol))
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+
-        org.apache.spark.sql.types.StructField(idCol, org.apache.spark.sql.types.LongType, nullable = false))
-    val dim = spark.createDataFrame(
-      sorted.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }, schema)
-    EncoderModel(dim, keyCol, idCol)
+    // dense ids in sorted key order. [[EncoderModel.apply]] broadcasts the
+    // dimension, so it has to fit on the driver anyway: the distinct keys
+    // are coalesced into one partition and sorted there in Spark's ordering
+    // (nulls first, strings by UTF-8 bytes), and the driver numbers them.
+    // No range sort, no `zipWithIndex` job; the dimension is a local table.
+    val keys = train.select(col(keyCol)).distinct().coalesce(1).sortWithinPartitions(col(keyCol))
+    val rows = keys.collect().toSeq.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }
+    val schema = keys.schema.add(StructField(idCol, LongType, nullable = false))
+    EncoderModel(train.sparkSession.createDataFrame(rows.asJava, schema), keyCol, idCol)
   }
 
   // ---------------------------------------------------------------- P9 ----

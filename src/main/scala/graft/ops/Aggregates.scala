@@ -46,20 +46,45 @@ object Aggregates {
     * driver); a sort is the shape that scales — at 100 TB this is the
     * only viable exact path.
     *
-    * ONE scan and ONE shuffle for any number of columns, with parallelism
-    * independent of the column count. Columns are melted to (name, value)
-    * rows (`stack`) and RANGE-partitioned on (name, value) — each column's
-    * sort spreads over many partitions instead of one reducer per column
-    * (a per-name window would cap parallelism at |cols|, which dies at
-    * scale when fitting 2-3 columns over billions of rows). Two cheap
-    * passes over the sorted, locally-checkpointed pairs: (1) per-partition
-    * per-name counts (≤ P·|cols| numbers to the driver) give every
-    * partition its global starting offset per name; (2) each partition
-    * emits only the rows whose global per-name index is a percentile
-    * boundary.
+    * The sort and both lookups live in [[sortedOrderStats]], which returns
+    * the two order statistics behind each (column, p); this function only
+    * interpolates between them ([[OrderStat.interpolated]]). A caller that
+    * needs the percentiles of a monotone transform of a column (a clip)
+    * maps the two values first and interpolates after, from the same sort.
     */
   def sortedPercentilesMulti(df: DataFrame, cols: Seq[String],
       ps: Seq[Double]): Map[String, Seq[Double]] = {
+    val stats = sortedOrderStats(df, cols, ps)
+    cols.map(c => c -> stats(c).map(_.interpolated)).toMap
+  }
+
+  /** The order statistics behind percentile `p` of a column with `n`
+    * values other than null and NaN: `q = p·(n−1)`, its ranks `lo = ⌊q⌋`
+    * and `hi = ⌈q⌉` (0-based, in Spark's double ordering, where
+    * −0.0 = 0.0), and the values at those ranks.
+    */
+  private[graft] final case class OrderStat(q: Double, lo: Long, hi: Long, vLo: Double, vHi: Double) {
+    /** Linear interpolation between the two ranks (`quantile_cont`). */
+    def interpolated: Double = if (lo == hi) vLo else vLo + (q - lo) * (vHi - vLo)
+  }
+
+  /** The order-statistics core of [[sortedPercentilesMulti]]: for each
+    * column, one [[OrderStat]] per entry of `ps`, in `ps` order.
+    *
+    * ONE scan and ONE shuffle for any number of columns, with parallelism
+    * independent of the column count. Columns are melted to (name, value)
+    * rows (`stack`; `na.drop` skips nulls and NaNs) and RANGE-partitioned
+    * on (name, value) — each column's sort spreads over many partitions
+    * instead of one reducer per column (a per-name window would cap
+    * parallelism at |cols|, which dies at scale when fitting 2-3 columns
+    * over billions of rows). Two cheap passes over the sorted,
+    * locally-checkpointed pairs: (1) per-partition per-name counts
+    * (≤ P·|cols| numbers to the driver) give every partition its global
+    * starting offset per name; (2) each partition emits only the rows whose
+    * global per-name index is a percentile boundary.
+    */
+  private[graft] def sortedOrderStats(df: DataFrame, cols: Seq[String],
+      ps: Seq[Double]): Map[String, Seq[OrderStat]] = {
     val spark = df.sparkSession
     val stackExpr = cols.map(c => s"'$c', cast($c as double)").mkString(", ")
     val melted = df.selectExpr(s"stack(${cols.size}, $stackExpr) as (name, value)")
@@ -119,8 +144,7 @@ object Aggregates {
         c -> ps.map { p =>
           val q = p * (n - 1)
           val lo = math.floor(q).toLong; val hi = math.ceil(q).toLong
-          val vLo = vals((c, lo)); val vHi = vals((c, hi))
-          if (lo == hi) vLo else vLo + (q - lo) * (vHi - vLo)
+          OrderStat(q, lo, hi, vals((c, lo)), vals((c, hi)))
         }
       }.toMap
     } finally { bc.destroy(); () }

@@ -38,6 +38,14 @@ class PipelineSpec extends SparkSpec {
     assert(seen.value === n)
   }
 
+  test("E3: fit runs 9 jobs: one range sort for clip and scaler, no range sort for the encoder") {
+    val (train, _) = Preprocess.splitByGroup(Labeling.label(PlayerFeatures.extract(matches)), "match_id")
+    // fitEncoder runs 3 of them, the one order-statistics sort the rest;
+    // two range sorts, an eager checkpoint and zipWithIndex took 15
+    val jobs = jobsRunBy(Pipeline.fit(train))
+    assert(jobs <= 9, s"$jobs jobs")
+  }
+
   test("labeling check (test_labeling shapes): win-team mean rank beats lose-team") {
     val labeled = Labeling.label(PlayerFeatures.extract(matches))
     val byWin = labeled.groupBy("win").agg(avg("rank_in_match").as("mean_rank"))

@@ -1,7 +1,11 @@
 package graft.aram
 
+import java.lang.Double.doubleToRawLongBits
+
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 class PreprocessSpec extends SparkSpec {
   import spark.implicits._
@@ -41,6 +45,57 @@ class PreprocessSpec extends SparkSpec {
     val reclipped = m2(features)
     val mx2 = reclipped.agg(max("kda")).head().getDouble(0)
     assert(mx2 <= m2.bounds("kda")._2 + 1e-12)
+  }
+
+  test("P7 clip keeps a null and a NaN as they are, as pandas clip keeps NaN") {
+    val df = Seq(Some(1.0), None, Some(5.0), Some(-3.0), Some(Double.NaN)).toDF("x")
+    val out = Preprocess.ClipModel(Map("x" -> (0.0, 2.0)))(df).collect()
+      .map(r => if (r.isNullAt(0)) None else Some(doubleToRawLongBits(r.getDouble(0))))
+    assert(out.toSeq === Seq(Some(1.0), None, Some(2.0), Some(0.0), Some(Double.NaN))
+      .map(_.map(doubleToRawLongBits)))
+  }
+
+  private def rawBits(m: Map[String, (Double, Double)]): Map[String, (Long, Long)] =
+    m.map { case (c, (a, b)) => c -> (doubleToRawLongBits(a), doubleToRawLongBits(b)) }
+
+  /** The fused fit against `fitClip` then `fitRobustScaler` over the
+    * clipped table, bit for bit. */
+  private def assertFusedFitExact(df: DataFrame, clipCols: Seq[String],
+      scaleCols: Seq[String]): (Preprocess.ClipModel, Preprocess.RobustScalerModel) = {
+    val clip = Preprocess.fitClip(df, clipCols)
+    val scaler = Preprocess.fitRobustScaler(clip(df), scaleCols)
+    val (fusedClip, fusedScaler) = Preprocess.fitClipAndScaler(df, clipCols, scaleCols)
+    assert(rawBits(fusedClip.bounds) === rawBits(clip.bounds))
+    assert(rawBits(fusedScaler.stats) === rawBits(scaler.stats))
+    (fusedClip, fusedScaler)
+  }
+
+  test("P7+P9 fused fit ≡ clip fit then scaler fit over the clipped table, on match fixtures") {
+    val encoded = Preprocess.fitEncoder(features, "champion")(features)
+    assertFusedFitExact(encoded, Pipeline.clipCols, Preprocess.modelFeatureCols)
+  }
+
+  test("P7+P9 fused fit ≡ two fits at ties, outliers, null, NaN and −0.0 beside a 0.0 bound") {
+    // 151 rows in 3 partitions, so q = p·150: the 1%/99% bounds
+    // interpolate ranks 1-2 and 148-149, the median is rank 75 exactly
+    val rows = (0 to 150).map { i =>
+      // a: ties across both bound ranks, one outlier beyond each bound
+      val a = if (i == 0) -100.0 else if (i <= 3) -5.0 else if (i == 150) 900.0
+        else if (i >= 147) 50.0 else (i % 9).toDouble
+      // b: a 0.0 lower bound; the one value below it comes first, so its
+      // clipped copy keeps rank 0 in both sorts, and the −0.0 at rank 75
+      // is the median (greatest keeps the −0.0; math.max would not)
+      val b = if (i == 0) -3.0 else if (i == 75) -0.0 else if (i <= 80) 0.0 else i.toDouble
+      // c: a null and a NaN, which the clip keeps and both fits skip
+      val c = if (i == 10) null else if (i == 20) Double.NaN else i * 1.5
+      Row(a, b, c, (i % 13).toDouble)
+    }
+    val schema = StructType(Seq("a", "b", "c", "d").map(StructField(_, DoubleType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val (clip, scaler) = assertFusedFitExact(df, Seq("a", "b", "c"), Seq("a", "b", "c", "d"))
+    assert(clip.bounds("a") === ((-5.0, 50.0)))
+    assert(doubleToRawLongBits(clip.bounds("b")._1) === doubleToRawLongBits(0.0))
+    assert(doubleToRawLongBits(scaler.stats("b")._1) === doubleToRawLongBits(-0.0))
   }
 
   test("grid fit ≡ exact fit when values already sit on the grid") {
@@ -93,6 +148,23 @@ class PreprocessSpec extends SparkSpec {
     assert(ahri.map(_.getLong(0)).toSeq === Seq(-1L))
     val ids = model.dim.select("champion_id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq === ids.indices.map(_.toLong)) // dense 0..n-1
+  }
+
+  test("P8 encoder ids equal a range sort numbered by zipWithIndex: nulls first, UTF-8 byte order") {
+    // U+FF5E sorts before U+1F600 in UTF-8 bytes but after it in UTF-16
+    // code units (a surrogate pair), so a driver-side String sort would
+    // number them the other way round
+    val keys = Seq(Some("b"), None, Some("\u00e9"), Some("z"), Some("\uD83D\uDE00"),
+      Some("\uFF5E"), Some("a"), Some("\u00e9"), None, Some("\uD835\uDD38"), Some("\u03a9"), Some("b"))
+    val train = spark.sparkContext.parallelize(keys, 3).toDF("k")
+    val model = Preprocess.fitEncoder(train, "k", "id")
+    val sorted = train.select(col("k")).distinct().orderBy(col("k"))
+    val expected = sorted.rdd.zipWithIndex().map { case (r, i) => (Option(r.getString(0)), i) }
+      .collect().toSeq
+    val got = model.dim.collect().map(r => (Option(r.getString(0)), r.getLong(1))).toSeq
+    assert(got.sortBy(_._2) === expected)
+    assert(expected.size === 9 && expected.head === ((None, 0L)))
+    assert(model.dim.schema("id").dataType === LongType && !model.dim.schema("id").nullable)
   }
 
   test("P9 robust scaler: median → 0, IQR → 1 on the train set") {

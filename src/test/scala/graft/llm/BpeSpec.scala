@@ -106,25 +106,13 @@ class BpeSpec extends SparkSpec {
       }
     }
     val docs = words.grouped(200).map(_.mkString(" ")).toSeq.toDF("text")
-    def countJobs(body: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { body; Thread.sleep(500) } // let queued listener events drain
-      finally spark.sparkContext.removeSparkListener(listener)
-      counter.get()
-    }
     var sequentialMerges: Seq[(Long, String, String, Long)] = null
     var batchedMerges: Seq[(Long, String, String, Long)] = null
-    val sequential = countJobs {
+    val sequential = jobsRunBy {
       sequentialMerges = Bpe.train(spark, docs, "text", numMerges = 16, minCount = 2, maxBatch = 1)
         .as[(Long, String, String, Long)].collect().toSeq
     }
-    val batched = countJobs {
+    val batched = jobsRunBy {
       batchedMerges = Bpe.train(spark, docs, "text", numMerges = 16, minCount = 2, maxBatch = 16)
         .as[(Long, String, String, Long)].collect().toSeq
     }

@@ -1,9 +1,7 @@
 package graft.ops
 
 import java.nio.file.Paths
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
@@ -122,37 +120,10 @@ class MaterializeSpec extends graft.SparkSpec {
   }
 
   test("label propagation runs one job per round on a tiny graph") {
-    val sc = spark.sparkContext
-    val tag = "materialize.spec.jobs"
     val edges = spark.range(0, 40, 1, 1)
       .select(col("id").as("src"), ((col("id") * 7 + 3) % 40).as("dst"))
-    def jobs(rounds: Int): Int = {
-      val n = new AtomicInteger(0)
-      val marker = new AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).map(_.getProperty(tag)) match {
-            case Some("on") => n.incrementAndGet()
-            case Some("marker") => marker.incrementAndGet()
-            case _ =>
-          }
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setLocalProperty(tag, "on")
-        GraphRank.labelPropagationPinned(edges, rounds).collect()
-        // the listener bus delivers in order: once the marker job is seen,
-        // every job before it has been counted
-        sc.setLocalProperty(tag, "marker")
-        spark.range(1).collect()
-        val deadline = System.nanoTime() + 10000000000L
-        while (marker.get() == 0 && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(marker.get() == 1)
-      } finally {
-        sc.setLocalProperty(tag, null)
-        sc.removeSparkListener(listener)
-      }
-      n.get()
+    def jobs(rounds: Int): Int = jobsRunBy {
+      GraphRank.labelPropagationPinned(edges, rounds).collect()
     }
     jobs(1) // warm-up
     val perRound = jobs(3) - jobs(2)

@@ -35,23 +35,10 @@ class PartitioningSpec extends SparkSpec {
   }
 
   test("spread passes a plan holding a subquery through untouched, running no job") {
-    val sc = spark.sparkContext
-    val tag = "partitioning.spec.spread"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(tag) == "on") jobs.incrementAndGet()
-    }
     val in = spark.range(0, 1000, 1, 1).toDF().where("id IN (SELECT id * 7 FROM range(100))")
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, "on")
-    val out = try Partitioning.spread(in) finally {
-      sc.setLocalProperty(tag, null)
-      Thread.sleep(500) // let queued listener events drain
-      sc.removeSparkListener(listener)
-    }
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(jobsRunBy { out = Partitioning.spread(in) } === 0)
     assert(out eq in)
-    assert(jobs.get === 0)
   }
 
   test("bucketed tables join without an exchange on the bucket key") {
